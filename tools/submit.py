@@ -7,9 +7,7 @@ Packages the engine and runs the full build + bench on a cluster:
         --sf-dir /data/sf1 --out /data/gol_out [--density 75000]
 
 On a real cluster the same partitioning applies: the pyramid/survivor
-frames broadcast; only member-resolution joins shuffle.  Run at N and 4N
-executors on the same input to reproduce the scaling-efficiency evidence
-(see bench.py --scaling for the local-mode equivalent).
+frames broadcast; only member-resolution joins shuffle.
 """
 
 from __future__ import annotations
