@@ -107,15 +107,8 @@ def _materialize(spark: SparkSession, sf_dir: str) -> Path:
 
         shutil.rmtree(tmp)
 
-    import time
-
-    prof = os.environ.get("SPARK_GRAFT_GATE_PROFILE")
-
     def w(name: str, df: DataFrame) -> DataFrame:
-        t0 = time.time()
         df.write.mode("overwrite").parquet(str(tmp / name))
-        if prof:
-            print(f"[gate] {name} {time.time() - t0:.1f}s", flush=True)
         return spark.read.parquet(str(tmp / name))
 
     settings = BuildSettings.for_fixture(DENSITY)

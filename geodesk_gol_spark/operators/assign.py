@@ -11,8 +11,8 @@ Reference pipeline being re-expressed (all shapes per SURVEY.md §2.3):
 - J4 ghost fan-out: node-member tiles that are not home tiles
   (Sorter.cpp:330-447)
 - J5 relation→members join (Sorter.cpp:457-563)
-- J6 super-relation leveling: bounded bottom-up iteration; unresolved
-  cycles are cut and counted (SuperRelationResolver.cpp:15-235)
+- J6 super-relation leveling: one driver-side ready-set pass; cycles
+  are cut by score and flagged (SuperRelationResolver.cpp:15-235)
 
 Key scale decision: instead of exploding every (member × zoom) pair, each
 feature carries a *cell extent* (min/max zoom-12 cell coords).  min/max
@@ -24,16 +24,14 @@ kind and compose upward through relation levels.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LEAF_ZOOM, ZOOM_LEVELS
 from ..plans.pyramid import TileCatalog, _LADDER
 from ..sources.parser import TYPE_NODE, TYPE_RELATION, TYPE_WAY
-
-MAX_RELATION_LEVELS = 8  # reference caps super-relation nesting similarly
-                         # (src/build/sort/SuperRelationResolver.cpp:28)
-
 
 # ---------------------------------------------------------------------------
 # extents
@@ -104,55 +102,47 @@ def way_extents(
 
 _EXT_COLS = ["minc", "minr", "maxc", "maxr", "minx", "miny", "maxx", "maxy"]
 
+# hard cap on the rel→rel edges the super-relation resolver pulls
+# driver-side: a pathological corpus raises instead of OOMing the driver
+J6_RESIDUE_CAP = 5_000_000
+
 
 def relation_extents(
     relations: DataFrame,
     points: DataFrame,
     wext: DataFrame,
     stats: dict | None = None,
-    ready=None,
 ):
-    """J5/J6: resolve member extents bottom-up by level.
+    """J5/J6: resolve relation member extents, super-relations last.
 
     Scale shape (mirrors the reference's split): member resolution for
     *simple* relations (no relation members) is one distributed
     join + aggregate — this is the heavy part (billions of members).
-    Super-relations resolve in <= MAX_RELATION_LEVELS distributed level
-    passes (each a join + aggregate over the rel→rel edge frame, which
-    the reference handles with a dedicated resolver,
-    src/build/sort/SuperRelationResolver.cpp:15-149); nothing
-    corpus-sized ever hits the driver — only true cycle residue is
-    collected, resolved in id order, and unioned back.
+    Super-relations resolve the way the reference resolves them: in one
+    single-node pass over the rel→rel graph, a topological ready-set
+    plus a cycle-break score (src/build/sort/SuperRelationResolver.cpp:
+    15-235).  The pending supers — one row each, carrying their tags,
+    own node/way extent and the extents of their rel-members — are
+    collected to the driver in ONE frame, resolved, and unioned back.
+    Super-relations are rare by the reference's own design (25 nations
+    and 5 regions in every fixture), so this residue stays small; its
+    size is metered and capped (below).
 
-    Cycles are broken deterministically in ascending-id order (the
-    reference scores candidates and tags losers geodesk:removed_refcycles,
-    SuperRelationResolver.cpp:152-235; our spec: id order) and flagged
+    Cycles are broken with the reference's score (see the comment at
+    the cycle break) and ascending-id tiebreaks; edge losers are flagged
     ``refcycle``.  Self-references are dropped up front
     (Sorter.cpp:490-499).
 
     Returns (rel_ext, unresolved): ``rel_ext`` = (typed_id, id, level,
     n_members, n_resolved, refcycle, *extent); ``unresolved`` = relations
-    with no resolvable member at all.
+    with no resolvable member at all.  Both are eagerly checkpointed, so
+    callers may read them from concurrent jobs.
 
     ``stats`` (optional dict) is filled with the driver-residue meters
     ``j6_pending_supers`` / ``j6_residue_edges`` — the exact row volume
-    the super-relation resolver pulls driver-side.  The residue is
-    bounded by construction (only unresolved-after-level-loop supers,
-    small on real OSM), but a pathological corpus could balloon it, so
-    the edge count is ALSO hard-capped: > SPARK_GRAFT_J6_RESIDUE_CAP
-    (default 5M rows) raises instead of silently OOMing the driver.
-
-    ``ready`` (optional ``threading.Event``) gates the first action that
-    reaches through ``wext``/``points``: everything up to and including
-    the edge-meter control job depends only on ``relations`` (rm/edges),
-    so a caller still materializing the heavy way-extent parents can run
-    this function concurrently and set the event when they are hot —
-    the control job's latency then overlaps the parent materialization
-    instead of following it (guide §2.6).
+    the super-relation resolver pulls driver-side.  More than
+    ``J6_RESIDUE_CAP`` edges raises before anything is collected.
     """
-    if stats is not None:
-        stats.setdefault("j6_pending_supers", 0)
-        stats.setdefault("j6_residue_edges", 0)
     spark = relations.sparkSession
     rm = (
         relations.select(
@@ -182,71 +172,50 @@ def relation_extents(
         F.col("y").alias("maxy"),
     ).unionByName(wext.select("typed_id", *_EXT_COLS))
 
-    agg_exprs = [
-        F.count("minc").alias("n_resolved"),
-        F.min("minc").alias("minc"),
-        F.min("minr").alias("minr"),
-        F.max("maxc").alias("maxc"),
-        F.max("maxr").alias("maxr"),
-        F.min("minx").alias("minx"),
-        F.min("miny").alias("miny"),
-        F.max("maxx").alias("maxx"),
-        F.max("maxy").alias("maxy"),
-    ]
-
-    # one distributed pass: every relation × its node/way members
-    nonrel = rm.filter(F.col("m_t") != TYPE_RELATION)
+    # one distributed pass: every relation × its node/way members.
+    # n_nonrel (node/way member rows, self-refs already dropped) feeds
+    # the cycle-break score
     nonrel_agg = (
-        nonrel.join(base_ext.withColumnRenamed("typed_id", "m_typed"), "m_typed", "left")
+        rm.filter(F.col("m_t") != TYPE_RELATION)
+        .join(base_ext.withColumnRenamed("typed_id", "m_typed"), "m_typed", "left")
         .groupBy("rel_id", "n_members")
-        .agg(*agg_exprs)
+        .agg(
+            F.count("minc").alias("n_resolved"),
+            F.min("minc").alias("minc"),
+            F.min("minr").alias("minr"),
+            F.max("maxc").alias("maxc"),
+            F.max("maxr").alias("maxr"),
+            F.min("minx").alias("minx"),
+            F.min("miny").alias("miny"),
+            F.max("maxx").alias("maxx"),
+            F.max("maxy").alias("maxy"),
+            F.count(F.lit(1)).alias("n_nonrel"),
+        )
         .persist()
     )
 
-    # J6: super-relation resolution as <= MAX_RELATION_LEVELS distributed
-    # level passes — each pass is one join + aggregate over the edge frame,
-    # so the (potentially corpus-sized) rel→rel membership never hits the
-    # driver.  Only true cycle residue (rare by the reference's own design,
-    # SuperRelationResolver.cpp:15-149) is collected.
     edges = rm.filter(F.col("m_t") == TYPE_RELATION).select(
         "rel_id", "n_members", F.shiftright("m_typed", 2).alias("member_rel")
     ).persist()
-    # control frames are tiny (one row per super-relation id); coalesce
-    # so the per-pass actions schedule a handful of tasks, not one per
-    # shuffle partition
+    # one row per super-relation id; coalesce so the anti-join below
+    # schedules a handful of tasks, not one per shuffle partition
     supers = edges.select("rel_id").distinct().coalesce(8).persist()
 
-    import os as _os
-    import time as _time
-
-    _timing = bool(_os.environ.get("SPARK_GRAFT_TIMING"))
-    _t0 = _time.time()
-
-    def _tick(label: str) -> None:
-        nonlocal _t0
-        if _timing:
-            now = _time.time()
-            print(f"[relext] {label}: {now - _t0:.1f}s", flush=True)
-            _t0 = now
-
-    # ONE control job yields both meters this function needs up front:
-    # the pending-super count (drives the driver-vs-distributed choice)
-    # and the total rel→rel edge count (the residue meter when the
-    # driver path is taken, where pending == supers and the old
-    # edges⋈pending recount equaled this total) — was two sequential
-    # jobs of fixed scheduler latency (guide §2.6).
-    _row = edges.agg(
+    # ONE control job meters the residue (every super is pending, so the
+    # edge total is exactly what the driver will pull) before any collect
+    row = edges.agg(
         F.count(F.lit(1)).alias("ne"),
         F.countDistinct("rel_id").alias("ns"),
     ).collect()[0]
-    n_edges_total, n_pending = int(_row["ne"]), int(_row["ns"])
-    _tick("supers.count")
-    if ready is not None:
-        # every action from here on can reach the wext/points parents —
-        # wait until the caller reports them materialized (racing their
-        # first computation would duplicate the heavy member join)
-        ready.wait()
-        _tick("ready-wait")
+    n_edges, n_supers = int(row["ne"]), int(row["ns"])
+    if stats is not None:
+        stats["j6_pending_supers"] = n_supers
+        stats["j6_residue_edges"] = n_edges
+    if n_edges > J6_RESIDUE_CAP:
+        raise RuntimeError(
+            f"J6 driver residue too large: {n_edges} super-relation edges "
+            f"> cap {J6_RESIDUE_CAP} (J6_RESIDUE_CAP)"
+        )
 
     out_cols = ["rel_id", "n_members", "n_resolved", *_EXT_COLS,
                 "level", "refcycle"]
@@ -270,344 +239,156 @@ def relation_extents(
         .join(rm.select("rel_id").distinct(), "rel_id", "left_anti")
     )
 
-    pending = supers
-    # Super-relations are rare by the reference's own design (the
-    # reference resolves them in a dedicated single-node pass,
-    # SuperRelationResolver.cpp:15-149).  Below this threshold the
-    # driver-side topological resolver (the cycle-break path, which
-    # handles the acyclic case as plain ready-set processing) beats the
-    # distributed level loop: each level pass costs a full job of fixed
-    # scheduler latency to move a handful of rows.  Above it — a corpus
-    # whose super-hierarchy IS big — the distributed passes keep the
-    # rel→rel frame off the driver.
-    j6_driver_max = int(_os.environ.get("SPARK_GRAFT_J6_DRIVER_MAX", "65536"))
-    _parents_hot = False  # True once a pre-collect materialized the chain
-    _tick("setup")
-
-    if n_pending:
-        m_ext_sel = [F.col(c).alias(f"m_{c}") for c in _EXT_COLS]
-        own = nonrel_agg.select(
-            "rel_id",
-            F.col("n_resolved").alias("o_res"),
-            *[F.col(c).alias(f"o_{c}") for c in _EXT_COLS],
-        )
-        # rel-members that point at relations with no member rows at all
-        # (missing or empty targets) count as settled from the start —
-        # the reference resolves with whatever exists.  n_live is the
-        # per-super count of members that WILL eventually settle.
-        real_rels = rm.select("rel_id").distinct()
-        n_live = (
+    if n_supers:
+        # the whole residue in ONE collect: per pending super its tags,
+        # own node/way aggregate and every rel-member edge with that
+        # member's extent (null unless the member is a resolved simple
+        # relation — pending supers resolve below, missing or empty
+        # targets never do)
+        residue = (
             edges.join(
-                real_rels.withColumnRenamed("rel_id", "member_rel"),
+                resolved_all.select(
+                    F.col("rel_id").alias("member_rel"), "level", *_EXT_COLS
+                ),
                 "member_rel",
+                "left",
             )
-            .groupBy("rel_id")
-            .agg(F.count(F.lit(1)).alias("n_live_m"))
-            .coalesce(8)
-            .persist()
+            .groupBy("rel_id", "n_members")
+            .agg(F.collect_list(
+                F.struct("member_rel", "level", *_EXT_COLS)
+            ).alias("members"))
+            .join(relations.select(F.col("id").alias("rel_id"), "tags"),
+                  "rel_id", "left")
+            .join(nonrel_agg.drop("n_members"), "rel_id", "left")
+            .collect()
         )
-        ext_types = {f.name: f.dataType for f in resolved_all.schema.fields}
-        # settled = resolved-with-extents ∪ resolved-to-nothing; ONE
-        # left join of a pending super's edges against it both answers
-        # "are all my rel-members settled?" (n_done vs n_live) and
-        # gathers member extents — one real job per level (the previous
-        # blocked/ready anti-join chain cost ~3 jobs/level of fixed
-        # driver latency, the dominant serial term in the 4N profile)
-        empties = unresolved  # rel_ids that resolved to nothing so far
-        loop_ran = False
-        for _ in range(MAX_RELATION_LEVELS):
-            if n_pending == 0 or n_pending <= j6_driver_max:
-                break
-            loop_ran = True
-            _parents_hot = True  # the level pass reads through the chain
-            done = resolved_all.select(
-                F.col("rel_id").alias("member_rel"),
-                F.lit(1).alias("m_done"),
-                F.col("level").alias("m_level"),
-                *m_ext_sel,
-            ).unionByName(
-                empties.select(
-                    F.col("rel_id").alias("member_rel"),
-                    F.lit(1).alias("m_done"),
-                    F.lit(None).cast(ext_types["level"]).alias("m_level"),
-                    *[F.lit(None).cast(ext_types[c]).alias(f"m_{c}")
-                      for c in _EXT_COLS],
-                )
-            )
-            new = (
-                edges.join(pending, "rel_id")
-                .join(done, "member_rel", "left")
-                .groupBy("rel_id", "n_members")
-                .agg(
-                    F.count("m_done").alias("n_done"),
-                    F.count("m_minc").alias("m_res"),
-                    F.max(
-                        F.when(F.col("m_minc").isNotNull(), F.col("m_level"))
-                    ).alias("m_lv"),
-                    F.min("m_minc").alias("mm_minc"),
-                    F.min("m_minr").alias("mm_minr"),
-                    F.max("m_maxc").alias("mm_maxc"),
-                    F.max("m_maxr").alias("mm_maxr"),
-                    F.min("m_minx").alias("mm_minx"),
-                    F.min("m_miny").alias("mm_miny"),
-                    F.max("m_maxx").alias("mm_maxx"),
-                    F.max("m_maxy").alias("mm_maxy"),
-                )
-                .join(n_live, "rel_id", "left")
-                .filter(
-                    F.col("n_done") >= F.coalesce(F.col("n_live_m"), F.lit(0))
-                )
-                .join(own, "rel_id", "left")
-                .select(
-                    "rel_id",
-                    "n_members",
-                    (F.coalesce("o_res", F.lit(0)) + F.col("m_res"))
-                    .alias("n_resolved"),
-                    F.least("o_minc", "mm_minc").alias("minc"),
-                    F.least("o_minr", "mm_minr").alias("minr"),
-                    F.greatest("o_maxc", "mm_maxc").alias("maxc"),
-                    F.greatest("o_maxr", "mm_maxr").alias("maxr"),
-                    F.least("o_minx", "mm_minx").alias("minx"),
-                    F.least("o_miny", "mm_miny").alias("miny"),
-                    F.greatest("o_maxx", "mm_maxx").alias("maxx"),
-                    F.greatest("o_maxy", "mm_maxy").alias("maxy"),
-                    (F.coalesce("m_lv", F.lit(0)) + 1).alias("level"),
-                    F.lit(False).alias("refcycle"),
-                )
-                .localCheckpoint()  # truncates lineage; data stays on executors
-            )
-            n_new = new.count()  # metadata-cheap: new is checkpointed
-            if n_new == 0:
-                break  # cycle residue — handled below
-            # no per-level persist: the union concatenates frames that
-            # are already checkpointed (new) or persisted (simple_part),
-            # so caching every union-prefix would only pin one extra
-            # copy of the same rows per level
-            resolved_all = resolved_all.unionByName(
-                new.filter(F.col("minc").isNotNull()).select(*out_cols)
-            )
-            # supers whose transitive member set resolved to nothing
-            new_empty = new.filter(F.col("minc").isNull()).select("rel_id")
-            unresolved = unresolved.unionByName(new_empty)
-            empties = empties.unionByName(new_empty)
-            # tiny control frame over checkpointed parents: depth stays 1
-            pending = pending.join(
-                new.select("rel_id"), "rel_id", "left_anti"
-            ).coalesce(8)
-            n_pending -= n_new
-
-        if n_pending:
-            # residue meter + hard cap BEFORE any driver collect bounds
-            # what the five toPandas() calls below will pull.  On the
-            # common driver path (level loop never ran) pending IS
-            # supers, so the edge total from the fused control job above
-            # already answers it — no extra count job.
-            if loop_ran:
-                n_res_edges = int(edges.join(pending, "rel_id").count())
-            else:
-                n_res_edges = n_edges_total
-            if stats is not None:
-                stats["j6_pending_supers"] = int(n_pending)
-                stats["j6_residue_edges"] = n_res_edges
-            residue_cap = int(
-                _os.environ.get("SPARK_GRAFT_J6_RESIDUE_CAP", "5000000")
-            )
-            if n_res_edges > residue_cap:
-                raise RuntimeError(
-                    f"J6 driver residue too large: {n_res_edges} pending "
-                    f"super-relation edges > cap {residue_cap} "
-                    "(SPARK_GRAFT_J6_RESIDUE_CAP); raise "
-                    "SPARK_GRAFT_J6_DRIVER_MAX to keep more levels "
-                    "distributed instead"
-                )
-            # cycle break: residue only — collect, score each cyclic
-            # relation with the reference's heuristic
-            # (SuperRelationResolver.cpp:152-235: +1e9 if it has ONLY
-            # relation members [top of hierarchy], else +1 per node/way
-            # member; type=network +1e8, superroute/route_master +5e7,
-            # site +2e7; admin_level +(14-level)*1e6), then repeatedly
-            # remove ONE rel-member edge from the LOWEST-score relation
-            # until the remainder resolves.  Only edge-losers are flagged
-            # ``refcycle`` (the reference's removedRefcyleCount > 0).
-            # Deterministic tiebreaks (our spec): loser = smallest rel_id
-            # among lowest scores; the removed edge targets the loser's
-            # smallest-id still-cyclic member.
-            # the five residue collections are independent joins over
-            # already-persisted frames — run them as concurrent Spark
-            # jobs (latency = max, not sum; ~2.4 s serialized at sf0.1)
-            from concurrent.futures import ThreadPoolExecutor
-
-            # materialize the shared persisted parents ONCE before the
-            # concurrent collects: Spark's cache does not serialize
-            # concurrent first-computations, so five parallel jobs whose
-            # plans all reach through the unmaterialized nonrel_agg /
-            # resolved_all would each recompute the heavy member join
-            # (measured: 10.4 s racing vs ~4 s after this single pass
-            # at sf0.1).  resolved_all's chain covers nonrel_agg,
-            # simple_part and rm.
-            resolved_all.count()
-            _parents_hot = True
-            _tick("pre-collect")
-            with ThreadPoolExecutor(5) as pool:
-                f_tags = pool.submit(
-                    lambda: relations.join(
-                        pending.withColumnRenamed("rel_id", "id"), "id"
-                    ).select("id", "tags").toPandas())
-                f_edges = pool.submit(
-                    lambda: edges.join(pending, "rel_id").toPandas())
-                f_mem = pool.submit(
-                    lambda: resolved_all.join(
-                        edges.join(pending, "rel_id")
-                        .select(F.col("member_rel").alias("rel_id"))
-                        .distinct(),
-                        "rel_id",
-                    ).toPandas())
-                f_own = pool.submit(
-                    lambda: nonrel_agg.join(pending, "rel_id").toPandas())
-                # exact node/way member counts (self-refs already dropped
-                # from rm): n_members - len(by_super) would miscount
-                # dropped self-refs as node/way members and drift as
-                # edges are removed below
-                f_cnt = pool.submit(
-                    lambda: nonrel.groupBy("rel_id")
-                    .agg(F.count(F.lit(1)).alias("n_nonrel"))
-                    .join(pending, "rel_id").toPandas())
-            pend_tags = {
-                int(r.id): dict(r.tags or {})
-                for r in f_tags.result().itertuples()
+        pend_tags: dict[int, dict] = {}
+        nonrel_counts: dict[int, int] = {}
+        drv: dict[int, dict] = {}
+        by_super: dict[int, list[int]] = {}
+        mem_ext: dict[int, tuple] = {}
+        for r in residue:
+            s = int(r.rel_id)
+            pend_tags[s] = dict(r.tags or {})
+            nonrel_counts[s] = int(r.n_nonrel or 0)
+            drv[s] = {
+                "n_members": int(r.n_members),
+                "n_resolved": int(r.n_resolved or 0),
+                "ext": [r[c] for c in _EXT_COLS] if r.n_resolved else None,
             }
-            pend_edges = f_edges.result()
-            mem_pdf = f_mem.result()
-            own_pdf = f_own.result()
-            nonrel_counts = {
-                int(r.rel_id): int(r.n_nonrel)
-                for r in f_cnt.result().itertuples()
-            }
-            _tick("collects")
-            mem_ext = {
-                int(r.rel_id): (
-                    [r.minc, r.minr, r.maxc, r.maxr,
-                     r.minx, r.miny, r.maxx, r.maxy],
-                    int(r.level),
-                )
-                for r in mem_pdf.itertuples()
-            }
-            drv = {
-                int(r.rel_id): {
-                    "n_members": int(r.n_members),
-                    "n_resolved": int(r.n_resolved),
-                    "ext": None if r.n_resolved == 0 else
-                    [r.minc, r.minr, r.maxc, r.maxr,
-                     r.minx, r.miny, r.maxx, r.maxy],
-                }
-                for r in own_pdf.itertuples()
-            }
-            by_super: dict[int, list[int]] = {}
-            for r in pend_edges.itertuples():
-                by_super.setdefault(int(r.rel_id), []).append(int(r.member_rel))
-                drv.setdefault(int(r.rel_id), {
-                    "n_members": int(r.n_members), "n_resolved": 0, "ext": None,
-                })
+            by_super[s] = [int(m.member_rel) for m in r.members]
+            for m in r.members:
+                if m.level is not None:
+                    mem_ext[int(m.member_rel)] = (
+                        [m[c] for c in _EXT_COLS], int(m.level)
+                    )
 
-            def _merge(a, b):
-                if a is None:
-                    return list(b) if b else None
-                if b is None:
-                    return a
-                return [
-                    min(a[0], b[0]), min(a[1], b[1]),
-                    max(a[2], b[2]), max(a[3], b[3]),
-                    min(a[4], b[4]), min(a[5], b[5]),
-                    max(a[6], b[6]), max(a[7], b[7]),
-                ]
-
-            def _score(s: int) -> float:
-                tags = pend_tags.get(s, {})
-                nonrel = nonrel_counts.get(s, 0)
-                score = 1_000_000_000.0 if nonrel == 0 else float(nonrel)
-                t = tags.get("type")
-                if t == "network":
-                    score += 100_000_000
-                elif t in ("superroute", "route_master"):
-                    score += 50_000_000
-                elif t == "site":
-                    score += 20_000_000
-                try:
-                    score += (14 - float(tags.get("admin_level"))) * 1_000_000
-                except (TypeError, ValueError):
-                    pass
-                return score
-
-            cyc_resolved: dict[int, tuple] = {}
-            lost_edge: set[int] = set()
-            still = set(by_super)
-            # scores are a function of the INPUT member composition
-            # (reference scores each relation once); freeze them before
-            # edge removal mutates by_super
-            scores = {s: _score(s) for s in by_super}
-            while still:
-                ready = sorted(
-                    s for s in still
-                    if not any(m in still for m in by_super[s])
-                )
-                if not ready:
-                    loser = min(still, key=lambda s: (scores[s], s))
-                    victim = min(m for m in by_super[loser] if m in still)
-                    by_super[loser].remove(victim)
-                    lost_edge.add(loser)
-                    continue
-                for s in ready:
-                    ext = drv[s]["ext"]
-                    n_res = drv[s]["n_resolved"]
-                    lv = 0
-                    for m in by_super[s]:
-                        m_ext = None
-                        if m in cyc_resolved and cyc_resolved[m][0] is not None:
-                            m_ext = cyc_resolved[m][0]
-                            lv = max(lv, cyc_resolved[m][1])
-                        elif m in mem_ext:
-                            m_ext = mem_ext[m][0]
-                            lv = max(lv, mem_ext[m][1])
-                        if m_ext is not None:
-                            ext = _merge(ext, m_ext)
-                            n_res += 1
-                    cyc_resolved[s] = (ext, lv + 1, n_res)
-                    still.discard(s)
-            _tick("python-resolve")
-            rows = [
-                {
-                    "rel_id": s, "n_members": drv[s]["n_members"],
-                    "n_resolved": n_res,
-                    "minc": int(ext[0]), "minr": int(ext[1]),
-                    "maxc": int(ext[2]), "maxr": int(ext[3]),
-                    "minx": int(ext[4]), "miny": int(ext[5]),
-                    "maxx": int(ext[6]), "maxy": int(ext[7]),
-                    "level": int(lv), "refcycle": s in lost_edge,
-                }
-                for s, (ext, lv, n_res) in cyc_resolved.items()
-                if ext is not None
+        def _merge(a, b):
+            if a is None:
+                return list(b) if b else None
+            if b is None:
+                return a
+            return [
+                min(a[0], b[0]), min(a[1], b[1]),
+                max(a[2], b[2]), max(a[3], b[3]),
+                min(a[4], b[4]), min(a[5], b[5]),
+                max(a[6], b[6]), max(a[7], b[7]),
             ]
-            if rows:
-                resolved_all = resolved_all.unionByName(
-                    spark.createDataFrame(
-                        rows,
-                        schema="rel_id long, n_members int, n_resolved long, "
-                        "minc int, minr int, maxc int, maxr int, "
-                        "minx long, miny long, maxx long, maxy long, "
-                        "level int, refcycle boolean",
-                    ).select(*out_cols)
-                )
-            dead = [s for s, v in cyc_resolved.items() if v[0] is None]
-            if dead:
-                unresolved = unresolved.unionByName(
-                    spark.createDataFrame([(int(s),) for s in dead],
-                                          "rel_id long")
-                ).distinct()
 
-    _tick("residue-union")
-    rel_ext = resolved_all
+        # cycle break, with the reference's heuristic
+        # (SuperRelationResolver.cpp:152-235: +1e9 if it has ONLY
+        # relation members [top of hierarchy], else +1 per node/way
+        # member; type=network +1e8, superroute/route_master +5e7,
+        # site +2e7; admin_level +(14-level)*1e6), then repeatedly
+        # remove ONE rel-member edge from the LOWEST-score relation
+        # until the remainder resolves.  Only edge-losers are flagged
+        # ``refcycle`` (the reference's removedRefcyleCount > 0).
+        # Deterministic tiebreaks (our spec): loser = smallest rel_id
+        # among lowest scores; the removed edge targets the loser's
+        # smallest-id still-cyclic member.
+        def _score(s: int) -> float:
+            tags = pend_tags.get(s, {})
+            nonrel = nonrel_counts.get(s, 0)
+            score = 1_000_000_000.0 if nonrel == 0 else float(nonrel)
+            t = tags.get("type")
+            if t == "network":
+                score += 100_000_000
+            elif t in ("superroute", "route_master"):
+                score += 50_000_000
+            elif t == "site":
+                score += 20_000_000
+            try:
+                score += (14 - float(tags.get("admin_level"))) * 1_000_000
+            except (TypeError, ValueError):
+                pass
+            return score
 
-    rel_ext = rel_ext.select(
+        cyc_resolved: dict[int, tuple] = {}
+        lost_edge: set[int] = set()
+        still = set(by_super)
+        # scores are a function of the INPUT member composition
+        # (reference scores each relation once); freeze them before
+        # edge removal mutates by_super
+        scores = {s: _score(s) for s in by_super}
+        while still:
+            ready = sorted(
+                s for s in still
+                if not any(m in still for m in by_super[s])
+            )
+            if not ready:
+                loser = min(still, key=lambda s: (scores[s], s))
+                victim = min(m for m in by_super[loser] if m in still)
+                by_super[loser].remove(victim)
+                lost_edge.add(loser)
+                continue
+            for s in ready:
+                ext = drv[s]["ext"]
+                n_res = drv[s]["n_resolved"]
+                lv = 0
+                for m in by_super[s]:
+                    m_ext = None
+                    if m in cyc_resolved and cyc_resolved[m][0] is not None:
+                        m_ext = cyc_resolved[m][0]
+                        lv = max(lv, cyc_resolved[m][1])
+                    elif m in mem_ext:
+                        m_ext = mem_ext[m][0]
+                        lv = max(lv, mem_ext[m][1])
+                    if m_ext is not None:
+                        ext = _merge(ext, m_ext)
+                        n_res += 1
+                cyc_resolved[s] = (ext, lv + 1, n_res)
+                still.discard(s)
+        rows = [
+            {
+                "rel_id": s, "n_members": drv[s]["n_members"],
+                "n_resolved": n_res,
+                "minc": int(ext[0]), "minr": int(ext[1]),
+                "maxc": int(ext[2]), "maxr": int(ext[3]),
+                "minx": int(ext[4]), "miny": int(ext[5]),
+                "maxx": int(ext[6]), "maxy": int(ext[7]),
+                "level": int(lv), "refcycle": s in lost_edge,
+            }
+            for s, (ext, lv, n_res) in cyc_resolved.items()
+            if ext is not None
+        ]
+        if rows:
+            resolved_all = resolved_all.unionByName(
+                spark.createDataFrame(
+                    rows,
+                    schema="rel_id long, n_members int, n_resolved long, "
+                    "minc int, minr int, maxc int, maxr int, "
+                    "minx long, miny long, maxx long, maxy long, "
+                    "level int, refcycle boolean",
+                ).select(*out_cols)
+            )
+        dead = [s for s, v in cyc_resolved.items() if v[0] is None]
+        if dead:
+            unresolved = unresolved.unionByName(
+                spark.createDataFrame([(int(s),) for s in dead],
+                                      "rel_id long")
+            ).distinct()
+
+    rel_ext = resolved_all.select(
         (F.col("rel_id") * 4 + TYPE_RELATION).alias("typed_id"),
         F.col("rel_id").alias("id"),
         "level",
@@ -616,11 +397,10 @@ def relation_extents(
         "refcycle",
         *_EXT_COLS,
     )
-    # resolved_all is a union of per-level fragments whose logical plan
-    # reaches back through the whole member join — every downstream
-    # action would pay Catalyst re-planning that giant tree (~2 s of
-    # DRIVER time per action at sf0.1, even on a cache hit).  The LAZY
-    # localCheckpoint collapses the plan to an RDD scan on first action.
+    # resolved_all's logical plan reaches back through the whole member
+    # join — every downstream action would pay Catalyst re-planning that
+    # giant tree (~2 s of DRIVER time per action at sf0.1, even on a
+    # cache hit).  localCheckpoint collapses the plan to an RDD scan.
     # No REBALANCE hint: under AQE, localCheckpoint's toRdd materializes
     # every exchange in the plan at CALL time, so a rebalance turns the
     # checkpoint into an extra shuffle job (measured 5.5 s at sf0.1);
@@ -631,30 +411,14 @@ def relation_extents(
     # outputs into CONCURRENT jobs (bench/gate write feature_tiles and
     # extents in parallel) and a lazy checkpoint's first-action
     # materialization does not serialize concurrent computers — each
-    # racing job recomputes the full relation chain.  The eager pass
-    # runs over already-cached parents (~1 s at sf0.1).  Same treatment
-    # for unresolved (consumers like J7 exports re-planned its anti-join
-    # chain on every use).
-    # the two eager checkpoints are independent jobs over already-cached
-    # parents — run them concurrently (latency = max, not sum; each is
-    # mostly fixed job latency at any scale, guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    if not _parents_hot:
-        # no residue pre-collect ran this call: materialize the shared
-        # persisted chain ONCE before the concurrent checkpoints (the
-        # cache does not serialize racing first-computations — both
-        # jobs would recompute the heavy member join otherwise)
-        simple_part.count()
-        _tick("pre-ckpt")
-    with _TPE(2) as _pool:
-        f_rel = _pool.submit(lambda: rel_ext.localCheckpoint(eager=True))
-        f_unres = _pool.submit(
-            lambda: unresolved.localCheckpoint(eager=True))
-        out_rel = f_rel.result()
-        out_unres = f_unres.result()
-    _tick("ckpt-rel_ext+unresolved")
-    return out_rel, out_unres
+    # racing job would recompute the full relation chain.  rel_ext goes
+    # first: it materializes the persisted chain that unresolved then
+    # reads from cache (consumers like J7 exports re-planned
+    # unresolved's anti-join chain on every use).
+    return (
+        rel_ext.localCheckpoint(eager=True),
+        unresolved.localCheckpoint(eager=True),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -792,7 +556,7 @@ def assign_features(
       ``feature_tiles`` — union: (typed_id, tile_id, is_ghost, twin)
 
     Callers should ``persist()`` the input frames (or read them from a
-    checkpoint table): the relation-level loop and the multi-output shape
+    checkpoint table): the relation chain and the multi-output shape
     re-trigger upstream lineage otherwise.
     """
     from ..functions.mercator import with_projection
@@ -821,36 +585,24 @@ def assign_features(
     # pass over the member set that a 100 TB build feels.
     wext = way_extents(feats["ways"], assigned, member_tiles=True).persist()
 
-    # Concurrency shape (guide §2.6): the relation chain's FIRST control
-    # job (rm explode + edge meter) depends only on `relations`, so it
-    # launches immediately and overlaps the heavy wext materialization
-    # running on this thread; a threading.Event gates the chain's first
-    # wext-dependent action (the cache does not serialize racing first
-    # computations — each racer would redo the J1 lookup + J2 member
-    # join, so wext/assigned must be hot before the event is set).  The
-    # way-home staging count then overlaps the rest of the relation
-    # chain as before.  way_homes must be hot before callers checkpoint
-    # the outputs concurrently (it is shared by feature_tiles and
-    # way_ghosts).
-    import threading
-    from concurrent.futures import ThreadPoolExecutor
-
+    # Every frame the outputs share is materialized before return:
+    # callers write feature_tiles, points and extents as concurrent jobs,
+    # and the cache does not serialize racing first computations (each
+    # racer would redo the J1 lookup + J2 member join).  ONE job first
+    # materializes wext and, through it, assigned; a failure there
+    # surfaces before the relation chain starts.
+    wext.count()
+    # way_homes (shared by feature_tiles and way_ghosts) then counts
+    # beside the relation chain: both only read the now-cached wext and
+    # assigned, and the overlap hides the count's job latency (measured
+    # on 4 cores: 1-2 s of assign wall)
+    way_homes = home_tiles(wext, catalog).persist()
     j6_stats: dict = {}
-    parents_hot = threading.Event()
-    with ThreadPoolExecutor(2) as pool:
-        f_rel = pool.submit(
-            relation_extents, feats["relations"], points, wext, j6_stats,
-            parents_hot,
-        )
-        # ONE job materializes the two shared heavy parents (assigned
-        # feeds the join inside wext) BEFORE the chain reads them
-        try:
-            wext.count()
-            way_homes = home_tiles(wext, catalog).persist()
-        finally:
-            parents_hot.set()  # never leave the chain thread waiting
+    with ThreadPoolExecutor(1) as pool:
         f_wh = pool.submit(way_homes.count)
-        rel_ext, unresolved = f_rel.result()
+        rel_ext, unresolved = relation_extents(
+            feats["relations"], points, wext, j6_stats
+        )
         f_wh.result()
 
     # J4 ghosts: member-node tiles minus the home tiles — narrow explode
