@@ -1545,10 +1545,8 @@ def _q_s1_pbf_build_store(spark, sf):
     the capped node set is vacuous; relation assignment is gated
     full-corpus by j5/j6/s5)."""
     from geodesk_gol_spark.config import BuildSettings
-    from geodesk_gol_spark.functions.mercator import with_projection
-    from geodesk_gol_spark.operators.assign import assign_features
-    from geodesk_gol_spark.operators.compile_tiles import compile_feature_rows
-    from geodesk_gol_spark.plans.pyramid import build_tile_catalog
+    from geodesk_gol_spark.gate import derived_cache_dir
+    from geodesk_gol_spark.plans.pipeline import run_stages
     from geodesk_gol_spark.sources.pbf import read_pbf
 
     path = _pbf_fixture_path(spark, sf)
@@ -1565,20 +1563,23 @@ def _q_s1_pbf_build_store(spark, sf):
     ways = read_pbf(spark, path, "ways").select(
         "id", "node_ids", "tags", *lineage
     )
-    rels = spark.createDataFrame(
-        [],
-        "id long, members array<struct<t:tinyint,id:bigint,role:string>>, "
-        "tags map<string,string>, doc_id string, span_seq int",
+    # the parser's unified shape (sources/parser.py) with no relation
+    # rows, so the build graph takes the decoded PBF in place of its
+    # docs/features stages
+    unified = (
+        nodes.withColumn("kind", F.lit("node"))
+        .unionByName(ways.withColumn("kind", F.lit("way")),
+                     allowMissingColumns=True)
+        .withColumn("members", F.lit(None).cast(
+            "array<struct<t:tinyint,id:bigint,role:string>>"))
+        .withColumn("media_ref", F.lit(None).cast("string"))
+        .withColumn("offset", F.lit(None).cast("int"))
     )
-    feats = {"nodes": nodes, "ways": ways, "relations": rels}
-    catalog = build_tile_catalog(
-        with_projection(nodes), BuildSettings.for_fixture(DENSITY)
-    )
-    asn = assign_features(feats, catalog)
-    store = compile_feature_rows(
-        asn["feature_tiles"], asn["points"], asn["extents"],
-        nodes, ways, rels,
-    )
+    store = run_stages(
+        spark, sf, str(derived_cache_dir(sf, "pbf") / "build"),
+        BuildSettings.for_fixture(DENSITY), want=("rows",),
+        given={"features_unified": unified},
+    ).frames["rows"]
     return store.groupBy("tile_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum(F.col("is_ghost").cast("int")).cast("long").alias("n_ghosts"),
@@ -1699,40 +1700,27 @@ def _q_a8_lineage_tiles(spark, sf):
     lineage"), not a recomputed aggregate — verified against the oracle's
     independent per-tile assignment counts.  A build whose lineage table
     is missing, stale, or wrong fails this row even if its store is fine.
-    Shares the memoized a8build pipeline run (resumable store batches,
-    plans/pipeline.py stage 6)."""
-    from geodesk_gol_spark.gate import derived_cache_dir
-    from geodesk_gol_spark.plans.pipeline import build_gol
-
-    path = derived_cache_dir(sf, "a8build")
-    lpath = path / "lineage"
-    if not (lpath / "_SUCCESS").exists():
-        build_gol(spark, sf, str(path))
+    Reads the gate's own build (gate.ctx runs the full stage graph,
+    plans/pipeline.py, with resumable store batches)."""
     return (
-        spark.read.parquet(str(lpath))
+        spark.read.parquet(str(ctx(spark, sf)["dir"] / "lineage"))
         .filter(F.col("stage") == "store_tile")
         .select("tile_id", "n_rows")
     )
 
 
 def _q_a8_build_metrics(spark, sf):
-    """A8 with teeth: run the FULL resumable pipeline once (memoized,
-    code+data fingerprinted — re-runs resume off the stage _SUCCESS
-    markers), then read ``metrics.jsonl`` back OFF DISK and return the
-    skew-evidence row.  The values certify the pipeline's recorded
-    lineage/metrics table (north-rule requirement), not a recomputed
-    aggregate: a build that wrote wrong or no metrics fails this row
-    even if its store is fine.  p50 is excluded (percentile_approx vs
-    exact-median tie-breaking differs across engines by spec)."""
+    """A8 with teeth: read the gate build's ``metrics.jsonl`` back OFF
+    DISK (gate.ctx runs the full stage graph, plans/pipeline.py, once
+    per code+data fingerprint) and return the skew-evidence row.  The
+    values certify the pipeline's recorded lineage/metrics table
+    (north-rule requirement), not a recomputed aggregate: a build that
+    wrote wrong or no metrics fails this row even if its store is fine.
+    p50 is excluded (percentile_approx vs exact-median tie-breaking
+    differs across engines by spec)."""
     import json as _json
 
-    from geodesk_gol_spark.gate import derived_cache_dir
-    from geodesk_gol_spark.plans.pipeline import build_gol
-
-    path = derived_cache_dir(sf, "a8build")
-    mpath = path / "metrics.jsonl"
-    if not mpath.exists():
-        build_gol(spark, sf, str(path))
+    mpath = ctx(spark, sf)["dir"] / "metrics.jsonl"
     rows = [
         _json.loads(line)
         for line in mpath.read_text().splitlines()

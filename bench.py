@@ -32,18 +32,21 @@ MAX_STEAL_PCT = 2.0
 # extra reps beyond the first: steal arrives in multi-minute storms, so
 # a few chances to land a clean window are cheap insurance
 RETRIES = 4
+# the build outputs the benchmark's store write and queries read
+BUILD_OUTPUTS = ("rows", "points", "extents", "feature_tiles",
+                 "features_unified")
 
 
 def run_pipeline(spark, sf_dir: str, out_dir: str
-                 ) -> tuple[dict[str, float], dict[str, int], dict[str, int]]:
+                 ) -> tuple[dict[str, float], dict[str, int]]:
     """The headline job: docs → features → pyramid → assignment → store
-    → GOQL/bbox query → kNN → containment.  Returns per-stage seconds,
-    row counts and checkpoint bytes.
+    → GOQL/bbox query → kNN → containment.  Returns per-stage seconds
+    and row counts.
 
-    Every stage CHECKPOINTS to parquet and the next stage reads it back:
-    (a) the build is resumable per stage (north-rule checkpoint story),
-    and (b) logical plans stay bounded — ``persist()`` caches data but
-    keeps the full plan, and re-analyzing the synth expression tree per
+    The build part is a selection from the engine's one stage graph
+    (``plans/pipeline.py``): every stage CHECKPOINTS to parquet and the
+    next stage reads it back.  ``persist()`` would cache data but keep
+    the full plan, and re-analyzing the synth expression tree per
     downstream action costs more than the data at every SF we run
     (measured: assign 239s→29s, compile >600s→13s at sf0.1 local[32]).
     """
@@ -53,109 +56,31 @@ def run_pipeline(spark, sf_dir: str, out_dir: str
     from pyspark.sql import functions as F
 
     from geodesk_gol_spark.config import BuildSettings
-    from geodesk_gol_spark.functions.mercator import with_projection
-    from geodesk_gol_spark.operators.assign import assign_features
-    from geodesk_gol_spark.operators.compile_tiles import (
-        compile_feature_rows,
-        write_store,
-    )
-    from geodesk_gol_spark.plans.pyramid import build_tile_catalog
+    from geodesk_gol_spark.operators.compile_tiles import write_store
+    from geodesk_gol_spark.plans.pipeline import run_stages
     from geodesk_gol_spark.query.goql import goql_to_column
     from geodesk_gol_spark.query.spatial import bbox_filter, knn_cell_rings
-    from geodesk_gol_spark.sources.parser import (
-        parse_features_unified,
-        split_features,
-    )
-    from geodesk_gol_spark.sources.synth import synth_docs
 
-    t: dict[str, float] = {}
-    counts: dict[str, int] = {}
-    sizes: dict[str, int] = {}
-
-    def _du(path: str) -> int:
-        tot = 0
-        for root, _, files in os.walk(path):
-            for fn in files:
-                try:
-                    tot += os.path.getsize(os.path.join(root, fn))
-                except OSError:
-                    pass
-        return tot
-
-    def ckpt(name: str, df):
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-        sizes[name] = _du(os.path.join(out_dir, name))
-        return spark.read.parquet(os.path.join(out_dir, name))
+    b = run_stages(spark, sf_dir, out_dir, BuildSettings.for_fixture(500),
+                   want=BUILD_OUTPUTS)
+    sec = {m["stage"]: m["seconds"] for m in b.metrics}
+    t = {q: sec[stage] for q, stage in (
+        ("q_synth_docs", "docs"), ("q_parse", "features"),
+        ("q_pyramid", "catalog"), ("q_assign", "assignment"),
+        ("q_compile", "rows"),
+    )}
+    log(" ".join(f"{q} {v:.1f}s" for q, v in t.items()))
+    feats, catalog = b.feats(), b.catalog
+    ft, points, extents = (
+        b.frames[n] for n in ("feature_tiles", "points", "extents"))
+    # row counts run on the checkpoints, outside the timed stages
+    kc = dict(b.frames["features_unified"].groupBy("kind").count().collect())
+    counts = {"docs": b.frames["docs"].count(),
+              **{f"{k}s": kc.get(k, 0) for k in ("node", "way", "relation")},
+              "tiles": len(catalog.tiles), "feature_tiles": ft.count()}
 
     t0 = time.time()
-    docs = ckpt("docs", synth_docs(spark, sf_dir))
-    counts["docs"] = docs.count()
-    t["q_synth_docs"] = time.time() - t0
-    log(f"synth {t['q_synth_docs']:.1f}s")
-
-    t0 = time.time()
-    # ONE scan+explode+parse of the docs table, checkpointed once;
-    # per-kind frames are filtered column-pruned reads of the checkpoint
-    # (was: 4 independent scans of the full corpus, one per kind)
-    unified = ckpt("features", parse_features_unified(docs))
-    feats = split_features(unified)
-    kc = {
-        r["kind"]: r["n"]
-        for r in unified.groupBy("kind")
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    counts["nodes"] = kc.get("node", 0)
-    counts["ways"] = kc.get("way", 0)
-    counts["relations"] = kc.get("relation", 0)
-    t["q_parse"] = time.time() - t0
-    log(f"parse {t['q_parse']:.1f}s")
-
-    t0 = time.time()
-    # the pyramid consumes only the cell grid — checkpoint just those
-    # columns (tags/members stay in the features checkpoint)
-    proj = ckpt(
-        "proj",
-        with_projection(feats["nodes"]).select(
-            "id", "x", "y", "cell_col", "cell_row"
-        ),
-    )
-    catalog = build_tile_catalog(proj, BuildSettings.for_fixture(500))
-    t["q_pyramid"] = time.time() - t0
-    counts["tiles"] = len(catalog.tiles)
-    log(f"pyramid {t['q_pyramid']:.1f}s tiles={counts['tiles']}")
-
-    t0 = time.time()
-    asn = assign_features(feats, catalog)
-    # the three outputs are independent once the (persisted) assignment
-    # frames exist — write them as concurrent Spark jobs (latency = max,
-    # not sum; same total work)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(3) as pool:
-        futs = {
-            name: pool.submit(ckpt, name, asn[name])
-            for name in ("feature_tiles", "points", "extents")
-        }
-        ft = futs["feature_tiles"].result()
-        points = futs["points"].result()
-        extents = futs["extents"].result()
-    counts["feature_tiles"] = ft.count()
-    t["q_assign"] = time.time() - t0
-    log(f"assign {t['q_assign']:.1f}s rows={counts['feature_tiles']}")
-
-    t0 = time.time()
-    rows = ckpt("rows", compile_feature_rows(
-        ft, points, extents,
-        feats["nodes"], feats["ways"], feats["relations"],
-    ))
-    t["q_compile"] = time.time() - t0
-    log(f"compile {t['q_compile']:.1f}s")
-    # drop build-time persists before queries
-    spark.catalog.clearCache()
-
-    t0 = time.time()
-    write_store(rows, os.path.join(out_dir, "store"))
-    sizes["store"] = _du(os.path.join(out_dir, "store"))
+    write_store(b.frames["rows"], os.path.join(out_dir, "store"))
     t["q_store_write"] = time.time() - t0
     log(f"store {t['q_store_write']:.1f}s")
 
@@ -201,7 +126,7 @@ def run_pipeline(spark, sf_dir: str, out_dir: str
     t["q_contains"] = time.time() - t0
     log(f"contains {t['q_contains']:.1f}s rows={counts['contains']}")
 
-    return t, counts, sizes
+    return t, counts
 
 
 def run_ml(spark, sf_dir: str) -> dict[str, float]:
@@ -239,23 +164,18 @@ def one_run(sf_dir: str, cpus: int) -> dict:
                       extra={"spark.local.dir": TMP_BASE})
     try:
         t_all0 = time.time()
-        t, counts, ckpt_bytes = run_pipeline(spark, sf_dir, out_dir)
+        t, counts = run_pipeline(spark, sf_dir, out_dir)
         t.update(run_ml(spark, sf_dir))
         total = time.time() - t_all0
         # the north metric times the ENGINE (parse→tile→join→store→query);
-        # input read/synthesis is reported but not part of throughput.
-        # BOTH definitions are reported (ADVICE r02): entries before
-        # 2026-08-17 03:35 used total-based throughput on disk.
-        engine_sec = total - t.get("q_synth_docs", 0.0)
-        n_features = counts["feature_tiles"]
+        # input read/synthesis is reported but not part of throughput
+        engine_sec = total - t["q_synth_docs"]
         return {
             "total_sec": round(total, 2),
-            "engine_sec": round(engine_sec, 2),
             "queries": {k: round(v, 2) for k, v in t.items()},
             "counts": counts,
-            "ckpt_bytes": ckpt_bytes,
-            "features_per_sec": round(n_features / max(engine_sec, 1e-9), 1),
-            "features_per_sec_total": round(n_features / max(total, 1e-9), 1),
+            "features_per_sec": round(
+                counts["feature_tiles"] / max(engine_sec, 1e-9), 1),
             "pid": os.getpid(),
         }
     finally:

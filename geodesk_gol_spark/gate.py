@@ -4,8 +4,10 @@ The driver calls every ``queries()`` entry independently with
 (spark, sf_dir); rebuilding the synthesis → parse → pyramid → assignment
 chain per query would be O(queries × build).  Two cache layers:
 
-1. **Disk** (``.gatecache/<sf>-<code-fingerprint>/``): the first build at
-   a scale factor materializes every context frame to parquet; later
+1. **Disk** (``.gatecache/<sf>-<code-fingerprint>/``): the first call at
+   a scale factor runs the whole build stage graph (``plans/pipeline.py``)
+   into it, so every context frame, the store, its lineage table and
+   ``metrics.jsonl`` are parquet/JSON on disk; later
    calls — *including calls from a fresh process*, e.g. a per-query
    driver harness — load the parquet directly.  The fingerprint is a
    hash of the package source, so any code change invalidates the cache
@@ -22,31 +24,22 @@ instead of the full build DAG.
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
 from pathlib import Path
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from .config import BuildSettings
 from .functions.mercator import with_projection
-from .operators import validate as V
-from .operators.assign import assign_features, node_points
-from .operators.compile_tiles import compile_feature_rows
-from .plans.pyramid import TileCatalog, build_tile_catalog
-from .sources.synth import synth_docs
+from .plans.pipeline import ASSIGNMENT, BuildResult, build_gol
+from .sources.parser import split_features
 
 DENSITY = 500  # fixture-scale min_tile_density (reference default 75 000
                # is planet-scale; BuildSettings.h:165)
 
 _CTX: dict[tuple[int, str], dict] = {}
 _PKG = Path(__file__).resolve().parent
-
-# context frames persisted to / loaded from the disk cache
-_FRAMES = (
-    "docs", "nodes", "ways", "relations", "media", "proj", "points", "node_tiles",
-    "way_homes", "way_ghosts", "rel_homes", "extents", "feature_tiles",
-    "unresolved_relations", "store", "exports", "stubs",
-)
 
 
 def _code_fingerprint() -> str:
@@ -85,13 +78,13 @@ def derived_cache_dir(sf_dir: str, prefix: str) -> Path:
 
 
 def _materialize(spark: SparkSession, sf_dir: str) -> Path:
-    """Build once, checkpointing STAGE BY STAGE to parquet.
+    """Run the whole stage graph (``plans.pipeline.build_gol``) once into
+    a per-process staging dir, then publish it atomically.
 
     Each stage reads the previous stage's parquet rather than extending
     one giant logical plan: the synth expressions are large CASE chains,
     and re-analyzing them per downstream action costs far more than the
-    sf0.001/0.01 data itself.  Staged checkpoints cap plan size AND make
-    every stage independently resumable.
+    sf0.001/0.01 data itself.
     """
     d = _cache_dir(sf_dir)
     # per-process staging dir: two concurrent builders of the same
@@ -99,74 +92,21 @@ def _materialize(spark: SparkSession, sf_dir: str) -> Path:
     # writes (concurrent Spark overwrites of one dir can leave a union
     # of both jobs' part-files); the rename below keeps the existing
     # lost-the-race check.
-    import os
-
     tmp = d.with_name(f"{d.name}.tmp.{os.getpid()}")
-    if tmp.exists():
-        import shutil
-
-        shutil.rmtree(tmp)
-
-    def w(name: str, df: DataFrame) -> DataFrame:
-        df.write.mode("overwrite").parquet(str(tmp / name))
-        return spark.read.parquet(str(tmp / name))
-
-    settings = BuildSettings.for_fixture(DENSITY)
-    docs = w("docs", synth_docs(spark, sf_dir))
-    # one scan+parse of docs, then 4 cheap per-kind writes off the
-    # unified checkpoint (was: 4 independent scans of docs)
-    from .sources.parser import parse_features_unified, split_features
-
-    unified = w("features_unified", parse_features_unified(docs))
-
-    # independent leaf writes run as concurrent Spark jobs (latency = max,
-    # not sum); ordering between waves preserves persist-population order
-    # so concurrent siblings never race to compute the same upstream
-    from concurrent.futures import ThreadPoolExecutor
-
-    def wave(pairs: list[tuple[str, DataFrame]]) -> dict[str, DataFrame]:
-        with ThreadPoolExecutor(len(pairs)) as pool:
-            futs = {n: pool.submit(w, n, df) for n, df in pairs}
-            return {n: f.result() for n, f in futs.items()}
-
-    feats = wave(list(split_features(unified).items()))
-    proj = w("proj", with_projection(feats["nodes"]))
-    catalog = build_tile_catalog(proj, settings)
-    asn = assign_features(feats, catalog)
-    # sequential: each write populates a persist the next frames reuse
-    # (extents materializes the wext and rel_ext persists the wave's
-    # rel_homes/feature_tiles siblings would otherwise race to compute)
-    for name in ("points", "node_tiles", "way_homes", "extents"):
-        asn[name] = w(name, asn[name])
-    asn.update(wave([(n, asn[n]) for n in (
-        "way_ghosts", "rel_homes", "feature_tiles",
-        "unresolved_relations")]))
-    wave([
-        ("store", compile_feature_rows(
-            asn["feature_tiles"], asn["points"], asn["extents"],
-            feats["nodes"], feats["ways"], feats["relations"],
-        )),
-        ("exports", V.export_tables(
-            feats["ways"], feats["relations"],
-            asn["node_tiles"].select("typed_id", "tile_id"),
-            asn["way_homes"], asn["rel_homes"],
-        )),
-        ("stubs", V.foreign_ref_stubs(
-            feats["ways"], feats["relations"],
-            asn["node_tiles"].select("typed_id", "tile_id"),
-            asn["way_homes"], asn["rel_homes"],
-        )),
-    ])
-    catalog.tiles.to_parquet(tmp / "catalog_tiles.parquet")
-    spark.catalog.clearCache()
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        build_gol(spark, sf_dir, str(tmp), BuildSettings.for_fixture(DENSITY))
+    except BaseException:
+        # _prune_stale never touches .tmp. dirs: a failed build removes
+        # its own
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     # atomic publish: rename may race another builder finishing first —
     # a bare exists() check is not enough (both can pass it before either
     # renames); losing the race means theirs is fine, discard ours
     try:
         tmp.rename(d)
     except OSError:
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
     _prune_stale(d)
     return d
@@ -179,7 +119,6 @@ def _prune_stale(current: Path) -> None:
     forever.  Only siblings sharing this sf's name-prefix are touched;
     in-flight .tmp.<pid> staging dirs of live builders are left alone."""
     import re
-    import shutil
 
     # cache names end in "-<12-hex code fp>-<8-hex data fp>"; the sf name
     # itself may contain dashes, so strip the fixed-length suffix rather
@@ -216,36 +155,19 @@ def ctx(spark: SparkSession, sf_dir: str) -> dict:
     d = _cache_dir(sf_dir)
     if not d.exists():
         _materialize(spark, sf_dir)
-    frames = {n: spark.read.parquet(str(d / n)) for n in _FRAMES}
-    settings = BuildSettings.for_fixture(DENSITY)
-    catalog = TileCatalog(
-        settings=settings, tiles=pd.read_parquet(d / "catalog_tiles.parquet")
-    )
+    b = BuildResult(spark, sf_dir, str(d), BuildSettings.for_fixture(DENSITY))
+    feats = split_features(b.read("features_unified"))
     c = {
-        "settings": settings,
-        "docs": frames["docs"],
-        "feats": {
-            "nodes": frames["nodes"],
-            "ways": frames["ways"],
-            "relations": frames["relations"],
-            "media": frames["media"],
-        },
-        "proj": frames["proj"],
-        "points": frames["points"],
-        "catalog": catalog,
-        "assignment": {
-            "points": frames["points"],
-            "node_tiles": frames["node_tiles"],
-            "way_homes": frames["way_homes"],
-            "way_ghosts": frames["way_ghosts"],
-            "rel_homes": frames["rel_homes"],
-            "extents": frames["extents"],
-            "feature_tiles": frames["feature_tiles"],
-            "unresolved_relations": frames["unresolved_relations"],
-        },
-        "store": frames["store"],
-        "exports": frames["exports"],
-        "stubs": frames["stubs"],
+        "dir": d,
+        "docs": b.read("docs"),
+        "feats": feats,
+        "proj": with_projection(feats["nodes"]),
+        "points": b.read("points"),
+        "catalog": b.read("tile_catalog"),
+        "assignment": {n: b.read(n) for n in ASSIGNMENT},
+        "store": b.read("store"),
+        "exports": b.read("tile_exports"),
+        "stubs": b.read("foreign_stubs"),
     }
     _CTX[key] = c
     return c

@@ -1,31 +1,38 @@
-"""End-to-end GOL-build pipeline with per-stage checkpoints (resume),
-per-partition lineage and a metrics table.
+"""The GOL build as ONE ordered stage graph: per-stage parquet
+checkpoints (resume), per-partition lineage and a metrics table.
 
-Mirrors the reference's four-phase build with restartable phases
-(/root/reference/src/build/GolBuilder.cpp:61-115: ANALYZE → SORT →
-VALIDATE → COMPILE, resumable via persisted work files): each stage here
-writes a parquet checkpoint; a re-run skips stages whose checkpoint
-exists (idempotent stage reruns = the reference's startPhase).
+Mirrors the reference's restartable four-phase build
+(src/build/GolBuilder.cpp:61-115: ANALYZE → SORT → VALIDATE → COMPILE
+with ``startPhase``).  ``STAGES`` in order, with the
+outputs each writes: docs; features (features_unified — per-kind frames
+are ``split_features`` of its read-back); catalog (proj, tile_catalog);
+assignment (the 8 ``assign_features`` frames, J1-J6); rows; validate
+(tile_exports J7, foreign_stubs J8, synthetic_tags A9); store
+(store_input, the Hilbert-clustered store, lineage: O1/O4/S4); check;
+metrics (per-tile skew evidence from the lineage table).
 
-Stages:
-  1 docs        — interleaved-document synthesis (or a user-provided table)
-  2 features    — parsed nodes/ways/relations (+ span lineage)
-  3 catalog     — tile pyramid (A1/A4/A5)
-  4 assignment  — feature_tiles + extents (J1-J6)
-  5 validate    — exports (J7/J8), synthetic tags (A9), bboxes (A6)
-  6 store       — Hilbert-clustered per-tile parquet store (O1/O4/S4)
+Callers select what they need and :func:`run_stages` runs only that:
+:func:`build_gol` and the gate's cache build (``gate._materialize``)
+ask for every stage; ``bench.run_pipeline`` for rows, points, extents,
+feature_tiles and features_unified; the ``s1_pbf_build_store`` gate row
+for rows, with features_unified given from a decoded PBF file.
 
-The metrics table doubles as skew evidence: per-tile row counts are
-recorded every build (north-rule lineage + metrics requirement).
+Resume never mixes builds: a stage that re-runs first deletes every
+output downstream of it, and ``_build.json`` pins the sf_dir and
+BuildSettings of a directory's first build — a resume with other ones
+raises ``ValueError``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
-from dataclasses import dataclass
+from collections.abc import Callable, Iterable
+from dataclasses import asdict, dataclass, field
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,11 +40,8 @@ from ..config import BuildSettings
 from ..functions.mercator import with_projection
 from ..operators import validate as V
 from ..operators.assign import assign_features
-from ..operators.compile_tiles import (
-    compile_feature_rows,
-    write_store,
-    write_store_resumable,
-)
+from ..operators.check import check_store
+from ..operators.compile_tiles import compile_feature_rows, write_store_resumable
 from ..plans.pyramid import TileCatalog, build_tile_catalog
 from ..sources.parser import parse_features_unified, split_features
 from ..sources.synth import synth_docs
@@ -49,206 +53,291 @@ def _done(path: str) -> bool:
 
 @dataclass
 class BuildResult:
+    """One build directory: its read-back outputs and stage records."""
+
+    spark: SparkSession
+    sf_dir: str
     out_dir: str
-    catalog: TileCatalog
-    metrics: list[dict]
+    settings: BuildSettings
+    frames: dict = field(default_factory=dict)
+    metrics: list[dict] = field(default_factory=list)
+
+    @property
+    def catalog(self) -> TileCatalog:
+        return self.frames["tile_catalog"]
+
+    def path(self, name: str) -> str:
+        return os.path.join(self.out_dir, name)
 
     def store_path(self) -> str:
-        return os.path.join(self.out_dir, "store")
+        return self.path("store")
+
+    def feats(self) -> dict[str, DataFrame]:
+        return split_features(self.frames["features_unified"])
+
+    def read(self, name: str):
+        if name == "tile_catalog":
+            return TileCatalog(settings=self.settings,
+                               tiles=pd.read_parquet(self.path(name)))
+        return self.spark.read.parquet(self.path(name))
+
+    def checkpoint(self, name: str, value):
+        """Write one output to parquet and keep its read-back."""
+        path = self.path(name)
+        if isinstance(value, TileCatalog):
+            # pandas round-trip keeps the driver-side dtypes and order
+            shutil.rmtree(path, ignore_errors=True)
+            os.makedirs(path)
+            value.tiles.to_parquet(os.path.join(path, "part-00000.parquet"),
+                                   index=False)
+            open(os.path.join(path, "_SUCCESS"), "w").close()
+        else:
+            value.write.mode("overwrite").parquet(path)
+        self.frames[name] = self.read(name)
+        return self.frames[name]
 
 
-def build_gol(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    settings: BuildSettings | None = None,
-    resume: bool = True,
-) -> BuildResult:
-    """Run (or resume) the full build; returns catalog + metrics."""
-    settings = settings or BuildSettings.for_fixture()
-    os.makedirs(out_dir, exist_ok=True)
-    metrics: list[dict] = []
+@dataclass(frozen=True)
+class Stage:
+    name: str
+    reads: tuple[str, ...]
+    writes: tuple[str, ...]
+    # returns outputs to checkpoint (or writes them itself); any other
+    # key is recorded in the stage's metrics row
+    fn: Callable[[BuildResult], dict]
 
-    def record(stage: str, t0: float, **kw):
-        metrics.append(
-            {"stage": stage, "seconds": round(time.time() - t0, 3), **kw}
-        )
 
-    # -- stage 1: docs ------------------------------------------------------
-    docs_path = os.path.join(out_dir, "docs")
-    if not (resume and _done(docs_path)):
-        t0 = time.time()
-        synth_docs(spark, sf_dir).write.mode("overwrite").parquet(docs_path)
-        record("docs", t0)
-    docs = spark.read.parquet(docs_path)
+def _catalog(b: BuildResult) -> dict:
+    # the pyramid consumes only the cell grid — checkpoint just those
+    # columns (tags/members stay in the features checkpoint)
+    proj = b.checkpoint("proj", with_projection(b.feats()["nodes"]).select(
+        "id", "x", "y", "cell_col", "cell_row"))
+    catalog = build_tile_catalog(proj, b.settings)
+    return {"tile_catalog": catalog, "tiles": len(catalog.tiles)}
 
-    # -- stage 2: features --------------------------------------------------
-    feat_paths = {k: os.path.join(out_dir, f"features_{k}") for k in
-                  ("nodes", "ways", "relations", "media")}
-    uni_path = os.path.join(out_dir, "features_unified")
-    if not (resume and all(_done(p) for p in feat_paths.values())):
-        t0 = time.time()
-        # one scan+parse of docs checkpointed once, then per-kind writes
-        # off the (much smaller) unified table
-        parse_features_unified(docs).write.mode("overwrite").parquet(uni_path)
-        feats = split_features(spark.read.parquet(uni_path))
-        for k, p in feat_paths.items():
-            feats[k].write.mode("overwrite").parquet(p)
-        record("features", t0)
-    feats = {k: spark.read.parquet(p) for k, p in feat_paths.items()}
 
-    # -- stage 3: catalog ---------------------------------------------------
-    cat_path = os.path.join(out_dir, "tile_catalog")
-    proj = with_projection(feats["nodes"]).persist()
-    if not (resume and _done(cat_path)):
-        t0 = time.time()
-        catalog = build_tile_catalog(proj, settings)
-        catalog.df(spark).coalesce(1).write.mode("overwrite").parquet(cat_path)
-        record("catalog", t0, tiles=len(catalog.tiles))
-    else:
-        tiles = spark.read.parquet(cat_path).toPandas()
-        catalog = TileCatalog(settings=settings, tiles=tiles)
+def _assignment(b: BuildResult) -> dict:
+    res = assign_features(b.feats(), b.catalog)
+    # J6 driver-residue meters ride into the metrics table so a
+    # pathological super-relation corpus is visible, not silent
+    return {**res.pop("j6_stats"), **res}
 
-    # -- stage 4: assignment ------------------------------------------------
-    asn_paths = {
-        k: os.path.join(out_dir, k)
-        for k in ("feature_tiles", "extents", "node_tiles", "way_homes", "rel_homes")
+
+def _rows(b: BuildResult) -> dict:
+    f, feats = b.frames, b.feats()
+    return {"rows": compile_feature_rows(
+        f["feature_tiles"], f["points"], f["extents"],
+        feats["nodes"], feats["ways"], feats["relations"],
+    )}
+
+
+def _validate(b: BuildResult) -> dict:
+    f, feats = b.frames, b.feats()
+    refs = (feats["ways"], feats["relations"],
+            f["node_tiles"], f["way_homes"], f["rel_homes"])
+    return {
+        "tile_exports": V.export_tables(*refs),
+        "foreign_stubs": V.foreign_ref_stubs(*refs),
+        "synthetic_tags": (
+            V.duplicate_location_nodes(f["points"])
+            .unionByName(V.orphan_nodes(
+                feats["nodes"], feats["ways"], feats["relations"]))
+            .unionByName(V.missing_member_tags(f["extents"]))
+        ),
     }
-    if not (resume and all(_done(p) for p in asn_paths.values())):
-        t0 = time.time()
-        res = assign_features(feats, catalog)
-        for k, p in asn_paths.items():
-            res[k].write.mode("overwrite").parquet(p)
-        # J6 driver-residue meters ride into the metrics table so a
-        # pathological super-relation corpus is visible, not silent
-        record("assignment", t0, **res.get("j6_stats", {}))
-    asn = {k: spark.read.parquet(p) for k, p in asn_paths.items()}
 
-    # -- stage 5: validate --------------------------------------------------
-    val_path = os.path.join(out_dir, "tile_exports")
-    stub_path = os.path.join(out_dir, "foreign_stubs")
-    tag_path = os.path.join(out_dir, "synthetic_tags")
-    if not (resume and _done(val_path) and _done(stub_path)
-            and _done(tag_path)):
-        t0 = time.time()
-        exports = V.export_tables(
-            feats["ways"], feats["relations"],
-            asn["node_tiles"], asn["way_homes"], asn["rel_homes"],
-        )
-        exports.write.mode("overwrite").parquet(val_path)
-        V.foreign_ref_stubs(
-            feats["ways"], feats["relations"],
-            asn["node_tiles"], asn["way_homes"], asn["rel_homes"],
-        ).write.mode("overwrite").parquet(stub_path)
-        from ..operators.assign import node_points
 
-        pts = node_points(proj)
-        tags = (
-            V.duplicate_location_nodes(pts)
-            .unionByName(V.orphan_nodes(feats["nodes"], feats["ways"], feats["relations"]))
-            .unionByName(V.missing_member_tags(asn["extents"]))
-        )
-        tags.write.mode("overwrite").parquet(tag_path)
-        record("validate", t0)
-
-    # -- stage 6: store -----------------------------------------------------
-    # 6a: checkpoint the compiled rows ONCE, range-partitioned on tile_id
-    # so every batch filter below prunes row groups instead of rescanning
-    # the corpus (total batch scan cost stays O(N)).
-    store_input = os.path.join(out_dir, "store_input")
-    store_path = os.path.join(out_dir, "store")
-    lineage_path = os.path.join(out_dir, "lineage")
-    if not (resume and _done(store_input)):
-        t0 = time.time()
-        from ..operators.assign import node_points
-
-        rows = compile_feature_rows(
-            asn["feature_tiles"],
-            node_points(proj),
-            asn["extents"],
-            feats["nodes"], feats["ways"], feats["relations"],
-        )
-        (
-            rows.repartitionByRange(
-                int(settings.shuffle_partitions), "tile_id", "hilbert"
-            ).write.mode("overwrite").parquet(store_input)
-        )
-        record("store_input", t0)
-
-    # 6b: per-tile-range checkpointed store write (north rule "resumable
+def _store(b: BuildResult) -> dict:
+    s = b.settings
+    # checkpoint the rows ONCE range-partitioned on tile_id so every
+    # batch filter below prunes row groups instead of rescanning the
+    # corpus (total batch scan cost stays O(N))
+    store_input = b.path("store_input")
+    if not _done(store_input):
+        b.frames["rows"].repartitionByRange(
+            int(s.shuffle_partitions), "tile_id", "hilbert"
+        ).write.mode("overwrite").parquet(store_input)
+    # per-tile-range checkpointed store write (north rule "resumable
     # from per-tile checkpoints"): each contiguous tile-id batch is an
     # independent transaction; a killed build redoes only uncommitted
     # batches.  Per-batch lineage + per-tile row counts land in the
     # ``lineage`` table (north rule "per-partition lineage").
-    if not (resume and _done(store_path) and _done(lineage_path)):
-        t0 = time.time()
-        batch_lineage = write_store_resumable(
-            spark.read.parquet(store_input), store_path, catalog.tiles,
-            settings.shuffle_partitions, n_batches=settings.store_batches,
-        )
-        store_df = spark.read.parquet(store_path)
-        per_tile = store_df.groupBy("tile_id").count()
-        tile_rows = per_tile.selectExpr(
-            "'store_tile' AS stage",
-            "CAST(NULL AS INT) AS batch",
-            "CAST(NULL AS LONG) AS tile_lo",
-            "CAST(NULL AS LONG) AS tile_hi",
-            "CAST(NULL AS DOUBLE) AS seconds",
-            "CAST(NULL AS BOOLEAN) AS resumed",
-            "CAST(tile_id AS INT) AS tile_id",
-            "CAST(count AS LONG) AS n_rows",
-        )
-        batch_rows = spark.createDataFrame(
-            [(b["stage"], b["batch"], b["tile_lo"], b["tile_hi"],
-              b["seconds"], b["resumed"], None, b["rows"])
-             for b in batch_lineage],
-            "stage string, batch int, tile_lo long, tile_hi long, "
-            "seconds double, resumed boolean, tile_id int, n_rows long",
-        )
-        tile_rows.unionByName(batch_rows).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(lineage_path)
-        record(
-            "store", t0, batches=len(batch_lineage),
-            batches_resumed=sum(1 for b in batch_lineage if b["resumed"]),
-        )
-
-    # -- stage 7: integrity check (gol check analogue) ----------------------
-    t0 = time.time()
-    from ..operators.check import check_store
-
-    store_df = spark.read.parquet(store_path)
-    checks = {
-        r["invariant"]: int(r["n_bad"])
-        for r in check_store(
-            store_df, catalog,
-            spark.read.parquet(val_path), spark.read.parquet(stub_path),
-        ).collect()
+    batch_lineage = write_store_resumable(
+        b.spark.read.parquet(store_input), b.store_path(), b.catalog.tiles,
+        s.shuffle_partitions, n_batches=s.store_batches,
+    )
+    tile_rows = b.spark.read.parquet(b.store_path()).groupBy(
+        "tile_id").count().selectExpr(
+        "'store_tile' AS stage",
+        "CAST(NULL AS INT) AS batch",
+        "CAST(NULL AS LONG) AS tile_lo",
+        "CAST(NULL AS LONG) AS tile_hi",
+        "CAST(NULL AS DOUBLE) AS seconds",
+        "CAST(NULL AS BOOLEAN) AS resumed",
+        "CAST(tile_id AS INT) AS tile_id",
+        "CAST(count AS LONG) AS n_rows",
+    )
+    batch_rows = b.spark.createDataFrame(
+        [(x["stage"], x["batch"], x["tile_lo"], x["tile_hi"],
+          x["seconds"], x["resumed"], None, x["rows"])
+         for x in batch_lineage],
+        "stage string, batch int, tile_lo long, tile_hi long, "
+        "seconds double, resumed boolean, tile_id int, n_rows long",
+    )
+    tile_rows.unionByName(batch_rows).coalesce(1).write.mode(
+        "overwrite").parquet(b.path("lineage"))
+    return {
+        "batches": len(batch_lineage),
+        "batches_resumed": sum(1 for x in batch_lineage if x["resumed"]),
     }
-    record("check", t0, **checks)
 
-    # -- metrics (incl. per-tile skew evidence) -----------------------------
-    # derived from the lineage table's per-tile rows — the store is not
-    # rescanned; lineage IS the per-partition evidence
-    t0 = time.time()
-    per_tile = (
-        spark.read.parquet(lineage_path)
-        .filter(F.col("stage") == "store_tile")
-        .select("tile_id", F.col("n_rows").alias("count"))
+
+def _check(b: BuildResult) -> dict:
+    # integrity check (gol check analogue)
+    f = b.frames
+    return {
+        r["invariant"]: int(r["n_bad"])
+        for r in check_store(f["store"], b.catalog, f["tile_exports"],
+                             f["foreign_stubs"]).collect()
+    }
+
+
+def _metrics(b: BuildResult) -> dict:
+    # per-tile skew evidence derived from the lineage table's per-tile
+    # rows — the store is not rescanned; lineage IS the per-partition
+    # evidence
+    skew = (
+        b.frames["lineage"].filter(F.col("stage") == "store_tile")
+        .agg(
+            F.count("*").alias("tiles"),
+            F.max("n_rows").alias("max_tile_rows"),
+            F.expr("percentile_approx(n_rows, 0.5)").alias("p50_tile_rows"),
+            F.sum("n_rows").alias("total_rows"),
+        ).collect()[0]
     )
-    skew = per_tile.agg(
-        F.count("*").alias("tiles"),
-        F.max("count").alias("max_tile_rows"),
-        F.expr("percentile_approx(count, 0.5)").alias("p50_tile_rows"),
-        F.sum("count").alias("total_rows"),
-    ).collect()[0]
-    record(
-        "metrics", t0,
-        tiles=int(skew["tiles"]), max_tile_rows=int(skew["max_tile_rows"]),
-        p50_tile_rows=int(skew["p50_tile_rows"]), total_rows=int(skew["total_rows"]),
-    )
+    return {k: int(v) for k, v in skew.asDict().items()}
+
+
+ASSIGNMENT = ("points", "node_tiles", "way_homes", "way_ghosts", "rel_homes",
+              "extents", "unresolved_relations", "feature_tiles")
+
+STAGES: tuple[Stage, ...] = (
+    Stage("docs", (), ("docs",),
+          lambda b: {"docs": synth_docs(b.spark, b.sf_dir)}),
+    # ONE scan+explode+parse of the docs table
+    Stage("features", ("docs",), ("features_unified",), lambda b: {
+        "features_unified": parse_features_unified(b.frames["docs"])}),
+    Stage("catalog", ("features_unified",), ("proj", "tile_catalog"),
+          _catalog),
+    Stage("assignment", ("features_unified", "tile_catalog"), ASSIGNMENT,
+          _assignment),
+    Stage("rows", ("feature_tiles", "points", "extents", "features_unified"),
+          ("rows",), _rows),
+    Stage("validate", ("features_unified", "node_tiles", "way_homes",
+                       "rel_homes", "points", "extents"),
+          ("tile_exports", "foreign_stubs", "synthetic_tags"), _validate),
+    Stage("store", ("rows", "tile_catalog"),
+          ("store_input", "store", "lineage"), _store),
+    Stage("check", ("store", "tile_catalog", "tile_exports", "foreign_stubs"),
+          (), _check),
+    Stage("metrics", ("lineage",), (), _metrics),
+)
+
+EVERYTHING = tuple(s.name for s in STAGES)
+
+
+def _select(want: Iterable[str], given: dict) -> set[str]:
+    """Stage and output names the wanted names (stages or outputs) need;
+    a stage whose outputs are given reads nothing."""
+    want = set(want)
+    need = set(want)
+    for st in reversed(STAGES):
+        if st.name in want:
+            need.update(st.writes)
+        if st.name in want or need.intersection(st.writes):
+            need.add(st.name)
+            if not given.keys() & set(st.writes):
+                need.update(st.reads)
+    return need
+
+
+def _downstream(i: int) -> list[str]:
+    """Every output computed (transitively) from stage ``i``'s outputs."""
+    stale, out = set(STAGES[i].writes), []
+    for st in STAGES[i + 1:]:
+        if stale.intersection(st.reads):
+            stale.update(st.writes)
+            out.extend(st.writes)
+    return out
+
+
+def _pin_settings(out_dir: str, sf_dir: str, settings: BuildSettings) -> bool:
+    """Record the build's identity on first use of ``out_dir``; on a
+    resume, refuse one that differs.  Returns whether it resumes."""
+    path = os.path.join(out_dir, "_build.json")
+    ident = json.loads(json.dumps(
+        {"sf_dir": os.path.abspath(sf_dir), "settings": asdict(settings)}))
+    if os.path.exists(path):
+        with open(path) as f:
+            held = json.load(f)
+        if held != ident:
+            raise ValueError(
+                f"{out_dir} holds the build of {held}; resuming it as "
+                f"{ident} would mix two builds")
+        return True
+    with open(path, "w") as f:
+        json.dump(ident, f)
+    return False
+
+
+def run_stages(spark: SparkSession, sf_dir: str, out_dir: str,
+               settings: BuildSettings, want: Iterable[str],
+               given: dict[str, DataFrame] | None = None) -> BuildResult:
+    """Compute (or resume) the stages that ``want`` needs in ``out_dir``.
+
+    Each needed output is checkpointed to parquet and read back; a stage
+    whose needed outputs all carry ``_SUCCESS`` is skipped, and one that
+    runs first deletes everything downstream of it.  ``given`` supplies
+    outputs in place of the stage that computes them.  Every stage that
+    ran appends ``{"stage", "seconds", ...}`` to ``metrics`` and to
+    ``metrics.jsonl``.
+    """
+    given = given or {}
+    os.makedirs(out_dir, exist_ok=True)
+    resumes = _pin_settings(out_dir, sf_dir, settings)
+    need = _select(want, given)
+    b = BuildResult(spark, sf_dir, out_dir, settings)
+    for i, st in enumerate(STAGES):
+        if st.name not in need:
+            continue
+        outs = [o for o in st.writes if o in need]
+        if resumes and outs and all(_done(b.path(o)) for o in outs):
+            b.frames.update({o: b.read(o) for o in outs})
+            continue
+        for o in _downstream(i):
+            shutil.rmtree(b.path(o), ignore_errors=True)
+        t0 = time.time()
+        res = ({o: given[o] for o in st.writes}
+               if given.keys() & set(st.writes) else st.fn(b))
+        for o in outs:
+            if o in res:
+                b.checkpoint(o, res[o])
+            else:
+                b.frames[o] = b.read(o)
+        b.metrics.append({
+            "stage": st.name, "seconds": round(time.time() - t0, 3),
+            **{k: v for k, v in res.items() if k not in st.writes},
+        })
+    # build-time persists are dead weight now: every output is a read-back
+    spark.catalog.clearCache()
     with open(os.path.join(out_dir, "metrics.jsonl"), "a") as f:
-        for m in metrics:
+        for m in b.metrics:
             f.write(json.dumps(m) + "\n")
-    proj.unpersist()
-    return BuildResult(out_dir=out_dir, catalog=catalog, metrics=metrics)
+    return b
+
+
+def build_gol(spark: SparkSession, sf_dir: str, out_dir: str,
+              settings: BuildSettings | None = None) -> BuildResult:
+    """Run (or resume) the full build; returns catalog + metrics."""
+    return run_stages(spark, sf_dir, out_dir,
+                      settings or BuildSettings.for_fixture(), EVERYTHING)

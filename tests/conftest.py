@@ -28,6 +28,20 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def built(spark, tmp_path_factory):
+    """One full build_gol at density 50, shared read-only by the
+    pipeline, query and archive tests: (BuildResult, persisted store)."""
+    from geodesk_gol_spark.config import BuildSettings
+    from geodesk_gol_spark.plans.pipeline import build_gol
+
+    out = str(tmp_path_factory.mktemp("gol_build"))
+    res = build_gol(spark, SF_DIR, out, BuildSettings.for_fixture(50))
+    store = spark.read.parquet(res.store_path()).persist()
+    store.count()
+    return res, store
+
+
+@pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
     for t in TABLES:

@@ -21,18 +21,6 @@ from geodesk_gol_spark.query.map import render_map, template_col
 from .conftest import SF_DIR
 
 
-@pytest.fixture(scope="module")
-def built(spark, tmp_path_factory):
-    from geodesk_gol_spark.config import BuildSettings
-    from geodesk_gol_spark.plans.pipeline import build_gol
-
-    out = str(tmp_path_factory.mktemp("gol_arch"))
-    res = build_gol(spark, SF_DIR, out, BuildSettings.for_fixture(50))
-    store = spark.read.parquet(res.store_path()).persist()
-    store.count()
-    return res, store
-
-
 def test_archive_roundtrip(spark, built, tmp_path):
     res, store = built
     path = str(tmp_path / "arch")

@@ -8,12 +8,17 @@ queries are structurally valid; invalid queries raise.
 from __future__ import annotations
 
 import os
+import re
+import shutil
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType
 
 from geodesk_gol_spark.config import BuildSettings
-from geodesk_gol_spark.plans.pipeline import build_gol
+from geodesk_gol_spark.plans import pipeline
+from geodesk_gol_spark.plans.pipeline import build_gol, run_stages
 from geodesk_gol_spark.query import formats
 from geodesk_gol_spark.query.goql import GoqlError, goql_to_column
 from geodesk_gol_spark.query.spatial import (
@@ -26,14 +31,20 @@ from geodesk_gol_spark.query.spatial import (
 
 from .conftest import SF_DIR
 
+ROOT = Path(__file__).resolve().parent.parent
 
-@pytest.fixture(scope="module")
-def built(spark, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("gol_build"))
-    res = build_gol(spark, SF_DIR, out, BuildSettings.for_fixture(50))
-    store = spark.read.parquet(res.store_path()).persist()
-    store.count()
-    return res, store
+
+def _sig(df):
+    """Order-insensitive row fingerprint: (rows, xor of row hashes)."""
+    cols = [
+        F.array_sort(F.map_entries(f.name)).alias(f.name)
+        if isinstance(f.dataType, MapType) else F.col(f.name)
+        for f in sorted(df.schema.fields, key=lambda f: f.name)
+    ]
+    return df.select(F.xxhash64(*cols).alias("rh")).select(
+        F.count(F.lit(1)).alias("n"),
+        F.expr("bit_xor(rh)").alias("h"),
+    ).collect()[0]
 
 
 def test_resume_skips_stages(spark, built):
@@ -77,24 +88,85 @@ def test_resume_after_midstage_crash(spark, built, tmp_path):
     stages = {m["stage"] for m in res2.metrics}
     assert stages == {"store", "check", "metrics"}
 
-    def sig(df):
-        from pyspark.sql.types import MapType
-
-        cols = [
-            F.array_sort(F.map_entries(f.name)).alias(f.name)
-            if isinstance(f.dataType, MapType) else F.col(f.name)
-            for f in sorted(df.schema.fields, key=lambda f: f.name)
-        ]
-        return df.select(F.xxhash64(*cols).alias("rh")).select(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(rh)").alias("h"),
-        ).collect()[0]
-
     redone = spark.read.parquet(res2.store_path())
-    assert sig(redone) == sig(store)
+    assert _sig(redone) == _sig(store)
     checks = next(m for m in res2.metrics if m["stage"] == "check")
     assert all(v == 0 for k, v in checks.items()
                if k not in ("stage", "seconds"))
+
+
+def test_resume_refuses_other_settings(spark, built):
+    """A resume under other BuildSettings raises, naming both, before
+    touching any output (it used to return the first build)."""
+    res, _ = built
+    before = sorted(os.listdir(res.out_dir))
+    with pytest.raises(ValueError) as e:
+        build_gol(spark, SF_DIR, res.out_dir, BuildSettings.for_fixture(500))
+    assert "'min_tile_density': 50," in str(e.value)
+    assert "'min_tile_density': 500," in str(e.value)
+    assert sorted(os.listdir(res.out_dir)) == before
+
+
+def test_rerun_stage_reruns_downstream(spark, built, tmp_path):
+    """A stage that re-runs re-runs everything downstream of it; the
+    store comes back value-identical."""
+    res, store = built
+    d = str(tmp_path / "recat")
+    shutil.copytree(res.out_dir, d)
+    os.remove(os.path.join(d, "tile_catalog", "_SUCCESS"))
+
+    res2 = build_gol(spark, SF_DIR, d, BuildSettings.for_fixture(50))
+    assert {m["stage"] for m in res2.metrics} == {
+        "catalog", "assignment", "rows", "validate", "store", "check",
+        "metrics",
+    }
+    assert _sig(spark.read.parquet(res2.store_path())) == _sig(store)
+
+
+def test_bench_selection_builds_only_what_it_reads(spark, built, tmp_path):
+    """bench.py's selection runs no validate/store stage and builds the
+    full build's rows and feature_tiles; only the graph wires them."""
+    import bench
+
+    res, _ = built
+    d = str(tmp_path / "bench_sel")
+    sel = run_stages(spark, SF_DIR, d, BuildSettings.for_fixture(50),
+                     want=bench.BUILD_OUTPUTS)
+    for name in ("tile_exports", "store", "lineage"):
+        assert not os.path.exists(os.path.join(d, name))
+    for name in ("rows", "feature_tiles"):
+        assert _sig(sel.frames[name]) == _sig(
+            spark.read.parquet(os.path.join(res.out_dir, name)))
+
+    call = re.compile(r"(?<!def )\b(assign_features|compile_feature_rows)\(")
+    calls = {"assign_features": [], "compile_feature_rows": []}
+    for p in ROOT.rglob("*.py"):
+        rel = p.relative_to(ROOT).as_posix()
+        if not rel.startswith(("perfbench/", "tests/", ".")):
+            for m in call.finditer(p.read_text()):
+                calls[m.group(1)].append(rel)
+    graph = ["geodesk_gol_spark/plans/pipeline.py"]
+    assert calls == {"assign_features": graph, "compile_feature_rows": graph}
+
+
+def test_failed_gate_build_removes_its_staging_dir(spark, tmp_path,
+                                                   monkeypatch):
+    """A stage failure in the gate's build propagates and removes the
+    staging dir (stale-cache pruning skips .tmp. dirs)."""
+    import dataclasses
+
+    from geodesk_gol_spark import gate
+
+    def boom(b):
+        raise RuntimeError("injected stage failure")
+
+    monkeypatch.setattr(pipeline, "STAGES", tuple(
+        dataclasses.replace(s, fn=boom) if s.name == "features" else s
+        for s in pipeline.STAGES))
+    monkeypatch.setattr(gate, "_cache_dir", lambda sf: tmp_path / "sf-fp")
+    with pytest.raises(RuntimeError, match="injected stage failure"):
+        gate._materialize(spark, SF_DIR)
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_lineage_table(built, spark):
@@ -135,7 +207,9 @@ def test_store_is_tile_range_clustered(built, spark):
         spark.read.parquet(res.store_path())
         .groupBy(F.input_file_name().alias("f"))
         .agg(F.min("tile_id").alias("lo"), F.max("tile_id").alias("hi"))
-        .orderBy("lo")
+        # ties on lo (a tile split across files) order by hi: Spark
+        # leaves the order of equal sort keys undefined
+        .orderBy("lo", "hi")
         .collect()
     )
     assert 0 < len(per_file) <= res.catalog.settings.shuffle_partitions

@@ -1,13 +1,16 @@
 """spark-submit entry point.
 
-Packages the engine and runs the full build + bench on a cluster:
+Packages the engine and runs the full GOL build (``build_gol``: every
+stage of the build graph, resumable in ``--out``) on a cluster:
 
     python tools/make_pyfiles_zip.py            # → dist/geodesk_gol_spark.zip
     spark-submit --py-files dist/geodesk_gol_spark.zip tools/submit.py \
         --sf-dir /data/sf1 --out /data/gol_out [--density 75000]
 
-On a real cluster the same partitioning applies: the pyramid/survivor
-frames broadcast; only member-resolution joins shuffle.
+Re-running with the same ``--out`` resumes that build; a different
+``--sf-dir`` or ``--density`` there raises ``ValueError`` (pick a new
+``--out``).  On a real cluster the same partitioning applies: the
+pyramid/survivor frames broadcast; only member-resolution joins shuffle.
 """
 
 from __future__ import annotations

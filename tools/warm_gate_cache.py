@@ -2,7 +2,8 @@
 sweep.
 
 The driver calls each ``queries()`` entry independently; the first call at
-a scale factor triggers the full staged build (gate._materialize).  Warming
+a scale factor runs the full build stage graph (``gate.ctx`` →
+``plans.pipeline.build_gol``) into the cache.  Warming
 the cache ahead of time makes every driver call a fast parquet load —
 protection against per-query driver timeouts.
 
@@ -47,9 +48,8 @@ def main() -> None:
         gate.ctx(spark, sf)
         print(f"warm ctx {sf}: {time.time() - t0:.1f}s → {gate._cache_dir(sf)}")
         # run EVERY gate query once: triggers the derived disk memos the
-        # ctx warm alone does not (a8build pipeline run + lineage,
-        # archive save/load, .osc docs) so the driver's sweep pays no
-        # cold build anywhere
+        # ctx warm alone does not (PBF build, archive save/load, .osc
+        # docs) so the gate sweep pays no cold build anywhere
         for name, fn in entrymod.queries().items():
             t1 = time.time()
             try:
