@@ -871,13 +871,11 @@ def knn_bruteforce(
     points:  (id, x, y);  queries: (q_id, qx, qy)
     Output: (q_id, neighbor_id, rank)
 
-    This is the O(N×Q) exactness oracle and the escalation-residue
-    fallback — not a scale path.  To keep callers from feeding it a
-    large query set by accident (the plan is a deliberate broadcast
-    cartesian), it refuses query sets above ``max_queries`` rows;
-    knn_cell_rings is the scale path, and passes ``max_queries=None``
-    for its residue (already counted, provably the escalation
-    remainder).
+    This is the O(N×Q) exactness oracle — not a scale path.  To keep
+    callers from feeding it a large query set by accident (the plan is
+    a deliberate broadcast cartesian), it refuses query sets above
+    ``max_queries`` rows (``None`` lifts the cap); knn_cell_rings is
+    the scale path.
     """
     from pyspark.sql import Window
 
@@ -901,115 +899,76 @@ def knn_bruteforce(
     )
 
 
-def _ring_pass(pts: DataFrame, queries: DataFrame, k: int, ring: int,
-               cell_bits: int) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """One candidate-ring pass → (ranked top-k, q_ids provably final,
-    the pass's PERSISTED topk frame — the caller owns its unpersist).
-
-    ``pts`` must already carry base-grid columns (cc, cr) at
-    ``cell_bits`` — computed ONCE by the caller and shared by every
-    escalation pass (the ring doubles by coarsening the QUERY side:
-    a 2x ring at the base grid = the same cells expressed as offsets,
-    so only the broadcast offset table grows, never the points scan).
-    """
-    from pyspark.sql import Window
-
-    cell = 1 << cell_bits
-    offs = [(dc, dr) for dc in range(-ring, ring + 1)
-            for dr in range(-ring, ring + 1)]
-    off_df = queries.sparkSession.createDataFrame(offs, "dc int, dr int")
-    # per-query EXACT certainty margin: the distance from the query
-    # point to the nearest edge of its ring block.  The conservative
-    # constant (ring-1)*cell assumes the query sits in its cell's worst
-    # corner; the exact margin averages ~ring+0.5 cells, certifying far
-    # more queries per pass (measured at sf0.1: 202 → ~110 escapees
-    # after pass 0, and it's what lets sparse-tail passes be skipped).
-    # qc/qr stay LONG: the edge products (qc + ring + 1) * cell reach
-    # past 2^31 for coordinates near the world's upper edge, and
-    # Spark 4's ANSI mode makes an int32 overflow a job-killing
-    # ArithmeticException, not a wrap (same promotion around_filter
-    # defends against)
-    qm = (
-        queries.withColumn("qc", F.floor(F.col("qx") / cell))
-        .withColumn("qr", F.floor(F.col("qy") / cell))
-        .withColumn(
-            "margin",
-            F.least(
-                F.col("qx") - (F.col("qc") - ring) * cell,
-                (F.col("qc") + ring + 1) * cell - F.col("qx"),
-                F.col("qy") - (F.col("qr") - ring) * cell,
-                (F.col("qr") + ring + 1) * cell - F.col("qy"),
-            ),
-        )
-    )
-    qcells = (
-        qm.join(F.broadcast(off_df))
-        .select("q_id", "qx", "qy", "margin",
-                (F.col("qc") + F.col("dc")).alias("cc"),
-                (F.col("qr") + F.col("dr")).alias("cr"))
-    )
-    cand = pts.join(F.broadcast(qcells), ["cc", "cr"])
-    d = (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) + (
-        F.col("y") - F.col("qy")
-    ) * (F.col("y") - F.col("qy"))
-    w = Window.partitionBy("q_id").orderBy(F.col("dist"), F.col("id"))
-    topk = (
-        cand.withColumn("dist", d)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .persist()
-    )
-    ranked = topk.select(
-        "q_id", F.col("id").alias("neighbor_id"), "rank", "dist"
-    )
-    # caller owns topk's cache: unpersist once its pass is materialized
-    # final iff k candidates found AND k-th distance STRICTLY within the
-    # margin: a point on the ring-block boundary outside the block sits
-    # at exactly margin², and the brute oracle breaks that tie by id —
-    # certifying at <= could lock in a top-k that never saw it
-    sure = (
-        topk.groupBy("q_id")
-        .agg(F.max("rank").alias("got"), F.max("dist").alias("kth"),
-             F.first("margin").alias("m"))
-        .filter((F.col("got") == k) & (F.col("kth") < F.col("m") * F.col("m")))
-        .select("q_id")
-    )
-    return ranked, sure, topk
+def _count_grid(points: DataFrame, bits: int) -> dict:
+    """{(c, r): points} over the non-empty cells of edge 2^bits — one
+    aggregate, brought to the driver through Arrow."""
+    g = points.groupBy(
+        F.shiftright("x", bits).alias("c"), F.shiftright("y", bits).alias("r")
+    ).agg(F.count(F.lit(1)).alias("n")).toPandas()
+    return dict(zip(zip(g["c"].tolist(), g["r"].tolist()), g["n"].tolist()))
 
 
-def auto_cell_bits(points: DataFrame,
-                   lo: int = 12, hi: int = 22,
-                   ref_bits: int = 15, mu_target: float = 160.0) -> int:
-    """Density-adaptive candidate-grid size.
+def _coarsen(cells: dict) -> dict:
+    """The same counts on a grid of twice the cell edge (an arithmetic
+    shift is floor division, negatives included)."""
+    out: dict = {}
+    for (c, r), n in cells.items():
+        key = (c >> 1, r >> 1)
+        out[key] = out.get(key, 0) + n
+    return out
 
-    The grid must balance two failure modes: too fine and sparse-area
-    queries escalate (extra passes, ultimately brute); too coarse and
-    dense-cluster queries drag huge candidate sets through the rank
-    window.  The statistic that predicts both is the occupancy the
-    TYPICAL POINT sees — the point-weighted mean cell count
-    μ_seen = Σc²/n (a plain mean is dominated by empty countryside and
-    overshoots by several bits on clustered data; measured: it picked
-    bits=21 where the empirical optimum at sf0.1 was 15-17).  One
-    aggregate at a reference grid, then local-uniform scaling
-    μ(b) = μ_seen·4^(b-ref) solved for the per-cell target
-    (``mu_target`` ≈ 4000-candidate ring blocks — empirically flat-
-    optimal across 10× density range).  Exactness never depends on the
-    choice; only how often the distance-bound escalation fires."""
+
+def auto_cell_bits(grid: dict, ref_bits: int = 15, lo: int = 12,
+                   mu_target: float = 64.0) -> int:
+    """Density-adaptive finest candidate grid, from the count grid at
+    ``ref_bits`` and never coarser than it (the count-grid ladder
+    coarsens per query).
+
+    The statistic is the occupancy the TYPICAL POINT sees — the
+    point-weighted mean cell count μ_seen = Σc²/n (a plain mean is
+    dominated by empty countryside on clustered data).  Local-uniform
+    scaling μ(b) = μ_seen·4^(b-ref) is solved for ``mu_target``, so
+    only a corpus whose typical point shares its reference cell with
+    more than ~2·mu_target others pays a second, finer aggregate (two
+    more Spark jobs) to keep a clustered query's ring block at a few
+    thousand candidates.  At sf0.1 (μ_seen 10.9) the reference grid
+    itself measured faster than 2^14 or 2^13.  Exactness never depends
+    on the choice; only the candidate volume does."""
     import math
 
-    cell = 1 << ref_bits
-    st = (
-        points.groupBy(
-            F.floor(F.col("x") / cell).alias("c"),
-            F.floor(F.col("y") / cell).alias("r"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.sum("n").alias("s1"), F.sum(F.col("n") * F.col("n")).alias("s2"))
-        .collect()[0]
-    )
-    mu_seen = max(float(st["s2"]) / max(float(st["s1"]), 1.0), 0.25)
+    n = sum(grid.values())
+    mu_seen = max(sum(c * c for c in grid.values()) / max(n, 1), 0.25)
     bits = ref_bits + 0.5 * math.log2(mu_target / mu_seen)
-    return min(max(int(round(bits)), lo), hi)
+    return min(max(int(round(bits)), lo), ref_bits)
+
+
+def _radius(grid: dict, qc: int, qr: int, need: int,
+            limit: int | None) -> int | None:
+    """Smallest r (≤ ``limit``; unbounded if None) whose (2r+1)² block
+    around cell (qc, qr) holds ≥ ``need`` points, else None."""
+    if limit is None:
+        # the top grid has a handful of cells: rank them by Chebyshev ring
+        acc = r = 0
+        for r, n in sorted((max(abs(c - qc), abs(w - qr)), n)
+                           for (c, w), n in grid.items()):
+            acc += n
+            if acc >= need:
+                break
+        return r
+    for r in range(limit + 1):
+        if sum(grid.get((qc + dc, qr + dr), 0)
+               for dc in range(-r, r + 1) for dr in range(-r, r + 1)) >= need:
+            return r
+    return None
+
+
+def _block(grid: dict, qc: int, qr: int, ring: int) -> list:
+    """The non-empty cells of the (2·ring+1)² block around (qc, qr)."""
+    if (2 * ring + 1) ** 2 > len(grid):
+        return [(c, r) for c, r in grid
+                if abs(c - qc) <= ring and abs(r - qr) <= ring]
+    return [(qc + dc, qr + dr) for dc in range(-ring, ring + 1)
+            for dr in range(-ring, ring + 1) if (qc + dc, qr + dr) in grid]
 
 
 def knn_cell_rings(
@@ -1018,102 +977,81 @@ def knn_cell_rings(
     k: int = 5,
     ring: int = 2,
     cell_bits: int | None = None,
-    escalations: int = 2,
 ) -> DataFrame:
-    """Scale path: candidate generation by cell-neighbor rings, exact
-    re-rank, provably exact via distance-bound ring ESCALATION.
+    """Scale path: exact kNN in ONE candidate-and-rank pass, each
+    query's ring certified on the driver from a count grid.
 
-    Candidates = points whose candidate-grid cell (edge ``2^cell_bits``
-    world units — much finer than the pyramid's zoom-12 cells, so dense
-    clusters don't explode the candidate set) is within ``ring`` cells of
-    the query's cell: a (2r+1)² broadcast explode — the cell-neighbor-ring
-    join of the north rule.
+    Candidates = points whose grid cell lies in a block of cells around
+    the query's cell — the cell-neighbor-ring join of the north rule, as
+    one broadcast equi-join on (level, cell) and one (dist, id) rank
+    window.
 
-    Exactness guarantee: any point outside the ring block is at distance
-    >= the query's margin (distance to the nearest block edge), so a
-    query's ring result is final iff it found k candidates AND its k-th
-    distance is STRICTLY below margin² (boundary ties could lose to an
-    unseen point with a smaller id under the brute tiebreak).  Unresolved queries ESCALATE to a 64×-coarser
-    grid (same ring, cell edge ×64 per pass, capped at 2^29 so margin²
-    stays in int64): the certified block — and with it the margin —
-    grows 64× per pass, while the candidate count grows only with the
-    query's LOCAL density, which is exactly what is small around a
-    query that failed the finer pass.  (Ring-doubling at fixed bits was
-    measured to certify ZERO extra queries at sf0.1, and so was one 8×
-    coarsening — the escapees sit in a 1e6-unit-spaced sparse band
-    whose 5th neighbor is ~dozens of base cells away; 64× per pass
-    reaches them in one escalation instead of paying a certify-nobody
-    intermediate pass of pure fixed latency.)
-    Only queries still open after ``escalations`` coarsenings take the
-    brute-force path, and that set is tiny by construction.
+    Certification: one aggregate counts the points per cell of edge
+    ``2^cell_bits`` and brings the counts to the driver, which derives
+    the coarser levels (cell edge ×2 per level, up to 2^29) by shifting
+    the keys.  Per query, walking from the finest level up, r₁ is the
+    smallest radius whose (2r₁+1)² block around the query's cell holds
+    ≥ k points.  Each of those lies STRICTLY within √2·(r₁+1)·cell of
+    the query, so the k-th distance does too, while every point outside
+    a ring-R block lies more than R·cell away.  R = max(``ring``,
+    ⌊√2·(r₁+1)⌋+1) thus certifies the top k with strict inequality: no
+    boundary tie hides outside the block, so the (dist, id) tiebreak
+    matches ``knn_bruteforce``.  A query takes the finest level with
+    r₁ ≤ 1 (R ≤ 3: at most 49 cells); the top level accepts any r₁.  A
+    points frame with fewer than k points certifies on all of them, so
+    every point comes back ranked.
 
-    ``cell_bits=None`` (default) sizes the grid from the corpus density
-    (see auto_cell_bits) — one bounded stats aggregate.
+    ``cell_bits=None`` (default) picks the finest grid from the corpus
+    density (see auto_cell_bits); its 2^15 reference aggregate is the
+    count grid unless the corpus is dense enough to need a finer one.
+    The result (q_id, neighbor_id, rank, dist) is lazy.
     """
+    from math import isqrt
+
+    from pyspark.sql import Window
+    from pyspark.sql.types import IntegerType, LongType, StructType
+
+    grid = _count_grid(points, 15 if cell_bits is None else cell_bits)
     if cell_bits is None:
-        cell_bits = auto_cell_bits(points)
-    cell = 1 << cell_bits
-    base = points.withColumn(
-        "cc", F.floor(F.col("x") / cell).cast("int")
-    ).withColumn("cr", F.floor(F.col("y") / cell).cast("int")).persist()
-    remaining = queries
-    parts: list[DataFrame] = []
-    topks: list[DataFrame] = []
-    try:
-        out = _knn_ring_passes(
-            base, points, remaining, parts, topks, k, ring, cell_bits,
-            escalations)
-    finally:
-        # release pass caches even when an action throws mid-query — a
-        # long-lived session must not accumulate a full point scan plus
-        # one topk frame per completed pass on every failed kNN call
-        base.unpersist()
-        for t in topks:
-            t.unpersist()
-    return out
+        cell_bits = auto_cell_bits(grid)
+        if cell_bits < 15:
+            grid = _count_grid(points, cell_bits)
+    top = max(cell_bits, 29)
+    levels = [grid]  # levels[i]: counts at cell_bits + i, built on demand
+    need = min(k, sum(grid.values()))
 
+    rows = []
+    for qid, qx, qy in queries.select("q_id", "qx", "qy").collect():
+        for b in range(cell_bits, top + 1):
+            if len(levels) <= b - cell_bits:
+                levels.append(_coarsen(levels[-1]))
+            g, qc, qr = levels[b - cell_bits], qx >> b, qy >> b
+            r1 = _radius(g, qc, qr, need, None if b == top else 1)
+            if r1 is not None:
+                break
+        r = max(ring, isqrt(2 * (r1 + 1) ** 2) + 1)
+        rows += [(qid, qx, qy, b, c, w) for c, w in _block(g, qc, qr, r)]
+    # no per-row schema check: the rows are built above from ints, and
+    # the check dominated createDataFrame for sf0.1's 25k rows
+    qcells = points.sparkSession.createDataFrame(rows, StructType(
+        [queries.schema[c] for c in ("q_id", "qx", "qy")]
+    ).add("lvl", IntegerType()).add("cc", LongType()).add("cr", LongType()),
+        verifySchema=False)
 
-def _knn_ring_passes(base, points, remaining, parts, topks, k, ring,
-                     cell_bits, escalations) -> DataFrame:
-    prev_shift = None
-    for i in range(escalations + 1):
-        # coarsen 64× per pass: arithmetic shift of the persisted base
-        # cells == floor division (holds for negatives), so every pass
-        # is a narrow projection over ONE cached point scan.  64× (not
-        # 8×) because escapees sit in SPARSE regions by construction —
-        # their kth neighbor is many base cells away, and the measured
-        # 8× step certified ZERO extra queries at sf0.1 (106 → 106 → 0:
-        # the middle pass was pure fixed-latency waste).  The shift is
-        # capped so the cell edge stays ≤ 2^29: margin ≤ 3·2^29, so
-        # margin² ≤ 2.6e18 < 2^63 — no ANSI overflow even for
-        # caller-chosen cell_bits near the world size.
-        shift = min(6 * i, max(0, 29 - cell_bits))
-        if shift == prev_shift:
-            break  # grid cannot coarsen further — residue goes brute
-        prev_shift = shift
-        pts = base if shift == 0 else base.withColumn(
-            "cc", F.shiftright("cc", shift)
-        ).withColumn("cr", F.shiftright("cr", shift))
-        ranked, sure, topk = _ring_pass(pts, remaining, k, ring,
-                                        cell_bits + shift)
-        parts.append(ranked.join(sure, "q_id", "left_semi"))
-        topks.append(topk)
-        remaining = remaining.join(sure, "q_id", "left_anti").localCheckpoint()
-        n_rem = remaining.count()  # tiny checkpointed control frame
-        if n_rem == 0:
-            remaining = None
-            break
-        # NO early stall-break: with 8× coarsening a pass that certifies
-        # nobody is routinely followed by one that certifies everybody
-        # (measured at sf0.1: 106 → 106 → 0), and a wasted pass costs
-        # ~1/4 of the brute fallback it would trigger
-    if remaining is not None:
-        parts.append(knn_bruteforce(points, remaining, k, max_queries=None))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # ONE eager localCheckpoint of the final (small: k rows per query)
-    # result reuses every pass's still-cached rank frame; the caller's
-    # finally block then releases all pass caches (per-pass eager
-    # materialization was measured to cost 1.5-2× the whole query)
-    return out.localCheckpoint()
+    # each point once per level that some query uses
+    pts = points.select("id", "x", "y", F.explode(F.array(*[
+        F.struct(F.lit(b).alias("lvl"), F.shiftright("x", b).alias("cc"),
+                 F.shiftright("y", b).alias("cr"))
+        for b in sorted({row[3] for row in rows}) or [cell_bits]])).alias("g"))
+    cand = pts.select("id", "x", "y", "g.*").join(
+        F.broadcast(qcells), ["lvl", "cc", "cr"])
+    d = (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) + (
+        F.col("y") - F.col("qy")
+    ) * (F.col("y") - F.col("qy"))
+    w = Window.partitionBy("q_id").orderBy(F.col("dist"), F.col("id"))
+    return (
+        cand.withColumn("dist", d)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", F.col("id").alias("neighbor_id"), "rank", "dist")
+    )

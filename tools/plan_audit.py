@@ -14,10 +14,13 @@ Usage: python tools/plan_audit.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+# this checkout's engine, wherever the checkout lives
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geodesk_gol_spark.session import get_spark  # noqa: E402
 

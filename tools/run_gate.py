@@ -14,7 +14,9 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# this checkout's engine, wherever the checkout lives
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from geodesk_gol_spark.session import get_spark  # noqa: E402

@@ -16,11 +16,14 @@ package source, so any later edit invalidates it):
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# this checkout's engine, wherever the checkout lives
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geodesk_gol_spark import gate  # noqa: E402
 from geodesk_gol_spark.session import get_spark  # noqa: E402
