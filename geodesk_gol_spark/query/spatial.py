@@ -861,10 +861,10 @@ def around_filter(
 # kNN (north-rule extension; FIXTURES.md §5)
 # ---------------------------------------------------------------------------
 
-def knn_bruteforce(
-    points: DataFrame, queries: DataFrame, k: int = 5,
-    max_queries: int | None = 4096,
-) -> DataFrame:
+_BRUTE_MAX_QUERIES = 4096  # the oracle's input check
+
+
+def knn_bruteforce(points: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact kNN: broadcast the (small) query set, rank by squared
     integer distance with deterministic (dist, id) tiebreak.
 
@@ -874,18 +874,15 @@ def knn_bruteforce(
     This is the O(N×Q) exactness oracle — not a scale path.  To keep
     callers from feeding it a large query set by accident (the plan is
     a deliberate broadcast cartesian), it refuses query sets above
-    ``max_queries`` rows (``None`` lifts the cap); knn_cell_rings is
-    the scale path.
+    ``_BRUTE_MAX_QUERIES`` rows; knn_cell_rings is the scale path.
     """
     from pyspark.sql import Window
 
-    if max_queries is not None:
-        nq = queries.limit(max_queries + 1).count()
-        if nq > max_queries:
-            raise ValueError(
-                f"knn_bruteforce is the exactness oracle (O(points x "
-                f"queries) broadcast cartesian): got > {max_queries} "
-                f"query rows; use knn_cell_rings for large query sets")
+    if queries.limit(_BRUTE_MAX_QUERIES + 1).count() > _BRUTE_MAX_QUERIES:
+        raise ValueError(
+            f"knn_bruteforce is the exactness oracle (O(points x "
+            f"queries) broadcast cartesian): got > {_BRUTE_MAX_QUERIES} "
+            f"query rows; use knn_cell_rings for large query sets")
     j = points.join(F.broadcast(queries))
     d = (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) + (
         F.col("y") - F.col("qy")
@@ -918,44 +915,15 @@ def _coarsen(cells: dict) -> dict:
     return out
 
 
-def auto_cell_bits(grid: dict, ref_bits: int = 15, lo: int = 12,
-                   mu_target: float = 64.0) -> int:
-    """Density-adaptive finest candidate grid, from the count grid at
-    ``ref_bits`` and never coarser than it (the count-grid ladder
-    coarsens per query).
-
-    The statistic is the occupancy the TYPICAL POINT sees — the
-    point-weighted mean cell count μ_seen = Σc²/n (a plain mean is
-    dominated by empty countryside on clustered data).  Local-uniform
-    scaling μ(b) = μ_seen·4^(b-ref) is solved for ``mu_target``, so
-    only a corpus whose typical point shares its reference cell with
-    more than ~2·mu_target others pays a second, finer aggregate (two
-    more Spark jobs) to keep a clustered query's ring block at a few
-    thousand candidates.  At sf0.1 (μ_seen 10.9) the reference grid
-    itself measured faster than 2^14 or 2^13.  Exactness never depends
-    on the choice; only the candidate volume does."""
-    import math
-
-    n = sum(grid.values())
-    mu_seen = max(sum(c * c for c in grid.values()) / max(n, 1), 0.25)
-    bits = ref_bits + 0.5 * math.log2(mu_target / mu_seen)
-    return min(max(int(round(bits)), lo), ref_bits)
-
-
 def _radius(grid: dict, qc: int, qr: int, need: int,
             limit: int | None) -> int | None:
     """Smallest r (≤ ``limit``; unbounded if None) whose (2r+1)² block
-    around cell (qc, qr) holds ≥ ``need`` points, else None."""
-    if limit is None:
-        # the top grid has a handful of cells: rank them by Chebyshev ring
-        acc = r = 0
-        for r, n in sorted((max(abs(c - qc), abs(w - qr)), n)
-                           for (c, w), n in grid.items()):
-            acc += n
-            if acc >= need:
-                break
-        return r
-    for r in range(limit + 1):
+    around cell (qc, qr) holds ≥ ``need`` points, else None.  Unbounded
+    is only asked with need ≤ the grid's total, on the top level, whose
+    2^29 cells put the 31-bit world in a few cells per axis."""
+    from itertools import count
+
+    for r in count() if limit is None else range(limit + 1):
         if sum(grid.get((qc + dc, qr + dr), 0)
                for dc in range(-r, r + 1) for dr in range(-r, r + 1)) >= need:
             return r
@@ -964,9 +932,6 @@ def _radius(grid: dict, qc: int, qr: int, need: int,
 
 def _block(grid: dict, qc: int, qr: int, ring: int) -> list:
     """The non-empty cells of the (2·ring+1)² block around (qc, qr)."""
-    if (2 * ring + 1) ** 2 > len(grid):
-        return [(c, r) for c, r in grid
-                if abs(c - qc) <= ring and abs(r - qr) <= ring]
     return [(qc + dc, qr + dr) for dc in range(-ring, ring + 1)
             for dr in range(-ring, ring + 1) if (qc + dc, qr + dr) in grid]
 
@@ -976,7 +941,7 @@ def knn_cell_rings(
     queries: DataFrame,
     k: int = 5,
     ring: int = 2,
-    cell_bits: int | None = None,
+    cell_bits: int = 15,
 ) -> DataFrame:
     """Scale path: exact kNN in ONE candidate-and-rank pass, each
     query's ring certified on the driver from a count grid.
@@ -1001,21 +966,16 @@ def knn_cell_rings(
     points frame with fewer than k points certifies on all of them, so
     every point comes back ranked.
 
-    ``cell_bits=None`` (default) picks the finest grid from the corpus
-    density (see auto_cell_bits); its 2^15 reference aggregate is the
-    count grid unless the corpus is dense enough to need a finer one.
-    The result (q_id, neighbor_id, rank, dist) is lazy.
+    The default base grid, 2^15, measured fastest at sf0.1 (2^13 and
+    2^14 grew the driver grid for no gain); dense queries rank there,
+    sparse ones coarsen.  The result (q_id, neighbor_id, rank, dist) is lazy.
     """
     from math import isqrt
 
     from pyspark.sql import Window
     from pyspark.sql.types import IntegerType, LongType, StructType
 
-    grid = _count_grid(points, 15 if cell_bits is None else cell_bits)
-    if cell_bits is None:
-        cell_bits = auto_cell_bits(grid)
-        if cell_bits < 15:
-            grid = _count_grid(points, cell_bits)
+    grid = _count_grid(points, cell_bits)
     top = max(cell_bits, 29)
     levels = [grid]  # levels[i]: counts at cell_bits + i, built on demand
     need = min(k, sum(grid.values()))

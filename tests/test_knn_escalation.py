@@ -17,7 +17,7 @@ from geodesk_gol_spark.query.spatial import knn_bruteforce, knn_cell_rings
 @pytest.fixture(scope="module")
 def sparse(spark):
     # a dense clump near the origin + far-flung singletons: queries at the
-    # clump resolve in ring 1; queries in the void need escalation/fallback
+    # clump certify on the base grid; queries in the void on a coarser level
     cell = 1 << 15
     pts = [(i, 1000 + i * 37, 2000 + i * 53) for i in range(40)]
     pts += [(100 + j, 40 * cell + j * 11 * cell, 50 * cell + j * 13 * cell)
@@ -52,13 +52,12 @@ def test_rings_no_duplicate_results(sparse):
 
 
 def test_rings_near_world_edge(spark):
-    """Coordinates in the top third of the 31-bit world: the ring-block
-    edge products exceed int32, which ANSI mode turns into a job-killing
-    overflow unless the margin arithmetic stays in long (and the coarse
-    escalation passes multiply the hazard 8x per pass)."""
+    """Coordinates in the top third of the 31-bit world: the squared
+    distances exceed int32, which ANSI mode turns into a job-killing
+    overflow unless the distance arithmetic stays in long."""
     top = (1 << 31) - 1
     pts = [(i, top - 1000 - i * 37, top - 2000 - i * 53) for i in range(30)]
-    pts += [(200, 5, 7)]  # far corner so escalation has somewhere to look
+    pts += [(200, 5, 7)]  # far corner: its query certifies on the top level
     points = spark.createDataFrame(pts, "id long, x long, y long")
     qs = spark.createDataFrame(
         [(0, top - 1500, top - 2500), (1, 10, 10)],
@@ -72,7 +71,7 @@ def test_rings_near_world_edge(spark):
 
 
 def test_bruteforce_refuses_large_query_set(spark):
-    """The brute cartesian is the oracle/residue path only: a query set
+    """The brute cartesian is the exactness oracle only: a query set
     above the cap raises instead of silently planning O(N x Q)."""
     import pytest as _pytest
 
@@ -81,7 +80,7 @@ def test_bruteforce_refuses_large_query_set(spark):
         "id AS q_id", "id AS qx", "id AS qy")
     with _pytest.raises(ValueError, match="knn_cell_rings"):
         knn_bruteforce(pts, qs, k=2)
-    # and the escape hatch for the rings residue still works
+    # a small query set still runs
     assert knn_bruteforce(pts, qs.limit(3), k=2).count() == 6
 
 
