@@ -11,7 +11,7 @@ lower ``min_tile_density`` so the pyramid actually splits/merges on
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 # Zoom subset used throughout (parent step = 3 → 64 children), matching the
@@ -43,12 +43,6 @@ class BuildSettings:
     max_tiles: int = 65_535          # reference default (BuildSettings.h:162)
     zoom_levels: tuple[int, ...] = ZOOM_LEVELS
     rtree_branch_size: int = 16      # Hilbert leaf run (BuildSettings.h:166)
-    shuffle_partitions: int = 32
-    # store-write checkpoint granularity: contiguous tile-id ranges per
-    # independent commit (reference putTile transactions, batched —
-    # Compiler.cpp:960-976); bounds lost work on a killed build without
-    # one-commit-per-tile object-store churn
-    store_batches: int = 8
 
     @staticmethod
     def for_fixture(density: int = 500, max_tiles: int = 65_535) -> "BuildSettings":

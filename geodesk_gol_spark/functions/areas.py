@@ -26,7 +26,7 @@ no UDF).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # The reference's DEFAULT rule table, verbatim
@@ -110,14 +110,3 @@ def relation_is_area(tags: str = "tags") -> Column:
     seen_definite = F.col(tags).getItem("type").isNotNull()
     definite = _rule_match(tags, "type", "only", ("multipolygon", "boundary"))
     return F.when(seen_definite, definite).otherwise(_general_area(tags))
-
-
-def area_flags(ways: DataFrame, relations: DataFrame) -> DataFrame:
-    """(typed_id, is_area) for ways and relations (nodes are never areas)."""
-    w = ways.select(
-        (F.col("id") * 4 + 1).alias("typed_id"), way_is_area().alias("is_area")
-    )
-    r = relations.select(
-        (F.col("id") * 4 + 2).alias("typed_id"), relation_is_area().alias("is_area")
-    )
-    return w.unionByName(r)

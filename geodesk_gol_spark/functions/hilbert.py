@@ -50,8 +50,3 @@ def hilbert_xy2d(x: np.ndarray, y: np.ndarray, order: int = ORDER) -> np.ndarray
 @F.pandas_udf(LongType())
 def hilbert_udf(x: pd.Series, y: pd.Series) -> pd.Series:
     return pd.Series(hilbert_xy2d(x.to_numpy(), y.to_numpy()))
-
-
-def hilbert_col(x_within_tile: str, y_within_tile: str):
-    """Column: Hilbert distance of (x, y) already scaled to [0, 2^ORDER)."""
-    return hilbert_udf(F.col(x_within_tile), F.col(y_within_tile))

@@ -1693,19 +1693,6 @@ def _q_window_agg_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mldf.window_agg(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
-def _sql_query_planes(template, table: str, base: int = 100,
-                      kw: str = "planes"):
-    """Like _sql_query but collects 8 designated vectors (LSH planes at
-    base=100, IVF centroids at base=200) first and passes them as the
-    template's literal-inline argument."""
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        vecs = _plane_vectors(spark, sf_dir, 8, base)
-        v = _view(spark, sf_dir, table)
-        return spark.sql(template(v, "spark", **{kw: vecs}))
-
-    return run
-
-
 def _q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the streaming incremental-dedup pipeline over a 3-chunk,
     doc_id-ordered staging of the documents table (memoized via the

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..plans.pyramid import TileCatalog
 from ..query.spatial import tiles_for_bbox
+from .compile_tiles import write_store
 
 MANIFEST = "manifest.json"
 
@@ -81,18 +82,9 @@ def save_tiles(
             sel = store.join(F.broadcast(hit_df), "tile_id", "left_semi")
     else:
         sel = store
-    # same layout as the store (compile_tiles.write_store): contiguous
-    # tile_id ranges per file + row-group stats pruning — NOT
-    # partitionBy("tile_id"), which at the reference's 65 535 tiles
-    # explodes into 65k directories of tiny files on object storage.
-    # Schema (column order/types) survives the round-trip unchanged.
-    n = max(1, sel.sparkSession.sparkContext.defaultParallelism)
-    (
-        sel.repartitionByRange(n, "tile_id")
-        .sortWithinPartitions("tile_id")
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "tiles"))
-    )
+    # the store's own writer and layout: contiguous tile ranges per file
+    # + row-group stats pruning (schema survives the round-trip)
+    write_store(sel, os.path.join(path, "tiles"))
     files = sorted(
         f for f in os.listdir(os.path.join(path, "tiles"))
         if f.endswith(".parquet")

@@ -6,14 +6,22 @@ writes one binary blob per tile under a store transaction
 (src/build/compile/Compiler.cpp:831-886,960-976).  TES serialization sorts
 features by (type, id) for determinism (src/tile/tes/TesWriter.h:25-46).
 
-Spark re-expression: the "store" is a parquet dataset partitioned by
-``tile_id`` (partition pruning ≙ the reference's tile-index walk);
-``sortWithinPartitions(tile_id, hilbert, ftype, id)`` gives the same
-row-group spatial locality the reference gets from its R-tree leaf packing,
-with (ftype, id) as the deterministic tiebreak.
+Spark re-expression: the "store" is a flat parquet dataset whose files
+are range-clustered on (tile_id, Hilbert prefix), each file's range
+planned on the driver from row counts (row-group min/max pruning on
+tile_id ≙ the reference's tile-index walk); each file is sorted by
+(tile_id, hilbert, ftype, id), which gives the row-group spatial
+locality the reference gets from its R-tree leaf packing, with
+(ftype, id) as the deterministic tiebreak.
 """
 
 from __future__ import annotations
+
+import glob
+import json
+import os
+import shutil
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -103,192 +111,177 @@ def compile_feature_rows(
     return with_tile_local_hilbert(rows)
 
 
-def write_store(rows: DataFrame, path: str, partitions: int | None = None) -> None:
-    """S4: write the tile store — range-clustered by tile_id.
+# rows per independent store commit: a killed write redoes only the
+# batches it had not committed.  Every input here (sf0.1 included) is
+# one batch.
+BATCH_ROWS = 1 << 20
+_LAST_TILE = (1 << 31) - 1
+# range key: tile_id, then the top 4 bits of the tile-local Hilbert key
+_KEY = f"(CAST(tile_id AS BIGINT) * 16 + shiftright(hilbert, {2 * ORDER - 4}))"
+_SORT = ("tile_id", "hilbert", "ftype", "id")
 
-    NOT ``partitionBy("tile_id")``: at the reference's 65 535 tiles ×
-    shuffle parallelism that layout explodes into millions of small files
-    (a named object-store killer).  Instead tile_id is a SORT/CLUSTER
-    key: ``repartitionByRange`` gives each output file a contiguous
-    tile-id range, ``sortWithinPartitions`` keeps rows Hilbert-clustered
-    inside a tile, and tile queries prune via parquet row-group min/max
-    stats on tile_id — the same effect as the reference's tile-index walk
-    with O(shuffle-partitions) files instead of O(tiles × partitions).
 
-    Hot-tile skew (dense urban cells): ranging on (tile_id, hilbert)
-    lets the range partitioner SPLIT a hot tile across output files at
-    Hilbert-curve boundaries — each split is still a contiguous spatial
-    run, so pruning and clustering survive, but no single writer task
-    owns a whole planet-scale city tile.
+def _slice(cum: int, c: int, total: int, n: int) -> int:
+    """Index of the equal-count slice (of ``n``) that holds the midpoint
+    of an item of ``c`` rows after ``cum`` rows."""
+    return min(n - 1, n * (2 * cum + c) // (2 * total))
+
+
+def _tile_rows(counts) -> dict[int, int]:
+    rows: dict[int, int] = {}
+    for key, c in sorted(counts):
+        rows[key >> 4] = rows.get(key >> 4, 0) + c
+    return rows
+
+
+def plan_store(counts, n_files: int, batch_rows: int) -> list[dict]:
+    """Plan the store's commit batches and files from ``(key, rows)``
+    counts, key = ``tile_id * 16 + Hilbert prefix``.
+
+    Batches: ``ceil(rows / batch_rows)`` contiguous tile ranges of
+    near-equal rows; a tile joins the batch whose equal-count slice
+    holds its midpoint.  Their ranges ``[tile_lo, tile_hi]`` (inclusive)
+    cover ``[0, 2^31-1]``.
+
+    Files: the sorted keys cut the same way into at most ``n_files``
+    contiguous ranges, and again at each batch edge.  A tile heavier
+    than one file's share thus spans several files at Hilbert-prefix
+    boundaries, each a contiguous spatial run.
+
+    Returns one record per batch: tile_lo, tile_hi and its files as
+    ``[index, key_lo, key_hi, rows]``.
     """
-    n = partitions or rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    (
-        rows.repartitionByRange(int(n), "tile_id", "hilbert", "ftype", "id")
-        .sortWithinPartitions("tile_id", "hilbert", "ftype", "id")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    counts = sorted(counts)
+    total = sum(c for _, c in counts)
+    n_batches = max(1, -(-total // batch_rows))
+    batch_of, cum = {}, 0
+    for t, c in _tile_rows(counts).items():
+        batch_of[t] = _slice(cum, c, total, n_batches)
+        cum += c
+    files: list[list] = []
+    cum = 0
+    for key, c in counts:
+        at = (batch_of[key >> 4], _slice(cum, c, total, n_files))
+        cum += c
+        if files and files[-1][0] == at:
+            files[-1][2:] = [key, files[-1][3] + c]
+        else:
+            files.append([at, key, key, c])
+    runs: list[list[list]] = []
+    for i, f in enumerate(files):
+        if i == 0 or f[0][0] != files[i - 1][0][0]:
+            runs.append([])
+        runs[-1].append(f)
+    for i, f in enumerate(files):
+        f[0] = i
+    los = [0] + [r[0][1] >> 4 for r in runs[1:]]
+    his = [lo - 1 for lo in los[1:]] + [_LAST_TILE]
+    return [{"tile_lo": lo, "tile_hi": hi, "files": r}
+            for lo, hi, r in zip(los, his, runs or [[]])]
 
 
-def plan_tile_batches(tiles, n_batches: int) -> list[tuple[int, int]]:
-    """Split the tile catalog into ≤n_batches contiguous tile-id ranges of
-    roughly equal node weight.
-
-    Weighting by the catalog's per-tile ``node_count`` (not tile count)
-    keeps batch checkpoints balanced under hot-tile skew: a dense urban
-    range gets fewer tiles per batch, a sparse ocean range more.  Ranges
-    are [lo, hi] inclusive and cover all of int32 tile-id space (the
-    first starts at 0, the last ends at 2^31-1) so every store row —
-    including ghosts in tiles the node catalog missed — lands in exactly
-    one batch.
-    """
-    t = tiles.sort_values("tile_id").reset_index(drop=True)
-    ids = t["tile_id"].astype("int64").tolist()
-    w = t["node_count"].astype("int64").clip(lower=1).tolist()
-    total = sum(w)
-    n_batches = max(1, min(int(n_batches), len(t)))
-    target = total / n_batches
-    # greedy: close a batch when it reaches target weight; close it EARLY
-    # when the next tile alone exceeds target, so a planet-scale hot tile
-    # gets its own batch instead of dragging its light neighbors along
-    bounds: list[int] = []  # exclusive upper tile_id of each cut
-    cur = 0.0
-    for i, wi in enumerate(w):
-        if len(bounds) >= n_batches - 1 or i == len(ids) - 1:
-            break
-        if cur > 0 and wi > target:
-            bounds.append(ids[i - 1] + 1)  # cut BEFORE the hot tile
-            cur = 0.0
-        cur += wi
-        if cur >= target and len(bounds) < n_batches - 1:
-            bounds.append(ids[i] + 1)
-            cur = 0.0
-    lo = 0
-    ranges = []
-    for b in bounds:
-        ranges.append((lo, b - 1))
-        lo = b
-    ranges.append((lo, (1 << 31) - 1))
-    return ranges
+def _write_batch(rows: DataFrame, bdir: str, batch: dict) -> None:
+    """Write one batch as ``<bdir>/part-<index>.parquet``, one file per
+    planned range, then commit it: its range record, then ``_SUCCESS``."""
+    files = batch["files"]
+    stage = os.path.join(bdir, "_spark")
+    sel = rows.filter(F.col("tile_id").between(batch["tile_lo"],
+                                               batch["tile_hi"]))
+    if files:
+        whens = " ".join(f"WHEN {_KEY} <= {hi} THEN {j}"
+                         for j, _, hi, _ in files)
+        (
+            sel.withColumn("_file", F.expr(f"CASE {whens} END"))
+            .repartition(len(files), "_file")
+            .sortWithinPartitions("_file", *_SORT)
+            .write.partitionBy("_file").parquet(stage)
+        )
+        for j, *_ in files:
+            [src] = glob.glob(os.path.join(stage, f"_file={j}", "*.parquet"))
+            os.rename(src, os.path.join(bdir, f"part-{j:05d}.parquet"))
+    else:  # no rows: one schema-only file keeps the store readable
+        sel.coalesce(1).write.parquet(stage)
+        [src] = glob.glob(os.path.join(stage, "*.parquet"))
+        os.rename(src, os.path.join(bdir, "part-00000.parquet"))
+    shutil.rmtree(stage)
+    with open(os.path.join(bdir, "_RANGE.json"), "w") as fh:
+        json.dump(batch, fh)
+    open(os.path.join(bdir, "_SUCCESS"), "w").close()
 
 
-def write_store_resumable(
-    rows: DataFrame,
-    path: str,
-    tiles,
-    partitions: int | None = None,
-    n_batches: int = 8,
-) -> list[dict]:
-    """S4 with per-tile-range checkpoints: the store is written as
-    independent contiguous tile-id batches, each a restartable
-    transaction, then finalized into the flat layout ``write_store``
-    produces.
+def _committed(bdir: str, batch: dict) -> bool:
+    """A batch is reused only if it committed the same planned ranges."""
+    if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
+        return False
+    try:
+        with open(os.path.join(bdir, "_RANGE.json")) as fh:
+            return json.load(fh) == batch
+    except (OSError, ValueError):
+        return False
+
+
+def write_store(rows: DataFrame, path: str) -> list[dict]:
+    """S4: write the tile store as range-clustered parquet files planned
+    from row counts.
+
+    NOT ``partitionBy("tile_id")``: at the reference's 65 535 tiles that
+    layout explodes into tiny files.  One aggregate counts rows per
+    (tile_id, Hilbert prefix) on the driver; :func:`plan_store` cuts the
+    keys into ``spark.sql.shuffle.partitions`` contiguous ranges, and
+    each range becomes exactly one file ``part-<index>.parquet``, sorted
+    by (tile_id, hilbert, ftype, id).  Tile queries prune via row-group
+    min/max stats on tile_id, like the reference's tile-index walk.  The
+    files depend only on the rows, not on how they are partitioned.
 
     The reference commits each compiled tile under a store transaction
-    (src/build/compile/Compiler.cpp:960-976 ``putTile``) inside a
-    restartable build phase (src/build/GolBuilder.cpp:61-115); the Spark
-    re-expression makes the checkpoint unit a contiguous tile-id RANGE
-    (a "pile set"), because one output transaction per tile (65 535
-    commits) is an object-store anti-pattern while ~dozens of
-    range-batches amortize job setup yet still bound lost work.
+    (src/build/compile/Compiler.cpp:960-976) inside a restartable build
+    phase.  Here the commit unit is a batch of files: each batch is
+    written under ``<path>/_batches/b<i>`` and committed by its range
+    record and ``_SUCCESS``; a re-run reuses every batch committed with
+    the same plan.  The batches are then hard-linked into ``<path>``,
+    ``<path>/_SUCCESS`` is stamped and ``_batches`` removed, so a
+    finished store holds only its parquet files and ``_SUCCESS``.  A
+    finished store at ``path`` is overwritten.
 
-    Mechanics:
-      * each batch b writes ``<path>/_batches/b<i>`` with Spark's own
-        ``_SUCCESS`` as the commit marker; a re-run skips committed
-        batches (kill the job mid-store and only in-flight batches redo)
-      * ``rows`` should be a parquet-backed scan range-partitioned on
-        tile_id (the pipeline checkpoints ``store_input`` that way) so
-        each batch's ``tile_id BETWEEN`` filter prunes row groups
-        instead of rescanning the corpus — total scan cost stays O(N)
-        across all batches
-      * finalize hardlinks batch part-files into ``<path>`` (same
-        layout/naming contract as ``write_store``; readers and DuckDB
-        glob see one flat parquet dir) and stamps ``<path>/_SUCCESS``;
-        a crash mid-finalize re-links idempotently on resume
-      * returns per-batch lineage dicts (batch, tile range, rows,
-        seconds, resumed) — row counts read from parquet footers, no
-        extra Spark job
-
-    Spark ignores ``_``-prefixed subdirs, so ``_batches`` stays inside
-    the store without affecting ``spark.read.parquet(path)``.
+    Returns the lineage records: one ``store_batch`` per batch (tile
+    range, rows, seconds, resumed) and one ``store_tile`` per tile (its
+    rows), both from the planning counts.
     """
-    import glob
-    import os
-    import shutil
-    import time
-
-    import pyarrow.parquet as pq
-
-    n = int(
-        partitions
-        or rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    ranges = plan_tile_batches(tiles, n_batches)
-    per_batch = max(2, n // len(ranges))
-    os.makedirs(path, exist_ok=True)
-    done_marker = os.path.join(path, "_SUCCESS")
-    lineage: list[dict] = []
-
-    def _batch_rows(bdir: str) -> int:
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(os.path.join(bdir, "*.parquet"))
-        )
-
-    import json
-
-    for i, (lo, hi) in enumerate(ranges):
+    n = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    counts = [(r[0], r[1]) for r in
+              rows.groupBy(F.expr(_KEY)).count().collect()]
+    batches = plan_store(counts, n, BATCH_ROWS)
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        shutil.rmtree(path)
+    lineage = []
+    for i, batch in enumerate(batches):
         bdir = os.path.join(path, "_batches", f"b{i:03d}")
-        range_file = os.path.join(bdir, "_RANGE.json")
-        resumed = os.path.exists(os.path.join(bdir, "_SUCCESS"))
-        if resumed:
-            # A committed batch is only reusable if it was planned over
-            # the SAME tile range — resuming after store_batches or the
-            # tile catalog changed would otherwise finalize a store
-            # with duplicated/missing tile ranges.
-            try:
-                with open(range_file) as fh:
-                    rec = json.load(fh)
-                resumed = rec.get("tile_lo") == lo and rec.get("tile_hi") == hi
-            except (OSError, ValueError):
-                resumed = False  # pre-manifest or corrupt batch: rewrite
         t0 = time.time()
+        resumed = _committed(bdir, batch)
         if not resumed:
-            if os.path.exists(bdir):
-                shutil.rmtree(bdir)  # partial or stale-range batch
-            (
-                rows.filter(F.col("tile_id").between(lo, hi))
-                .repartitionByRange(per_batch, "tile_id", "hilbert",
-                                    "ftype", "id")
-                .sortWithinPartitions("tile_id", "hilbert", "ftype", "id")
-                .write.mode("overwrite")
-                .parquet(bdir)
-            )
-            with open(range_file, "w") as fh:
-                json.dump({"tile_lo": lo, "tile_hi": hi,
-                           "n_batches": len(ranges)}, fh)
+            shutil.rmtree(bdir, ignore_errors=True)
+            os.makedirs(bdir)
+            _write_batch(rows, bdir, batch)
         lineage.append({
             "stage": "store_batch", "batch": i,
-            "tile_lo": lo, "tile_hi": hi,
-            "rows": _batch_rows(bdir),
-            "seconds": round(time.time() - t0, 3),
-            "resumed": resumed,
+            "tile_lo": batch["tile_lo"], "tile_hi": batch["tile_hi"],
+            "n_rows": sum(f[3] for f in batch["files"]),
+            "seconds": round(time.time() - t0, 3), "resumed": resumed,
         })
-
-    # finalize: hardlink every batch part into the flat store dir.
-    # Idempotent — a crash between link and marker just re-links.
-    if os.path.exists(done_marker):
-        os.remove(done_marker)
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        os.remove(f)  # stale links from a partial finalize
-    for i in range(len(ranges)):
-        bdir = os.path.join(path, "_batches", f"b{i:03d}")
-        for f in sorted(glob.glob(os.path.join(bdir, "*.parquet"))):
-            dst = os.path.join(path, f"b{i:03d}-{os.path.basename(f)}")
+    # finalize: clear a partial finalize, link the planned batches'
+    # files (not a stale plan's), stamp
+    for name in os.listdir(path):
+        if name != "_batches":
+            os.remove(os.path.join(path, name))
+    for i in range(len(batches)):
+        for f in glob.glob(os.path.join(path, "_batches", f"b{i:03d}",
+                                        "*.parquet")):
+            dst = os.path.join(path, os.path.basename(f))
             try:
                 os.link(f, dst)
             except OSError:
                 shutil.copy2(f, dst)
-    with open(done_marker, "w"):
-        pass
-    return lineage
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+    shutil.rmtree(os.path.join(path, "_batches"))
+    return lineage + [{"stage": "store_tile", "tile_id": t, "n_rows": c}
+                      for t, c in _tile_rows(counts).items()]

@@ -8,7 +8,7 @@ outputs each writes: docs; features (features_unified — per-kind frames
 are ``split_features`` of its read-back); catalog (proj, tile_catalog);
 assignment (the 8 ``assign_features`` frames, J1-J6); rows; validate
 (tile_exports J7, foreign_stubs J8, synthetic_tags A9); store
-(store_input, the Hilbert-clustered store, lineage: O1/O4/S4); check;
+(the Hilbert-clustered store and its lineage: O1/O4/S4); check;
 metrics (per-tile skew evidence from the lineage table).
 
 Callers select what they need and :func:`run_stages` runs only that:
@@ -33,6 +33,8 @@ from collections.abc import Callable, Iterable
 from dataclasses import asdict, dataclass, field
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,10 +43,17 @@ from ..functions.mercator import with_projection
 from ..operators import validate as V
 from ..operators.assign import assign_features
 from ..operators.check import check_store
-from ..operators.compile_tiles import compile_feature_rows, write_store_resumable
+from ..operators.compile_tiles import compile_feature_rows, write_store
 from ..plans.pyramid import TileCatalog, build_tile_catalog
 from ..sources.parser import parse_features_unified, split_features
 from ..sources.synth import synth_docs
+
+
+LINEAGE = pa.schema([
+    ("stage", pa.string()), ("batch", pa.int32()), ("tile_lo", pa.int64()),
+    ("tile_hi", pa.int64()), ("seconds", pa.float64()),
+    ("resumed", pa.bool_()), ("tile_id", pa.int32()), ("n_rows", pa.int64()),
+])
 
 
 def _done(path: str) -> bool:
@@ -85,11 +94,13 @@ class BuildResult:
         """Write one output to parquet and keep its read-back."""
         path = self.path(name)
         if isinstance(value, TileCatalog):
-            # pandas round-trip keeps the driver-side dtypes and order
+            value = pa.Table.from_pandas(value.tiles, preserve_index=False)
+        if isinstance(value, pa.Table):
+            # driver-side tables: one local file keeps their dtypes and
+            # order, and runs no Spark job
             shutil.rmtree(path, ignore_errors=True)
             os.makedirs(path)
-            value.tiles.to_parquet(os.path.join(path, "part-00000.parquet"),
-                                   index=False)
+            pq.write_table(value, os.path.join(path, "part-00000.parquet"))
             open(os.path.join(path, "_SUCCESS"), "w").close()
         else:
             value.write.mode("overwrite").parquet(path)
@@ -148,47 +159,16 @@ def _validate(b: BuildResult) -> dict:
 
 
 def _store(b: BuildResult) -> dict:
-    s = b.settings
-    # checkpoint the rows ONCE range-partitioned on tile_id so every
-    # batch filter below prunes row groups instead of rescanning the
-    # corpus (total batch scan cost stays O(N))
-    store_input = b.path("store_input")
-    if not _done(store_input):
-        b.frames["rows"].repartitionByRange(
-            int(s.shuffle_partitions), "tile_id", "hilbert"
-        ).write.mode("overwrite").parquet(store_input)
-    # per-tile-range checkpointed store write (north rule "resumable
-    # from per-tile checkpoints"): each contiguous tile-id batch is an
-    # independent transaction; a killed build redoes only uncommitted
-    # batches.  Per-batch lineage + per-tile row counts land in the
-    # ``lineage`` table (north rule "per-partition lineage").
-    batch_lineage = write_store_resumable(
-        b.spark.read.parquet(store_input), b.store_path(), b.catalog.tiles,
-        s.shuffle_partitions, n_batches=s.store_batches,
-    )
-    tile_rows = b.spark.read.parquet(b.store_path()).groupBy(
-        "tile_id").count().selectExpr(
-        "'store_tile' AS stage",
-        "CAST(NULL AS INT) AS batch",
-        "CAST(NULL AS LONG) AS tile_lo",
-        "CAST(NULL AS LONG) AS tile_hi",
-        "CAST(NULL AS DOUBLE) AS seconds",
-        "CAST(NULL AS BOOLEAN) AS resumed",
-        "CAST(tile_id AS INT) AS tile_id",
-        "CAST(count AS LONG) AS n_rows",
-    )
-    batch_rows = b.spark.createDataFrame(
-        [(x["stage"], x["batch"], x["tile_lo"], x["tile_hi"],
-          x["seconds"], x["resumed"], None, x["rows"])
-         for x in batch_lineage],
-        "stage string, batch int, tile_lo long, tile_hi long, "
-        "seconds double, resumed boolean, tile_id int, n_rows long",
-    )
-    tile_rows.unionByName(batch_rows).coalesce(1).write.mode(
-        "overwrite").parquet(b.path("lineage"))
+    # the one store writer: file ranges planned from row counts,
+    # committed in resumable batches (a killed build redoes only the
+    # uncommitted ones); its counts give the lineage table's per-batch
+    # and per-tile rows (north rule "per-partition lineage")
+    lineage = write_store(b.frames["rows"], b.store_path())
+    batches = [x for x in lineage if x["stage"] == "store_batch"]
     return {
-        "batches": len(batch_lineage),
-        "batches_resumed": sum(1 for x in batch_lineage if x["resumed"]),
+        "lineage": pa.Table.from_pylist(lineage, schema=LINEAGE),
+        "batches": len(batches),
+        "batches_resumed": sum(x["resumed"] for x in batches),
     }
 
 
@@ -236,8 +216,7 @@ STAGES: tuple[Stage, ...] = (
     Stage("validate", ("features_unified", "node_tiles", "way_homes",
                        "rel_homes", "points", "extents"),
           ("tile_exports", "foreign_stubs", "synthetic_tags"), _validate),
-    Stage("store", ("rows", "tile_catalog"),
-          ("store_input", "store", "lineage"), _store),
+    Stage("store", ("rows",), ("store", "lineage"), _store),
     Stage("check", ("store", "tile_catalog", "tile_exports", "foreign_stubs"),
           (), _check),
     Stage("metrics", ("lineage",), (), _metrics),

@@ -743,9 +743,3 @@ rext AS (
   SELECT * FROM crel_ext UNION ALL SELECT * FROM nrel_ext
   UNION ALL SELECT * FROM rrel_ext
 )"""
-
-
-def zoom_levels_table() -> str:
-    """Inline (z, d) lookup usable in both dialects via UNION ALL."""
-    rows = " UNION ALL ".join(f"SELECT {z} AS z, {d} AS d" for z, d in ZOOM_DIVISORS)
-    return f"({rows})"

@@ -41,16 +41,6 @@ def latest_changes(changes: DataFrame) -> DataFrame:
     )
 
 
-def search_affected_tiles(changes: DataFrame, feature_tiles: DataFrame) -> DataFrame:
-    """J10 SEARCH: every tile whose stored copy is affected by a change."""
-    return (
-        changes.select("typed_id")
-        .distinct()
-        .join(feature_tiles, "typed_id")
-        .select("typed_id", "tile_id", "is_ghost")
-    )
-
-
 def merge_changes(store_rows: DataFrame, changes: DataFrame) -> DataFrame:
     """Apply a change frame to store rows (MERGE INTO emulation).
 

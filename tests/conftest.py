@@ -64,3 +64,20 @@ def assert_frames_equal(spark_df, duck_df, keycols):
     d = d[sorted(d.columns)]
     assert len(s) == len(d), f"row count: spark={len(s)} duck={len(d)}"
     pd.testing.assert_frame_equal(s, d, check_dtype=False)
+
+
+def crash_store_write_after(monkeypatch, k):
+    """Make the store's batch write raise once ``k`` batches have
+    committed; returns the real batch write."""
+    from geodesk_gol_spark.operators import compile_tiles
+
+    real, done = compile_tiles._write_batch, []
+
+    def write_batch(rows, bdir, batch):
+        if len(done) == k:
+            raise RuntimeError("injected crash mid-write")
+        real(rows, bdir, batch)
+        done.append(bdir)
+
+    monkeypatch.setattr(compile_tiles, "_write_batch", write_batch)
+    return real

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
 from geodesk_gol_spark.config import BuildSettings
+from geodesk_gol_spark.operators import compile_tiles
 from geodesk_gol_spark.plans import pipeline
 from geodesk_gol_spark.plans.pipeline import build_gol, run_stages
 from geodesk_gol_spark.query import formats
@@ -29,7 +30,7 @@ from geodesk_gol_spark.query.spatial import (
     polygon_filter,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, crash_store_write_after
 
 ROOT = Path(__file__).resolve().parent.parent
 
@@ -62,37 +63,68 @@ def test_resume_skips_stages(spark, built):
                if k not in ("stage", "seconds"))
 
 
-def test_resume_after_midstage_crash(spark, built, tmp_path):
-    """Crash DURING the store stage (torn write: _SUCCESS missing, stray
-    part-files left behind), then resume: only the interrupted stage and
-    the always-on audit passes re-run, upstream stages are skipped, and
-    the rewritten store is value-identical to the undamaged one
+def test_resume_after_midstage_crash(spark, built, tmp_path, monkeypatch):
+    """Crash DURING the store write (after its first batch committed),
+    then resume: only the interrupted stage and the always-on audit
+    passes re-run, upstream stages are skipped, the committed batch is
+    reused, and the store is value-identical to the undamaged one
     (idempotent stage re-runs = the reference's startPhase model)."""
-    import shutil
-
     res, store = built
     crash_dir = str(tmp_path / "crashed")
     shutil.copytree(res.out_dir, crash_dir)
-    # simulate the torn write: finalize incomplete AND one tile-range
-    # batch uncommitted
-    sp = os.path.join(crash_dir, "store")
-    os.remove(os.path.join(sp, "_SUCCESS"))
-    parts = [f for f in os.listdir(sp) if f.endswith(".parquet")]
-    os.remove(os.path.join(sp, parts[0]))
-    batches = sorted(
-        d for d in os.listdir(os.path.join(sp, "_batches"))
-    )
-    os.remove(os.path.join(sp, "_batches", batches[-1], "_SUCCESS"))
+    for name in ("store", "lineage"):
+        shutil.rmtree(os.path.join(crash_dir, name))
+    # several batches, and a batch write that fails after the first
+    monkeypatch.setattr(compile_tiles, "BATCH_ROWS", store.count() // 4)
+    real = crash_store_write_after(monkeypatch, 1)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        build_gol(spark, SF_DIR, crash_dir, BuildSettings.for_fixture(50))
+    monkeypatch.setattr(compile_tiles, "_write_batch", real)
 
     res2 = build_gol(spark, SF_DIR, crash_dir, BuildSettings.for_fixture(50))
     stages = {m["stage"] for m in res2.metrics}
     assert stages == {"store", "check", "metrics"}
+    resumed = [r["resumed"] for r in spark.read.parquet(
+        os.path.join(crash_dir, "lineage")).filter(
+        F.col("stage") == "store_batch").orderBy("batch").collect()]
+    assert len(resumed) > 1
+    assert resumed[0] and not any(resumed[1:])
 
     redone = spark.read.parquet(res2.store_path())
     assert _sig(redone) == _sig(store)
     checks = next(m for m in res2.metrics if m["stage"] == "check")
     assert all(v == 0 for k, v in checks.items()
                if k not in ("stage", "seconds"))
+
+
+def test_store_stage_job_budget(spark, built, tmp_path):
+    """The store stage runs at most 6 Spark jobs on the sf0.001 build:
+    the count aggregate and the planned write (two each: a shuffle and
+    its result) and the read-backs of the store and lineage.  The
+    sampled, per-batch writer it replaced ran 31.  Reading the stage's
+    inputs back is the same for any stage and is not counted."""
+    res, _ = built
+    d = str(tmp_path / "restore")
+    shutil.copytree(res.out_dir, d)
+    for name in ("store", "lineage"):
+        shutil.rmtree(os.path.join(d, name))
+    sc = spark.sparkContext
+
+    def jobs(want):
+        sc.setJobGroup(f"budget-{want}", "store stage job budget")
+        try:
+            b = run_stages(spark, SF_DIR, d, BuildSettings.for_fixture(50),
+                           want=(want,))
+            return b, len(sc.statusTracker().getJobIdsForGroup(
+                f"budget-{want}"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    _, inputs = jobs("rows")
+    b, total = jobs("store")
+    assert [m["stage"] for m in b.metrics] == ["store"]
+    assert 0 < total - inputs <= 6, (total, inputs)
 
 
 def test_resume_refuses_other_settings(spark, built):
@@ -212,7 +244,8 @@ def test_store_is_tile_range_clustered(built, spark):
         .orderBy("lo", "hi")
         .collect()
     )
-    assert 0 < len(per_file) <= res.catalog.settings.shuffle_partitions
+    assert 0 < len(per_file) <= int(
+        spark.conf.get("spark.sql.shuffle.partitions"))
     for a, b in zip(per_file, per_file[1:]):
         assert a["hi"] <= b["lo"]  # contiguous ranges → row-group pruning
 
@@ -240,9 +273,9 @@ def test_gol_query_composed(built, spark):
 
 def test_hot_tile_splits_across_files(spark, tmp_path):
     """Skew: one planet-scale city tile must not serialize behind a
-    single writer.  Ranging on (tile_id, hilbert) splits the hot tile
-    at Hilbert boundaries across several output files while every file
-    keeps a narrow, prunable tile_id range."""
+    single writer.  Planning on (tile_id, Hilbert prefix) counts splits
+    the hot tile at Hilbert boundaries across several output files while
+    every file keeps a narrow, prunable tile_id range."""
     from geodesk_gol_spark.operators.compile_tiles import write_store
 
     n_hot, n_cold = 9_000, 1_000
@@ -255,7 +288,7 @@ def test_hot_tile_splits_across_files(spark, tmp_path):
         (F.col("id") * 2654435761 % 2**32).alias("hilbert"),
     )
     out = str(tmp_path / "store")
-    write_store(rows, out, partitions=8)
+    write_store(rows, out)
 
     per_file = (
         spark.read.parquet(out)
@@ -268,7 +301,7 @@ def test_hot_tile_splits_across_files(spark, tmp_path):
     hot_files = [r for r in per_file if r["lo"] <= 7 <= r["hi"]]
     # the hot tile was split across several writers ...
     assert len(hot_files) >= 3
-    # ... no single task owned it all, within range-sampling tolerance
+    # ... and no single file holds it all
     assert max(r["n"] for r in per_file) < 0.5 * (n_hot + n_cold)
     # ... and the layout stays prunable: ranges touch at most at the
     # boundary tile (the composite range key splits INSIDE a tile)

@@ -1,27 +1,30 @@
-"""Per-tile-range checkpointed store writes (north rule: "resumable from
-per-tile checkpoints").
+"""The one store writer: file ranges planned from row counts, committed
+in resumable batches (north rule: "resumable from per-tile checkpoints").
 
 The reference commits each compiled tile under a store transaction inside
-a restartable phase (/root/reference/src/build/compile/Compiler.cpp:960-976,
-src/build/GolBuilder.cpp:61-115); here the commit unit is a contiguous
-tile-id range.  These tests verify: the batched layout is content-equal to
-the single-job layout, batch planning covers tile-id space with weighted
-balance, and a killed write resumes redoing ONLY uncommitted batches.
+a restartable phase (src/build/compile/Compiler.cpp:960-976,
+src/build/GolBuilder.cpp:61-115); here the commit unit is a batch of
+planned files.  These tests verify: the files depend only on the rows,
+not on how they are partitioned; batches hold the rows of a one-batch
+write; the planner covers the key space and splits a hot tile; and a
+write killed mid-way resumes redoing ONLY the uncommitted batches.
 """
 
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
+from pathlib import Path
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from geodesk_gol_spark.operators.compile_tiles import (
-    plan_tile_batches,
-    write_store,
-    write_store_resumable,
-)
+from geodesk_gol_spark.operators import compile_tiles
+from geodesk_gol_spark.operators.compile_tiles import plan_store, write_store
+
+from .conftest import crash_store_write_after
 
 
 def _rows(spark, n=12_000, tiles=60):
@@ -35,15 +38,12 @@ def _rows(spark, n=12_000, tiles=60):
     )
 
 
-def _tiles_pdf(rows_df):
-    pdf = (
-        rows_df.groupBy("tile_id").count().toPandas()
-        .rename(columns={"count": "node_count"})
-    )
-    return pd.DataFrame(
-        {"tile_id": pdf["tile_id"].astype("int64"),
-         "node_count": pdf["node_count"].astype("int64")}
-    )
+def _digests(path):
+    """File name → md5 of every entry in a store directory."""
+    return {
+        f.name: hashlib.md5(f.read_bytes()).hexdigest()
+        for f in sorted(Path(path).iterdir())
+    }
 
 
 def _content(spark, path):
@@ -51,82 +51,115 @@ def _content(spark, path):
         spark.read.parquet(path)
         .orderBy("tile_id", "hilbert", "ftype", "id")
         .toPandas()
-        .reset_index(drop=True)
     )
 
 
-def test_resumable_matches_plain(spark, tmp_path):
+def _batches(lineage):
+    return [x for x in lineage if x["stage"] == "store_batch"]
+
+
+def test_same_files_from_any_partitioning(spark, tmp_path):
+    """The plan comes from counts, not a sample of the input partitions:
+    the same rows give the same file names and bytes."""
     rows = _rows(spark)
-    tiles = _tiles_pdf(rows)
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    write_store(rows, a)
+    write_store(rows.repartition(5), b)
+    assert _digests(a) == _digests(b)
+    assert len(_digests(a)) > 2
+
+
+def test_resumable_matches_plain(spark, tmp_path, monkeypatch):
+    """Several commit batches hold the rows of a one-batch write, and
+    their lineage covers tile-id space once."""
+    rows = _rows(spark)
     plain, batched = str(tmp_path / "plain"), str(tmp_path / "batched")
-    write_store(rows, plain, partitions=8)
-    lineage = write_store_resumable(rows, batched, tiles,
-                                    partitions=8, n_batches=4)
+    one = _batches(write_store(rows, plain))
+    monkeypatch.setattr(compile_tiles, "BATCH_ROWS", 2_000)
+    lineage = write_store(rows, batched)
+    many = _batches(lineage)
+    assert len(one) == 1 and len(many) > 2
     a, b = _content(spark, plain), _content(spark, batched)
-    pd.testing.assert_frame_equal(a[sorted(a.columns)], b[sorted(b.columns)])
-    # lineage covers everything exactly once
-    assert sum(x["rows"] for x in lineage) == rows.count()
-    assert all(not x["resumed"] for x in lineage)
+    pd.testing.assert_frame_equal(a, b)
+    assert many[0]["tile_lo"] == 0 and many[-1]["tile_hi"] == (1 << 31) - 1
+    for a, b in zip(many, many[1:]):
+        assert b["tile_lo"] == a["tile_hi"] + 1
+    assert sum(x["n_rows"] for x in many) == rows.count()
+    assert not any(x["resumed"] for x in many)
+    tiles = {x["tile_id"]: x["n_rows"] for x in lineage
+             if x["stage"] == "store_tile"}
+    assert tiles == {r["tile_id"]: r["count"]
+                     for r in rows.groupBy("tile_id").count().collect()}
 
 
 def test_batch_planning_covers_and_balances():
-    tiles = pd.DataFrame({
-        "tile_id": list(range(100, 160)),
-        "node_count": [100_000 if t == 130 else 100
-                       for t in range(100, 160)],
-    })
-    ranges = plan_tile_batches(tiles, 6)
-    assert len(ranges) <= 6
-    # disjoint, ordered, covering all of int32 tile-id space
-    assert ranges[0][0] == 0 and ranges[-1][1] == (1 << 31) - 1
-    for (lo, hi), (lo2, _) in zip(ranges, ranges[1:]):
-        assert lo <= hi and lo2 == hi + 1
-    # the hot tile dominates the weight: it gets its OWN batch instead of
-    # dragging its light neighbors along
-    hot = next((lo, hi) for lo, hi in ranges if lo <= 130 <= hi)
-    n_tiles_in_hot = sum(1 for t in tiles["tile_id"] if hot[0] <= t <= hot[1])
-    assert n_tiles_in_hot == 1
+    """Planned files are ordered, disjoint, cover every key and hold
+    near-equal rows; a tile heavier than one file's share spans several
+    files; batches cut only at tile edges and cover tile-id space."""
+    # tile 130 is hot: 16 Hilbert prefixes of 10 000 rows each
+    counts = [(t * 16 + h, 10_000 if t == 130 else 200)
+              for t in range(100, 160) for h in range(16)]
+    total = sum(c for _, c in counts)
+    keys = sorted(k for k, _ in counts)
+    [one] = plan_store(counts, 8, batch_rows=total)
+    assert len(one["files"]) <= 8
+    batches = plan_store(counts, 8, batch_rows=120_000)
+    assert len(batches) == 3
+    for files in (one["files"], [f for b in batches for f in b["files"]]):
+        assert [f[0] for f in files] == list(range(len(files)))
+        for f, g in zip(files, files[1:]):
+            assert f[1] <= f[2] < g[1]
+        assert files[0][1] == keys[0] and files[-1][2] == keys[-1]
+        assert sum(f[3] for f in files) == total
+        assert max(f[3] for f in files) <= 2 * total / 8
+        hot = [f for f in files if f[1] >> 4 <= 130 <= f[2] >> 4]
+        assert len(hot) >= 2
+    assert batches[0]["tile_lo"] == 0
+    assert batches[-1]["tile_hi"] == (1 << 31) - 1
+    for a, b in zip(batches, batches[1:]):
+        assert b["tile_lo"] == a["tile_hi"] + 1
+        assert a["files"][-1][2] >> 4 < b["tile_lo"] == b["files"][0][1] >> 4
 
 
-def test_resume_redoes_only_uncommitted_batches(spark, tmp_path):
+def test_resume_redoes_only_uncommitted_batches(spark, tmp_path,
+                                                monkeypatch):
     rows = _rows(spark)
-    tiles = _tiles_pdf(rows)
-    out = str(tmp_path / "store")
-    first = write_store_resumable(rows, out, tiles, partitions=8, n_batches=4)
-    want = _content(spark, out)
+    clean, out = str(tmp_path / "clean"), str(tmp_path / "store")
+    monkeypatch.setattr(compile_tiles, "BATCH_ROWS", 2_000)
+    write_store(rows, clean)
+    real = crash_store_write_after(monkeypatch, 2)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        write_store(rows, out)
+    # the crashed write left two committed batches and no finished store
+    assert not os.path.exists(os.path.join(out, "_SUCCESS"))
+    committed = {
+        os.path.basename(f): os.stat(f).st_ino
+        for f in glob.glob(os.path.join(out, "_batches", "*", "*.parquet"))
+    }
+    assert committed
 
-    # record the inode of every committed batch part file
-    def inodes():
-        return {
-            f: os.stat(f).st_ino
-            for f in glob.glob(os.path.join(out, "_batches", "*", "*.parquet"))
-        }
-
-    before = inodes()
-    # simulate a crash: batch 2 uncommitted, finalize incomplete
-    os.remove(os.path.join(out, "_batches", "b002", "_SUCCESS"))
-    os.remove(os.path.join(out, "_SUCCESS"))
-    for f in glob.glob(os.path.join(out, "*.parquet"))[:3]:
-        os.remove(f)  # partial finalize damage
-
-    second = write_store_resumable(rows, out, tiles, partitions=8, n_batches=4)
-    assert [x["resumed"] for x in second] == [True, True, False, True]
-    after = inodes()
-    for f, ino in before.items():
-        if os.sep + "b002" + os.sep not in f:
-            assert after[f] == ino, f"committed batch rewritten: {f}"
-    got = _content(spark, out)
-    pd.testing.assert_frame_equal(want, got)
-    assert sum(x["rows"] for x in first) == sum(x["rows"] for x in second)
+    monkeypatch.setattr(compile_tiles, "_write_batch", real)
+    resumed = [x["resumed"] for x in _batches(write_store(rows, out))]
+    assert resumed[:2] == [True, True] and not any(resumed[2:])
+    # committed batch files are linked into the store, not rewritten
+    for name, ino in committed.items():
+        assert os.stat(os.path.join(out, name)).st_ino == ino, name
+    assert _digests(out) == _digests(clean)
 
 
-def test_reader_ignores_batch_dirs(spark, tmp_path):
+def test_reader_ignores_batch_dirs(spark, tmp_path, monkeypatch):
+    """A finished store holds only its parquet files and ``_SUCCESS``
+    (the batch checkpoints are gone), so Spark and a ``*.parquet`` glob
+    read exactly the rows, and disk usage counts each file once.  An
+    empty input still gives a readable store."""
     rows = _rows(spark, n=2_000, tiles=10)
     out = str(tmp_path / "store")
-    write_store_resumable(rows, out, _tiles_pdf(rows),
-                          partitions=4, n_batches=2)
-    # flat-dir contract: Spark and a *.parquet glob both see ONLY the
-    # finalized store (the _batches checkpoint dir is invisible)
+    monkeypatch.setattr(compile_tiles, "BATCH_ROWS", 500)
+    assert len(_batches(write_store(rows, out))) > 1
+    names = sorted(os.listdir(out))
+    assert names[0] == "_SUCCESS"
+    assert all(n.startswith("part-") and n.endswith(".parquet")
+               for n in names[1:])
     assert spark.read.parquet(out).count() == 2_000
     import duckdb
 
@@ -134,28 +167,32 @@ def test_reader_ignores_batch_dirs(spark, tmp_path):
         f"SELECT count(*) FROM read_parquet('{out}/*.parquet')"
     ).fetchone()[0]
     assert n == 2_000
+    empty = str(tmp_path / "empty")
+    write_store(rows.limit(0), empty)
+    assert sorted(os.listdir(empty)) == ["_SUCCESS", "part-00000.parquet"]
+    back = spark.read.parquet(empty)
+    assert back.count() == 0 and back.columns == rows.columns
 
 
-def test_resume_invalidates_stale_range_batches(spark, tmp_path):
+def test_resume_invalidates_stale_range_batches(spark, tmp_path,
+                                               monkeypatch):
     """Regression (r04): a committed batch is only reusable when it was
-    planned over the SAME tile range.  Resuming into an existing path
-    after the tile catalog changed must rewrite any batch whose
-    recorded (lo, hi) differs — not silently finalize a store with
-    duplicated/missing ranges."""
+    planned over the SAME ranges.  Resuming into a crashed write's path
+    with other rows and fewer batches must rewrite every batch whose plan
+    differs and leave the stale ones out — not finalize a store with
+    duplicated or missing ranges."""
     rows = _rows(spark)
     out = str(tmp_path / "store")
-    # first build: hot tile 7 dominates -> one batch plan
-    write_store_resumable(rows, out, _tiles_pdf(rows),
-                          partitions=8, n_batches=4)
-    # second build into the SAME path with a shifted corpus: different
-    # tile catalog -> different planned ranges
+    monkeypatch.setattr(compile_tiles, "BATCH_ROWS", 2_000)
+    crash_store_write_after(monkeypatch, 2)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        write_store(rows, out)
+    monkeypatch.undo()  # the real batch write, one batch per write
+    # a shifted corpus plans other ranges
     rows2 = rows.withColumn("tile_id", F.col("tile_id") + 5)
-    second = write_store_resumable(rows2, out, _tiles_pdf(rows2),
-                                   partitions=8, n_batches=4)
-    # every batch whose planned range changed was rewritten; the final
-    # store equals a fresh single-job write of rows2
+    second = _batches(write_store(rows2, out))
+    assert len(second) == 1 and not second[0]["resumed"]
     fresh = str(tmp_path / "fresh")
-    write_store(rows2, fresh, partitions=8)
-    pd.testing.assert_frame_equal(_content(spark, fresh),
-                                  _content(spark, out))
-    assert sum(x["rows"] for x in second) == rows2.count()
+    write_store(rows2, fresh)
+    assert _digests(fresh) == _digests(out)
+    assert second[0]["n_rows"] == rows2.count()
