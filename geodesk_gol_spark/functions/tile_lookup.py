@@ -36,14 +36,8 @@ from ..config import LADDER as _LADDER, LEAF_ZOOM
 _BCAST_CACHE: dict[tuple[str, str], object] = {}
 
 
-def survivor_lookup_udf(spark: SparkSession, tiles_pd) -> "callable":
-    """Build the lookup UDF for a catalog's tile set.
-
-    ``tiles_pd`` is the driver-side catalog frame (column ``tile_id``).
-    Returns a pandas UDF (cell_col int, cell_row int, zstar int) -> int
-    tile_id.  ``zstar`` caps the deepest zoom considered (J3 TilePair
-    semantics); pass a literal 12 for plain J1 node assignment.
-    """
+def _survivor_ids(spark: SparkSession, tiles_pd):
+    """Broadcast of the catalog's sorted survivor ids, memoized."""
     import hashlib
 
     ids = np.sort(tiles_pd["tile_id"].to_numpy().astype(np.int64))
@@ -62,28 +56,44 @@ def survivor_lookup_udf(spark: SparkSession, tiles_pd) -> "callable":
             del _BCAST_CACHE[k]
         bids = spark.sparkContext.broadcast(ids)
         _BCAST_CACHE[key] = bids
+    return bids
+
+
+def _resolve(arr, c, r, zs):
+    """Deepest survivor in sorted ``arr`` for each (col, row) leaf cell,
+    capped at zoom ``zs``; the root tile (id 0) is the default."""
+    out = np.zeros(len(c), np.int64)
+    todo = np.ones(len(c), bool)
+    n = len(arr)
+    for z in _LADDER:
+        shift = LEAF_ZOOM - z
+        cand = (z << 24) | ((r >> shift) << 12) | (c >> shift)
+        m = todo & (zs >= z)
+        if not m.any():
+            continue
+        pos = np.searchsorted(arr, cand)
+        hit = m & (arr[np.minimum(pos, n - 1)] == cand)
+        out[hit] = cand[hit]
+        todo &= ~hit
+    return out.astype(np.int32)
+
+
+def survivor_lookup_udf(spark: SparkSession, tiles_pd) -> "callable":
+    """Build the lookup UDF for a catalog's tile set.
+
+    ``tiles_pd`` is the driver-side catalog frame (column ``tile_id``).
+    Returns a pandas UDF (cell_col int, cell_row int, zstar int) -> int
+    tile_id.  ``zstar`` caps the deepest zoom considered (J3 TilePair
+    semantics); pass a literal 12 for plain J1 node assignment.
+    """
+    bids = _survivor_ids(spark, tiles_pd)
 
     @F.pandas_udf("int")
     def lookup(cell_col: pd.Series, cell_row: pd.Series,
                zstar: pd.Series) -> pd.Series:
-        arr = bids.value
-        c = cell_col.to_numpy(np.int64)
-        r = cell_row.to_numpy(np.int64)
-        zs = zstar.to_numpy(np.int64)
-        out = np.zeros(len(c), np.int64)  # root tile (id 0) is the default
-        todo = np.ones(len(c), bool)
-        n = len(arr)
-        for z in _LADDER:
-            shift = LEAF_ZOOM - z
-            cand = (z << 24) | ((r >> shift) << 12) | (c >> shift)
-            m = todo & (zs >= z)
-            if not m.any():
-                continue
-            pos = np.searchsorted(arr, cand)
-            hit = m & (arr[np.minimum(pos, n - 1)] == cand)
-            out[hit] = cand[hit]
-            todo &= ~hit
-        return pd.Series(out.astype(np.int32))
+        return pd.Series(_resolve(
+            bids.value, cell_col.to_numpy(np.int64),
+            cell_row.to_numpy(np.int64), zstar.to_numpy(np.int64)))
 
     return lookup
 
@@ -99,36 +109,7 @@ def survivor_lookup2_udf(spark: SparkSession, tiles_pd) -> "callable":
     tile ids are non-negative < 2^28 — so the column stays a primitive
     Arrow array end to end (a list-typed return would build a Python
     list object per row)."""
-    import hashlib
-
-    ids = np.sort(tiles_pd["tile_id"].to_numpy().astype(np.int64))
-    key = (spark.sparkContext.applicationId,
-           hashlib.sha1(ids.tobytes()).hexdigest())
-    bids = _BCAST_CACHE.get(key)
-    if bids is None:
-        for k in [k for k in _BCAST_CACHE if k[0] != key[0]]:
-            del _BCAST_CACHE[k]
-        same_app = [k for k in _BCAST_CACHE if k[0] == key[0]]
-        for k in same_app[:-7]:
-            del _BCAST_CACHE[k]
-        bids = spark.sparkContext.broadcast(ids)
-        _BCAST_CACHE[key] = bids
-
-    def _resolve(arr, c, r, zs):
-        out = np.zeros(len(c), np.int64)
-        todo = np.ones(len(c), bool)
-        n = len(arr)
-        for z in _LADDER:
-            shift = LEAF_ZOOM - z
-            cand = (z << 24) | ((r >> shift) << 12) | (c >> shift)
-            m = todo & (zs >= z)
-            if not m.any():
-                continue
-            pos = np.searchsorted(arr, cand)
-            hit = m & (arr[np.minimum(pos, n - 1)] == cand)
-            out[hit] = cand[hit]
-            todo &= ~hit
-        return out.astype(np.int32)
+    bids = _survivor_ids(spark, tiles_pd)
 
     @F.pandas_udf("long")
     def lookup2(c0: pd.Series, r0: pd.Series, c1: pd.Series,

@@ -1901,9 +1901,8 @@ def _q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (batch form; the streaming
-    applyInPandasWithState twin is verified equal in
-    tests/test_sessions.py)."""
+    """Gap-based sessionization (batch SQL; DuckDB runs the same text
+    as the oracle)."""
     from .streaming.sessions import sessionize_batch
 
     return sessionize_batch(

@@ -70,15 +70,19 @@ def _prewarm(spark: SparkSession) -> None:
     Strictly data-independent: operates on ``spark.range`` literals and
     a ~1 KB scratch parquet file under ``spark.local.dir`` — no input
     table is touched, nothing is cached or kept (no-gaming rule).
-    Bounded: one task per core, O(cores) rows.  Opt out with
-    ``SPARK_GRAFT_PREWARM=0``.
+    Bounded: one task per core, O(cores) rows.  A failing prewarm raises
+    from ``get_spark``, and the scratch file is removed on every path.
+    Opt out with ``SPARK_GRAFT_PREWARM=0``.
     """
+    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
     sc = spark.sparkContext
     n = sc.defaultParallelism
+    base = spark.conf.get("spark.local.dir", tempfile.gettempdir())
+    scratch = os.path.join(base, f"gol_prewarm_{os.getpid()}")
     try:
         sc.setJobDescription("engine prewarm (worker pool + JIT)")
         df = spark.range(n * 8, numPartitions=n)
@@ -93,17 +97,10 @@ def _prewarm(spark: SparkSession) -> None:
             "noop"
         ).mode("overwrite").save()
         # parquet writer/reader + committer classes
-        base = spark.conf.get("spark.local.dir", tempfile.gettempdir())
-        scratch = os.path.join(base, f"gol_prewarm_{os.getpid()}")
         df.coalesce(1).write.mode("overwrite").parquet(scratch)
         spark.read.parquet(scratch).write.format("noop").mode(
             "overwrite"
         ).save()
-        import shutil
-
-        shutil.rmtree(scratch, ignore_errors=True)
-    except Exception:
-        # prewarm is best-effort: never fail session creation over it
-        pass
     finally:
+        shutil.rmtree(scratch, ignore_errors=True)
         sc.setJobDescription(None)

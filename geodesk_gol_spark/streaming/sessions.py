@@ -1,34 +1,17 @@
-"""Gap-based sessionization — batch SQL + custom stateful streaming.
+"""Gap-based sessionization in batch SQL.
 
-A training-data/events pipeline staple the built-in tumbling/sliding
-windows can't express: a session is a maximal run of a user's events
-with inter-event gaps ≤ ``gap``; Structured Streaming needs a custom
-stateful operator (applyInPandasWithState), batch needs lag + running
-sum of session breaks.  Both implementations here produce identical
-rows, and the batch form is the DuckDB-provable oracle.
-
-Scale shape: batch = two windows + one aggregate, all partitioned by
-user_id (one shuffle); streaming = state is ONE open-session tuple per
-user (constant memory per key), each micro-batch emits sessions closed
-by that batch plus the refreshed open-session snapshot (latest-wins
-upsert semantics, like the reference's revision-ordered apply).
+A session is a maximal run of a user's events with inter-event gaps
+≤ ``gap``; the built-in tumbling/sliding windows cannot express it.
+The batch form is lag + a running sum of session breaks, two windows and
+one aggregate, all partitioned by user_id (one shuffle).  The same SQL
+text runs in Spark and in DuckDB, so DuckDB is its oracle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 GAP_US_DEFAULT = 1_800_000_000  # 30 min in microseconds
-
-SESSION_SCHEMA = (
-    "user_id long, session_seq int, n_events long, start_us long, end_us long"
-)
-_STATE_SCHEMA = "seq int, n long, start long, last long"
 
 
 def sql_sessionize(events: str, d: str, gap_us: int = GAP_US_DEFAULT) -> str:
@@ -69,87 +52,3 @@ def sessionize_batch(events: DataFrame,
     events.createOrReplaceTempView("_sess_events")
     return spark.sql(sql_sessionize("_sess_events", "spark", gap_us))
 
-
-def _fold_sessions(
-    rows: pd.DataFrame, seq: int, n: int, start: int, last: int, gap_us: int
-) -> tuple[list[tuple[int, int, int, int]], int, int, int, int]:
-    """Fold time-ordered (t) rows into (seq, n, start, end) sessions,
-    continuing from the open-session state; returns (emitted sessions
-    incl. the final open snapshot, new state).
-
-    Late-data policy (cross-batch out-of-order arrivals; within a batch
-    rows are sorted): an event at t ≤ last that is still within gap
-    reach of the open session (t ≥ start − gap) joins it — extending
-    ``start`` backwards, never regressing ``last`` (a regressed ``last``
-    would corrupt every later gap comparison).  An event older than
-    start − gap is DROPPED, like an event behind a watermark: the batch
-    oracle, which sees all events sorted, would give it its own earlier
-    session, so streaming == batch holds for in-order arrival across
-    micro-batches (the file-source case the tests pin)."""
-    out: list[tuple[int, int, int, int]] = []
-    for t in rows["t"]:
-        t = int(t)
-        if n == 0:  # no open session yet
-            seq, n, start, last = seq + 1, 1, t, t
-        elif t > last and t - last > gap_us:
-            out.append((seq, n, start, last))  # closed by this gap
-            seq, n, start, last = seq + 1, 1, t, t
-        elif t > last:
-            n, last = n + 1, t
-        elif t >= start - gap_us:  # late, within session reach
-            n, start = n + 1, min(start, t)
-        # else: behind the open session's watermark — dropped
-    if n:
-        out.append((seq, n, start, last))  # open-session snapshot
-    return out, seq, n, start, last
-
-
-def sessionize_stream(events: DataFrame,
-                      gap_us: int = GAP_US_DEFAULT) -> DataFrame:
-    """Streaming sessionization: one state tuple per user; emits each
-    session closed in the micro-batch plus the refreshed open-session
-    snapshot (consumers keep the latest row per (user_id, session_seq) —
-    upsert semantics)."""
-    from pyspark.sql import functions as F
-
-    def fn(key: tuple, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        seq, n, start, last = (
-            state.get if state.exists else (0, 0, 0, 0)
-        )
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["t", "event_id"])
-        sessions, seq, n, start, last = _fold_sessions(
-            batch, int(seq), int(n), int(start), int(last), gap_us
-        )
-        state.update((seq, n, start, last))
-        yield pd.DataFrame(
-            [(user_id, s, c, a, b) for s, c, a, b in sessions],
-            columns=["user_id", "session_seq", "n_events",
-                     "start_us", "end_us"],
-        )
-
-    prepared = events.select(
-        "user_id", "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t"),
-    ).filter(F.col("t").isNotNull())  # a null/uncastable ts would reach
-    # _fold_sessions as NaN and kill the micro-batch at int(t)
-    return prepared.groupBy("user_id").applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_sessions_to_memory(sessions: DataFrame, name: str):
-    """availableNow catch-up run into an in-memory sink (tests/demos)."""
-    return (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -198,9 +198,8 @@ def apply_changes_streaming(
     the driver-side collect is safe at any input size.  Epochs stay
     full snapshots (``read.parquet(epoch dir)`` sees every tile);
     replay is idempotent because the epoch dir is wiped by the static
-    overwrite before re-linking.  Set
-    ``SPARK_GRAFT_UPDATE_FULL_REWRITE=1`` to force the old full-merge
-    path; stores without ``tile_id`` always use it."""
+    overwrite before re-linking.  Stores without ``tile_id`` take the
+    full-merge path."""
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
         import os
@@ -214,11 +213,7 @@ def apply_changes_streaming(
             [d for d in os.listdir(src) if d.startswith("tile_id=")]
             if os.path.isdir(src) else []
         )
-        tile_scoped = (
-            "tile_id" in store.columns
-            and os.environ.get("SPARK_GRAFT_UPDATE_FULL_REWRITE") != "1"
-        )
-        if not tile_scoped:
+        if "tile_id" not in store.columns:
             merged = merge_changes(store, batch)
             merged.write.mode("overwrite").parquet(epoch_dir)
             return

@@ -1,35 +1,10 @@
-"""Structured Streaming: windowed aggs against the batch oracle; change merge."""
+"""Change merge and the Structured Streaming update apply."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from geodesk_gol_spark.streaming.update import latest_changes, merge_changes
-from geodesk_gol_spark.streaming.windows import (
-    read_event_stream,
-    run_to_memory,
-    windowed_counts,
-)
-
-from .conftest import SF_DIR
-
-
-def test_stream_window_equals_batch(spark, tmp_path):
-    """Streaming tumbling windows == the same aggregation run in batch."""
-    # file-stream sources need a directory
-    import shutil
-
-    d = tmp_path / "events_stream"
-    d.mkdir()
-    shutil.copy(f"{SF_DIR}/events.parquet", d / "part-000.parquet")
-    stream = read_event_stream(spark, str(d))
-    run_to_memory(windowed_counts(stream), "win_out")
-    got = spark.sql("SELECT * FROM win_out")
-    want = windowed_counts(spark.read.parquet(f"{SF_DIR}/events.parquet"))
-    # streaming 'complete' mode may differ in row order only
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0
 
 
 def test_change_merge_semantics(spark):
