@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -374,7 +376,7 @@ def relation_extents(
         if rows:
             resolved_all = resolved_all.unionByName(
                 spark.createDataFrame(
-                    rows,
+                    pd.DataFrame(rows),
                     schema="rel_id long, n_members int, n_resolved long, "
                     "minc int, minr int, maxc int, maxr int, "
                     "minx long, miny long, maxx long, maxy long, "
@@ -384,8 +386,9 @@ def relation_extents(
         dead = [s for s, v in cyc_resolved.items() if v[0] is None]
         if dead:
             unresolved = unresolved.unionByName(
-                spark.createDataFrame([(int(s),) for s in dead],
-                                      "rel_id long")
+                spark.createDataFrame(
+                    pd.DataFrame({"rel_id": np.array(dead, dtype=np.int64)}),
+                    "rel_id long")
             ).distinct()
 
     rel_ext = resolved_all.select(

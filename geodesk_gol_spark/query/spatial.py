@@ -8,10 +8,16 @@ Reference anchors:
   (tile_id IS the partition column of the store) → residual bbox Column.
 - polygon: -a (multi)polygon intersects filter backed by a segment index
   (src/gol/util/PolygonParser.cpp:9-24).  Spark shape: tile pre-prune by
-  polygon bbox + vectorized numpy ray-casting over Arrow batches.
+  polygon bbox + even-odd ray casting as one native Column fold.
+
+The only Python UDFs left here are the segment-polygon pair behind the
+intersects/within/crossing way predicates (vectorized numpy over Arrow
+batches); every other filter stays in the JVM.
 """
 
 from __future__ import annotations
+
+import json
 
 import numpy as np
 import pandas as pd
@@ -74,27 +80,63 @@ def bbox_filter(
         )
         return store.filter(cond)
     hit_df = store.sparkSession.createDataFrame(
-        [(int(t), int(t) in turbo_set) for t in hit],
+        pd.DataFrame({"tile_id": np.array(hit, dtype=np.int32),
+                      "_turbo": [t in turbo_set for t in hit]}),
         "tile_id int, _turbo boolean",
     )
     return (
         store.join(F.broadcast(hit_df), "tile_id")
         .filter(F.col("_turbo") | residual)
-        .drop("_turbo")
+        .select(*store.columns)
     )
 
 
 # ---------------------------------------------------------------------------
-# polygon (P3) — numpy ray casting, Arrow-batched
+# polygon (P3) — even-odd ray casting as one native Column
 # ---------------------------------------------------------------------------
 
-def point_in_polygon_udf(poly_xy: list[tuple[float, float]]):
-    """Pandas UDF: True where (x, y) falls inside the (closed) polygon.
+def _closed_ring(poly_xy):
+    px = np.array([p[0] for p in poly_xy], dtype=np.float64)
+    py = np.array([p[1] for p in poly_xy], dtype=np.float64)
+    if px[0] != px[-1] or py[0] != py[-1]:
+        px = np.append(px, px[0])
+        py = np.append(py, py[0])
+    return px, py
 
-    Strict single-ring special case of :func:`point_in_rings_udf` —
-    one even-odd ray-casting implementation to keep correct.
-    """
-    return point_in_rings_udf([list(poly_xy)])
+
+_EDGE_FIELDS = ("x0", "y0", "y1", "dx", "dy")
+_EDGES_TYPE = f"array<struct<{','.join(f'{n}:double' for n in _EDGE_FIELDS)}>>"
+
+
+def point_in_rings(x: Column, y: Column, rings: list[list[tuple[float, float]]]) -> Column:
+    """True where (x, y) falls inside the rings by even-odd ray casting
+    (holes and multiple outers compose by crossing parity — the
+    reference's MCIndex ray test).  An unclosed ring is closed; closing
+    edges never join different rings.
+
+    One ``aggregate`` fold XORs each edge's crossing test, ``(y0 > y) !=
+    (y1 > y) and x < (x1 - x0) * (y - y0) / (y1 - y0) + x0`` in float64
+    and in that order, over a literal array of the edges, so the plan
+    holds one constant at any vertex count.  Horizontal edges never
+    cross; dropping them keeps ANSI division by zero out.  The array
+    reaches the JVM as JSON (shortest round-trip floats parse back to
+    the same doubles), and Catalyst folds ``from_json`` of a literal
+    into one literal."""
+    edges = []
+    for ring in rings:
+        px, py = _closed_ring(ring)
+        e = np.stack([px[:-1], py[:-1], py[1:], px[1:] - px[:-1],
+                      py[1:] - py[:-1]], axis=1)
+        edges += [dict(zip(_EDGE_FIELDS, row)) for row in e[e[:, 4] != 0].tolist()]
+    xd, yd = x.cast("double"), y.cast("double")
+    return F.aggregate(
+        F.from_json(F.lit(json.dumps(edges)), _EDGES_TYPE),
+        F.lit(False),
+        lambda inside, e: inside != (
+            ((e["y0"] > yd) != (e["y1"] > yd))
+            & (xd < e["dx"] * (yd - e["y0"]) / e["dy"] + e["x0"])
+        ),
+    )
 
 
 def polygon_filter(store: DataFrame, catalog: TileCatalog, poly_xy) -> DataFrame:
@@ -102,38 +144,6 @@ def polygon_filter(store: DataFrame, catalog: TileCatalog, poly_xy) -> DataFrame
 
     Single-ring special case of :func:`area_filter`."""
     return area_filter(store, catalog, [list(poly_xy)])
-
-
-def point_in_rings_udf(rings: list[list[tuple[float, float]]]):
-    """Even-odd ray casting over MULTIPLE closed rings (multipolygon
-    outers + holes compose by crossing parity — the reference's MCIndex
-    ray test, geodesk IntersectsPolygonFilter).  Same vectorized
-    per-edge numpy passes as :func:`point_in_polygon_udf`; the rings'
-    closing edges never connect DIFFERENT rings."""
-    edges = []
-    for ring in rings:
-        px = np.array([p[0] for p in ring], dtype=np.float64)
-        py = np.array([p[1] for p in ring], dtype=np.float64)
-        if px[0] != px[-1] or py[0] != py[-1]:
-            px = np.append(px, px[0])
-            py = np.append(py, py[0])
-        for i in range(len(px) - 1):
-            edges.append((px[i], py[i], px[i + 1], py[i + 1]))
-
-    @F.pandas_udf(BooleanType())
-    def pip(x: pd.Series, y: pd.Series) -> pd.Series:
-        xs = x.to_numpy(dtype=np.float64)
-        ys = y.to_numpy(dtype=np.float64)
-        inside = np.zeros(len(xs), dtype=bool)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for x0, y0, x1, y1 in edges:
-                crosses = ((y0 > ys) != (y1 > ys)) & (
-                    xs < (x1 - x0) * (ys - y0) / (y1 - y0) + x0
-                )
-                inside ^= crosses
-        return pd.Series(inside)
-
-    return pip
 
 
 def area_filter(
@@ -147,8 +157,7 @@ def area_filter(
     pruned = bbox_filter(
         store, catalog, int(min(xs)), int(min(ys)), int(max(xs)), int(max(ys))
     )
-    pip = point_in_rings_udf(rings)
-    return pruned.filter(pip(F.col("cx"), F.col("cy")))
+    return pruned.filter(point_in_rings(F.col("cx"), F.col("cy"), rings))
 
 
 # ---------------------------------------------------------------------------
@@ -182,15 +191,6 @@ def way_segments(ways: DataFrame, points: DataFrame) -> DataFrame:
         )
         .filter(F.col("x1").isNotNull())
     )
-
-
-def _closed_ring(poly_xy):
-    px = np.array([p[0] for p in poly_xy], dtype=np.float64)
-    py = np.array([p[1] for p in poly_xy], dtype=np.float64)
-    if px[0] != px[-1] or py[0] != py[-1]:
-        px = np.append(px, px[0])
-        py = np.append(py, py[0])
-    return px, py
 
 
 def _segment_polygon_arrays(px, py, ax, ay, bx, by):
@@ -991,12 +991,13 @@ def knn_cell_rings(
                 break
         r = max(ring, isqrt(2 * (r1 + 1) ** 2) + 1)
         rows += [(qid, qx, qy, b, c, w) for c, w in _block(g, qc, qr, r)]
-    # no per-row schema check: the rows are built above from ints, and
-    # the check dominated createDataFrame for sf0.1's 25k rows
-    qcells = points.sparkSession.createDataFrame(rows, StructType(
-        [queries.schema[c] for c in ("q_id", "qx", "qy")]
-    ).add("lvl", IntegerType()).add("cc", LongType()).add("cr", LongType()),
-        verifySchema=False)
+    # a typed pandas frame: Arrow ships it as a LocalTableScan, where a
+    # row list would scan a Python RDD through a worker
+    qcells = points.sparkSession.createDataFrame(
+        pd.DataFrame(rows, columns=["q_id", "qx", "qy", "lvl", "cc", "cr"])
+        .astype({"lvl": "int32", "cc": "int64", "cr": "int64"}),
+        StructType([queries.schema[c] for c in ("q_id", "qx", "qy")])
+        .add("lvl", IntegerType()).add("cc", LongType()).add("cr", LongType()))
 
     # each point once per level that some query uses
     pts = points.select("id", "x", "y", F.explode(F.array(*[

@@ -32,6 +32,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # a pandas frame Arrow cannot convert raises instead of silently
+        # taking the row-by-row worker path
+        .config("spark.sql.execution.arrow.pyspark.fallback.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # finer parquet splits: scan parallelism tracks executor count
         # instead of stalling at a handful of 128MB splits on small files
@@ -67,8 +70,9 @@ def _prewarm(spark: SparkSession) -> None:
     machinery at startup, not inside the first query.  Doing the same
     here keeps per-query timings representative of steady state.
 
-    Strictly data-independent: operates on ``spark.range`` literals and
-    a ~1 KB scratch parquet file under ``spark.local.dir`` — no input
+    Strictly data-independent: operates on ``spark.range`` literals, a
+    list of O(cores) ints and a ~1 KB scratch parquet file in Spark's
+    first local dir — no input
     table is touched, nothing is cached or kept (no-gaming rule).
     Bounded: one task per core, O(cores) rows.  A failing prewarm raises
     from ``get_spark``, and the scratch file is removed on every path.
@@ -81,8 +85,11 @@ def _prewarm(spark: SparkSession) -> None:
 
     sc = spark.sparkContext
     n = sc.defaultParallelism
-    base = spark.conf.get("spark.local.dir", tempfile.gettempdir())
-    scratch = os.path.join(base, f"gol_prewarm_{os.getpid()}")
+    # SPARK_LOCAL_DIRS overrides spark.local.dir, as in Spark's own
+    # lookup; both are comma-separated lists
+    local = os.environ.get("SPARK_LOCAL_DIRS") or spark.conf.get(
+        "spark.local.dir", tempfile.gettempdir())
+    scratch = os.path.join(local.split(",")[0], f"gol_prewarm_{os.getpid()}")
     try:
         sc.setJobDescription("engine prewarm (worker pool + JIT)")
         df = spark.range(n * 8, numPartitions=n)
@@ -91,6 +98,12 @@ def _prewarm(spark: SparkSession) -> None:
         df.select(ident("id").alias("id")).write.format("noop").mode(
             "overwrite"
         ).save()
+        # the pickled-row path of a frame built from a Python list (how
+        # callers pass small query tables): the session's first such
+        # job costs ~5 task-s more on 4 cores than the ones after it,
+        # and the pandas UDF above does not warm it
+        spark.createDataFrame([(i,) for i in range(n * 8)], "id long").write.format(
+            "noop").mode("overwrite").save()
         # shuffle + codegen'd hash aggregate + broadcast machinery
         k = df.groupBy((F.col("id") % 7).alias("k")).count()
         df.join(F.broadcast(k), df.id == k.k, "left").write.format(

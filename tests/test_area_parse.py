@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from geodesk_gol_spark.oracle.slowpath import project
@@ -104,15 +106,98 @@ def test_point_in_rings_even_odd(spark):
     """Hole subtracts; disjoint outers union (crossing parity)."""
     from pyspark.sql import functions as F
 
-    from geodesk_gol_spark.query.spatial import point_in_rings_udf
+    from geodesk_gol_spark.query.spatial import point_in_rings
 
     outer = [(0.0, 0.0), (10.0, 0.0), (10.0, 10.0), (0.0, 10.0)]
     hole = [(4.0, 4.0), (6.0, 4.0), (6.0, 6.0), (4.0, 6.0)]
     other = [(20.0, 20.0), (30.0, 20.0), (30.0, 30.0), (20.0, 30.0)]
-    pip = point_in_rings_udf([outer, hole, other])
     df = spark.createDataFrame(
-        [(1, 2.0, 2.0), (2, 5.0, 5.0), (3, 25.0, 25.0), (4, 15.0, 15.0)],
-        "id int, x double, y double",
-    ).select("id", pip(F.col("x"), F.col("y")).alias("inside"))
+        pd.DataFrame({"id": [1, 2, 3, 4], "x": [2.0, 5.0, 25.0, 15.0],
+                      "y": [2.0, 5.0, 25.0, 15.0]}),
+    ).select("id", point_in_rings(
+        F.col("x"), F.col("y"), [outer, hole, other]).alias("inside"))
     got = {r.id: r.inside for r in df.collect()}
     assert got == {1: True, 2: False, 3: True, 4: False}
+
+
+def _pip_numpy(rings, xs, ys):
+    """The even-odd reference: per closed ring edge, one vectorized
+    numpy crossing pass over all points, XORed into the parity."""
+    inside = np.zeros(len(xs), dtype=bool)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for ring in rings:
+            px = np.array([p[0] for p in ring], dtype=np.float64)
+            py = np.array([p[1] for p in ring], dtype=np.float64)
+            if px[0] != px[-1] or py[0] != py[-1]:
+                px = np.append(px, px[0])
+                py = np.append(py, py[0])
+            for i in range(len(px) - 1):
+                x0, y0, x1, y1 = px[i], py[i], px[i + 1], py[i + 1]
+                inside ^= ((y0 > ys) != (y1 > ys)) & (
+                    xs < (x1 - x0) * (ys - y0) / (y1 - y0) + x0)
+    return inside
+
+
+def _check_against_numpy(spark, rings, xs, ys):
+    from pyspark.sql import functions as F
+
+    from geodesk_gol_spark.query.spatial import point_in_rings
+
+    pts = pd.DataFrame({"id": np.arange(len(xs)), "x": xs, "y": ys})
+    got = (
+        spark.createDataFrame(pts)
+        .select("id", point_in_rings(F.col("x"), F.col("y"), rings)
+                .alias("inside"))
+        .toPandas().sort_values("id")["inside"].to_numpy()
+    )
+    want = _pip_numpy(rings, np.asarray(xs, np.float64),
+                      np.asarray(ys, np.float64))
+    assert 0 < want.sum() < len(want)
+    np.testing.assert_array_equal(got, want)
+
+
+def _ring_probes(rings):
+    """Every vertex, every edge midpoint (on the edge, horizontal ones
+    included) and the points just off each midpoint."""
+    xs, ys = [], []
+    for ring in rings:
+        ring = list(ring) + [ring[0]]
+        for (ax, ay), (bx, by) in zip(ring, ring[1:]):
+            mx, my = (ax + bx) / 2, (ay + by) / 2
+            xs += [ax, mx, mx - 0.5, mx + 0.5, mx]
+            ys += [ay, my, my, my, my + 0.5]
+    return xs, ys
+
+
+def test_point_in_rings_matches_numpy_bitwise(spark):
+    """The native Column equals the numpy even-odd reference bit for bit
+    on points on vertices and edges (horizontal edges included), in a
+    hole, in two disjoint outers one of which is left unclosed, and at
+    random float points."""
+    outer = [(0.0, 0.0), (100.0, 0.0), (100.0, 60.0), (40.0, 60.0),
+             (40.0, 100.0), (0.0, 100.0), (0.0, 0.0)]
+    hole = [(10.0, 10.0), (30.0, 10.0), (30.0, 30.0), (10.0, 30.0),
+            (10.0, 10.0)]
+    unclosed = [(200.0, 200.0), (260.0, 210.0), (230.0, 290.0)]
+    rings = [outer, hole, unclosed]
+    xs, ys = _ring_probes(rings)
+    rng = np.random.default_rng(7)
+    xs += rng.uniform(-10, 300, 400).tolist()
+    ys += rng.uniform(-10, 300, 400).tolist()
+    _check_against_numpy(spark, rings, xs, ys)
+
+
+def test_point_in_rings_large_ring_matches_numpy(spark):
+    """A 10 000-vertex ring with integer world-scale vertices (so some
+    edges are horizontal and many nearly so) stays one literal and
+    matches the reference on its vertices, edges and nearby points."""
+    n = 10_000
+    t = np.linspace(0, 2 * np.pi, n, endpoint=False)
+    r = (1 << 20) * (1 + 0.3 * np.sin(7 * t))
+    ring = [(float(round(6e8 + a * np.cos(b))), float(round(4e8 + a * np.sin(b))))
+            for a, b in zip(r, t)]
+    xs, ys = _ring_probes([ring])
+    sel = np.random.default_rng(3).choice(len(xs), 150, replace=False)
+    xs = [xs[i] for i in sel]
+    ys = [ys[i] for i in sel]
+    _check_against_numpy(spark, [ring], xs, ys)

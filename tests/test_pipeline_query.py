@@ -26,7 +26,6 @@ from geodesk_gol_spark.query.spatial import (
     bbox_filter,
     knn_bruteforce,
     knn_cell_rings,
-    point_in_polygon_udf,
     polygon_filter,
 )
 
@@ -464,6 +463,52 @@ def test_bbox_filter_matches_bruteforce(built):
     assert got.count() > 0
     assert got.exceptAll(brute).count() == 0
     assert brute.exceptAll(got).count() == 0
+
+
+def test_bbox_filter_join_path_equals_isin_path(built, monkeypatch):
+    """Past ``_ISIN_MAX`` tiles the prune is a broadcast join on a
+    driver-built hit table; it returns the same rows as the In-list."""
+    from geodesk_gol_spark.query import spatial
+
+    res, store = built
+    boxes = [(1115000000, 630000000, 1125000000, 645000000),
+             (0, 0, (1 << 31) - 1, (1 << 31) - 1)]
+    assert any(spatial.tiles_for_bbox(res.catalog, *b)[1] for b in boxes)
+    rows = store.drop("tags")  # set operations refuse map columns
+    isin = [bbox_filter(rows, res.catalog, *b) for b in boxes]
+    monkeypatch.setattr(spatial, "_ISIN_MAX", 0)
+    for b, want in zip(boxes, isin):
+        got = bbox_filter(rows, res.catalog, *b)
+        assert "BroadcastHashJoin" in _executed_plan(got)
+        assert want.count() > 0
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+
+
+def _executed_plan(df) -> str:
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_area_and_knn_plans_stay_in_jvm(built, spark):
+    """Neither area's PIP nor kNN's driver table takes a Python hop:
+    no EvalPython node (a Python UDF) and no ExistingRDD scan (a frame
+    built from a Python row list) in the executed plans."""
+    from geodesk_gol_spark.query.spatial import area_filter
+
+    res, store = built
+    nodes = store.filter(F.col("ftype") == 0)
+    cx, cy = 1120000000, 637000000
+    ring = [(cx - 4e6, cy - 4e6), (cx + 4e6, cy - 3e6), (cx, cy + 5e6)]
+    area = area_filter(nodes, res.catalog, [ring])
+    pts = nodes.select("id", F.col("cx").alias("x"), F.col("cy").alias("y"))
+    qs = pts.orderBy("id").limit(4).select(
+        F.col("id").alias("q_id"), F.col("x").alias("qx"), F.col("y").alias("qy"))
+    knn = knn_cell_rings(pts, qs, k=5, ring=2)
+    assert area.count() > 0
+    for df in (area, knn):
+        plan = _executed_plan(df)
+        assert "EvalPython" not in plan and "ExistingRDD" not in plan, plan
 
 
 def test_polygon_filter_convex(built, spark):
