@@ -3,8 +3,9 @@
 src/check/TileChecker.cpp per-tile deep validation).
 
 Spark shape: each invariant is one declarative aggregate over the store
-(plus catalog/exports/stubs), so the whole audit is a handful of scans
-that Catalyst fuses; violations count distributed, only per-check
+(plus catalog/exports/stubs).  Catalyst does not fuse them: the union
+of the seven counts scans and shuffles once per invariant, 15 Spark jobs
+on the sf0.001 build.  Violations count distributed, only per-check
 summaries reach the driver.  ``check_store`` returns a summary frame
 (check, n_bad); ``assert_store_ok`` raises on any violation with a
 sample of offending rows.

@@ -10,8 +10,10 @@ Reference anchors:
   resolution src/build/compile/Compiler.cpp:88-233
 
 Spark shapes: plain groupBy/window aggregations plus anti-joins; TEX
-numbers are a row_number window per tile ordered by typed_id (the
-deterministic ordering the reference gets from its sorted piles, O4).
+numbers are a dense_rank window per export tile ordered by typed_id
+over the J8 stubs (the deterministic ordering the reference gets from
+its sorted piles, O4), and the J7 export table is their distinct
+projection, so the stub pairs are computed once.
 """
 
 from __future__ import annotations
@@ -79,7 +81,7 @@ def _ref_frames(
     way_homes: DataFrame,
     rel_homes: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(edges, member_homes, ref_homes) shared by J7/J8."""
+    """(edges, member_homes, ref_homes): J8's reference graph."""
     way_edges = ways.select(
         (F.col("id") * 4 + TYPE_WAY).alias("ref_typed"),
         F.explode("node_ids").alias("mid"),
@@ -136,35 +138,6 @@ def _stub_pairs(
     )
 
 
-def export_tables(
-    ways: DataFrame,
-    relations: DataFrame,
-    node_tiles: DataFrame,
-    way_homes: DataFrame,
-    rel_homes: DataFrame,
-) -> DataFrame:
-    """J7: per-tile export table (tile_id, tex, typed_id).
-
-    A feature is *exported* from its designated home tile (tip) when some
-    referencing feature copy lives in a tile without a local copy of it
-    (that referencing tile holds a foreign (TIP, TEX) stub, J8).
-    TEX = dense per-tile index ordered by typed_id (deterministic, the
-    reference's sorted-pile order, O4).
-    """
-    edges, member_homes, ref_homes = _ref_frames(
-        ways, relations, node_tiles, way_homes, rel_homes
-    )
-    exported = (
-        _stub_pairs(edges, member_homes, ref_homes)
-        .select(F.col("tip").alias("tile_id"), F.col("m_typed").alias("typed_id"))
-        .distinct()
-    )
-    w = Window.partitionBy("tile_id").orderBy("typed_id")
-    return exported.withColumn(
-        "tex", (F.row_number().over(w) - 1).cast("int")
-    )
-
-
 def foreign_ref_stubs(
     ways: DataFrame,
     relations: DataFrame,
@@ -179,22 +152,37 @@ def foreign_ref_stubs(
     export index ``tex`` — with these rows the per-tile store is
     reference-closed: every member of every local feature is resolvable
     from the tile itself plus stubs (reference foreign-ref resolution,
-    src/build/compile/Compiler.cpp:88-233)."""
-    edges, member_homes, ref_homes = _ref_frames(
+    src/build/compile/Compiler.cpp:88-233).
+
+    TEX = dense per-tip index ordered by member typed_id (deterministic,
+    the reference's sorted-pile order, O4): every stub naming the same
+    (tip, member) carries the same TEX, so :func:`export_tables` is a
+    projection of these rows."""
+    stubs = _stub_pairs(*_ref_frames(
         ways, relations, node_tiles, way_homes, rel_homes
-    )
-    stubs = _stub_pairs(edges, member_homes, ref_homes)
-    exports = export_tables(
-        ways, relations, node_tiles, way_homes, rel_homes
-    ).select(
-        F.col("tile_id").alias("tip"),
-        F.col("typed_id").alias("m_typed"),
-        "tex",
-    )
-    return stubs.join(exports, ["tip", "m_typed"]).select(
+    ))
+    w = Window.partitionBy("tip").orderBy("m_typed")
+    return stubs.select(
         F.col("r_tile").alias("tile_id"),
         "ref_typed",
         F.col("m_typed").alias("member_typed"),
         "tip",
-        "tex",
+        (F.dense_rank().over(w) - 1).alias("tex"),
     )
+
+
+def export_tables(stubs: DataFrame) -> DataFrame:
+    """J7: per-tile export table (tile_id, typed_id, tex) of the
+    :func:`foreign_ref_stubs` rows.
+
+    A feature is *exported* from its designated home tile (tip) when some
+    referencing feature copy lives in a tile without a local copy of it
+    (that referencing tile holds a foreign (TIP, TEX) stub, J8) — the
+    reference writes each tile's export table once and the stubs from it
+    (ExportTable.h:10-48, ValidatorPileWriter.h:75-136).
+    """
+    return stubs.select(
+        F.col("tip").alias("tile_id"),
+        F.col("member_typed").alias("typed_id"),
+        "tex",
+    ).distinct()

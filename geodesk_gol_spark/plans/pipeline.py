@@ -7,7 +7,8 @@ with ``startPhase``).  ``STAGES`` in order, with the
 outputs each writes: docs; features (features_unified — per-kind frames
 are ``split_features`` of its read-back); catalog (proj, tile_catalog);
 assignment (the 8 ``assign_features`` frames, J1-J6); rows; validate
-(tile_exports J7, foreign_stubs J8, synthetic_tags A9); store
+(foreign_stubs J8, then tile_exports J7 projected from its read-back,
+and synthetic_tags A9); store
 (the Hilbert-clustered store and its lineage: O1/O4/S4); check;
 metrics (per-tile skew evidence from the lineage table).
 
@@ -102,9 +103,13 @@ class BuildResult:
             os.makedirs(path)
             pq.write_table(value, os.path.join(path, "part-00000.parquet"))
             open(os.path.join(path, "_SUCCESS"), "w").close()
+            self.frames[name] = self.read(name)
         else:
             value.write.mode("overwrite").parquet(path)
-        self.frames[name] = self.read(name)
+            # the file source makes the written schema nullable, just as
+            # inference would, without inference's job
+            self.frames[name] = self.spark.read.schema(
+                value.schema).parquet(path)
         return self.frames[name]
 
 
@@ -144,11 +149,12 @@ def _rows(b: BuildResult) -> dict:
 
 def _validate(b: BuildResult) -> dict:
     f, feats = b.frames, b.feats()
-    refs = (feats["ways"], feats["relations"],
-            f["node_tiles"], f["way_homes"], f["rel_homes"])
+    # J8 is the one stub-pair computation; J7 projects its read-back
+    stubs = b.checkpoint("foreign_stubs", V.foreign_ref_stubs(
+        feats["ways"], feats["relations"],
+        f["node_tiles"], f["way_homes"], f["rel_homes"]))
     return {
-        "tile_exports": V.export_tables(*refs),
-        "foreign_stubs": V.foreign_ref_stubs(*refs),
+        "tile_exports": V.export_tables(stubs),
         "synthetic_tags": (
             V.duplicate_location_nodes(f["points"])
             .unionByName(V.orphan_nodes(
@@ -274,12 +280,13 @@ def run_stages(spark: SparkSession, sf_dir: str, out_dir: str,
                given: dict[str, DataFrame] | None = None) -> BuildResult:
     """Compute (or resume) the stages that ``want`` needs in ``out_dir``.
 
-    Each needed output is checkpointed to parquet and read back; a stage
-    whose needed outputs all carry ``_SUCCESS`` is skipped, and one that
-    runs first deletes everything downstream of it.  ``given`` supplies
-    outputs in place of the stage that computes them.  Every stage that
-    ran appends ``{"stage", "seconds", ...}`` to ``metrics`` and to
-    ``metrics.jsonl``.
+    Each needed output is checkpointed to parquet and read back with the
+    schema it was written with (a resumed output's schema is inferred);
+    a stage whose needed outputs all carry ``_SUCCESS`` is skipped, and
+    one that runs first deletes everything downstream of it.  ``given``
+    supplies outputs in place of the stage that computes them.  Every
+    stage that ran appends ``{"stage", "seconds", ...}`` to ``metrics``
+    and to ``metrics.jsonl``.
     """
     given = given or {}
     os.makedirs(out_dir, exist_ok=True)
@@ -301,7 +308,8 @@ def run_stages(spark: SparkSession, sf_dir: str, out_dir: str,
         for o in outs:
             if o in res:
                 b.checkpoint(o, res[o])
-            else:
+            elif o not in b.frames:
+                # written by the stage without a checkpoint (the store)
                 b.frames[o] = b.read(o)
         b.metrics.append({
             "stage": st.name, "seconds": round(time.time() - t0, 3),

@@ -134,3 +134,66 @@ def test_kmeans_lloyd_iterates_to_fixed_point(spark):
     final_cents, _, ran = kmeans_lloyd(emb, cents, max_iters=50)
     assert ran < 50, "must converge on the fixture corpus"
     assert final_cents, "at least one centroid must survive"
+
+
+# query -> (substrings its formatted plan must hold, must not hold).  AQE
+# formatted plans print no codegen ids before execution, so the checks
+# are structural: filters reach the scan, no Python row path, no
+# all-pairs join, hash aggregates.
+_NO_PAIRS_NO_PY = ["CartesianProduct", "BatchEvalPython"]
+PLAN_AUDITS = {
+    "p2_bbox_query": (["PushedFilters"], ["CartesianProduct"]),
+    "p1_goql_highway_names": (["PushedFilters", "Filter"], _NO_PAIRS_NO_PY),
+    # gate queries read the materialized stage cache, so j1's plan is a
+    # 2-column pruned scan, not a join
+    "j1_node_tiles": (
+        ["ReadSchema: struct<typed_id:bigint,tile_id:int>"],
+        ["CartesianProduct", "Exchange"]),
+    # the catalog is capped driver-side (<= 65 535 rows), so its query
+    # is a LocalTableScan by design
+    "a4_tile_pyramid": (["LocalTableScan"], ["Exchange"]),
+    "a1_cell_counts": (["HashAggregate"], ["CartesianProduct"]),
+    "dedup_minhash_lsh": (["HashAggregate"], ["CartesianProduct"]),
+    "sample_stratified": (["WindowGroupLimit"], ["CartesianProduct"]),
+    "sample_temperature": (["WindowGroupLimit"], ["CartesianProduct"]),
+    # chunking explodes (a Generate node), never through Python
+    "text_chunks": (["Generate"], _NO_PAIRS_NO_PY),
+    "text_decontaminate": (["HashAggregate"], ["CartesianProduct"]),
+    "ann_kmeans_iter": (["HashAggregate"], ["BatchEvalPython"]),
+    "dedup_incremental": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "ann_kmeans_lloyd": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    # the sanctioned Python path is Arrow-batched mapInPandas
+    "media_frame_sample": (["MapInPandas"], ["BatchEvalPython"]),
+    # spatial joins: keyed candidate joins, never all-pairs
+    "j11_contains_join": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "j12_relation_contains": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "j13_dwithin_join": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "j14_way_within": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "dedup_simhash_pairs": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "dedup_embed_cosine": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    # its sparse fallback arm is a broadcast nested-loop join by design
+    "ann_ivf_topk": ([], ["BatchEvalPython"]),
+    "text_pii_scrub": ([], ["CartesianProduct", "BatchEvalPython",
+                            "Exchange"]),
+    "s8_change_merge": (["Window"], _NO_PAIRS_NO_PY),
+    # ring nesting is quadratic only within a relation, never across
+    "f9_geojson_ways": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "f9_relation_multipolygon": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "f9_relation_wkt": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "p1_goql_units": ([], _NO_PAIRS_NO_PY),
+    # event analytics: one user_id exchange feeding windows/aggregates
+    "events_funnel": (["Window"], _NO_PAIRS_NO_PY),
+    "events_retention": (["HashAggregate"], _NO_PAIRS_NO_PY),
+    "events_transitions": (["Window", "HashAggregate"], _NO_PAIRS_NO_PY),
+    # the 4-row query side broadcasts (a nested-loop join by design)
+    "ann_sq_topk": ([], ["BatchEvalPython"]),
+}
+
+
+@pytest.mark.parametrize("name", PLAN_AUDITS)
+def test_plan_audit(spark, capsys, name):
+    want, forbid = PLAN_AUDITS[name]
+    E.queries()[name](spark, SF_DIR).explain("formatted")
+    plan = capsys.readouterr().out
+    assert [w for w in want if w not in plan] == [], plan
+    assert [f for f in forbid if f in plan] == [], plan

@@ -137,37 +137,59 @@ def test_polygon_intersect_ways_dedup(spark):
 # J8 foreign-ref stubs on a tiny hand-built graph
 # ---------------------------------------------------------------------------
 
-def test_foreign_ref_stubs(spark):
-    from geodesk_gol_spark.operators.validate import (
-        export_tables,
-        foreign_ref_stubs,
+def _stub_graph(spark, ways, node_tiles, way_homes):
+    from geodesk_gol_spark.operators.validate import foreign_ref_stubs
+
+    return foreign_ref_stubs(
+        spark.createDataFrame(ways, "id long, node_ids array<long>"),
+        spark.createDataFrame(
+            [], "id long, members array<struct<t: int, id: long, role: string>>"
+        ),
+        spark.createDataFrame(node_tiles, "typed_id long, tile_id int"),
+        spark.createDataFrame(way_homes, "typed_id long, tile_id int"),
+        spark.createDataFrame([], "typed_id long, tile_id int"),
     )
+
+
+def test_foreign_ref_stubs(spark):
+    from geodesk_gol_spark.operators.validate import export_tables
 
     # way 1 (home tile 100) -> nodes 10 (tile 100, local) and 11 (tile 200)
-    ways = spark.createDataFrame(
-        [(1, [10, 11])], "id long, node_ids array<long>"
-    )
-    relations = spark.createDataFrame(
-        [], "id long, members array<struct<t: int, id: long, role: string>>"
-    )
-    node_tiles = spark.createDataFrame(
-        [(40, 100), (44, 200)], "typed_id long, tile_id int"
-    )
-    way_homes = spark.createDataFrame(
-        [(5, 100)], "typed_id long, tile_id int"
-    )
-    rel_homes = spark.createDataFrame([], "typed_id long, tile_id int")
-
-    exp = export_tables(ways, relations, node_tiles, way_homes, rel_homes)
-    rows = [r.asDict() for r in exp.collect()]
-    assert rows == [{"tile_id": 200, "typed_id": 44, "tex": 0}]
-
-    stubs = foreign_ref_stubs(ways, relations, node_tiles, way_homes, rel_homes)
+    stubs = _stub_graph(spark, [(1, [10, 11])], [(40, 100), (44, 200)],
+                        [(5, 100)])
     srows = [r.asDict() for r in stubs.collect()]
     assert srows == [
         {"tile_id": 100, "ref_typed": 5, "member_typed": 44,
          "tip": 200, "tex": 0}
     ]
+    exp = export_tables(stubs)
+    assert exp.columns == ["tile_id", "typed_id", "tex"]
+    assert [r.asDict() for r in exp.collect()] == [
+        {"tile_id": 200, "typed_id": 44, "tex": 0}]
+
+
+def test_foreign_ref_stubs_share_a_dense_tex(spark):
+    """Two tiles referencing one foreign member get the same TEX, and a
+    tip exporting two members numbers them 0, 1 — a row_number over the
+    stubs would give 0, 1, 2 at tip 300."""
+    from geodesk_gol_spark.operators.validate import export_tables
+
+    # ways 1 (tile 100) and 2 (tile 200) both use node 30 (tile 300);
+    # way 1 also uses node 31 (tile 300); node 10 is local to tile 100
+    stubs = _stub_graph(
+        spark,
+        [(1, [10, 30, 31]), (2, [30])],
+        [(40, 100), (120, 300), (124, 300)],
+        [(5, 100), (9, 200)],
+    )
+    got = sorted(tuple(r) for r in stubs.collect())
+    assert got == [
+        (100, 5, 120, 300, 0),
+        (100, 5, 124, 300, 1),
+        (200, 9, 120, 300, 0),
+    ]
+    assert sorted(tuple(r) for r in export_tables(stubs).collect()) == [
+        (300, 120, 0), (300, 124, 1)]
 
 
 # ---------------------------------------------------------------------------

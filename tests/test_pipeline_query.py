@@ -13,6 +13,7 @@ import shutil
 from pathlib import Path
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
@@ -124,6 +125,54 @@ def test_store_stage_job_budget(spark, built, tmp_path):
     b, total = jobs("store")
     assert [m["stage"] for m in b.metrics] == ["store"]
     assert 0 < total - inputs <= 6, (total, inputs)
+
+
+def test_validate_stage_job_budget(spark, built, tmp_path, monkeypatch):
+    """The validate stage runs at most 14 Spark jobs on the sf0.001
+    build, its checkpoint writes and read-backs included: J8 computes
+    the stub pairs once, J7 projects J8's read-back, and no read-back
+    infers its schema.  Computing the pairs three times, with inferred
+    read-backs, ran 25."""
+    import dataclasses
+
+    res, _ = built
+    d = str(tmp_path / "revalidate")
+    shutil.copytree(res.out_dir, d)
+    for name in ("tile_exports", "foreign_stubs", "synthetic_tags"):
+        shutil.rmtree(os.path.join(d, name))
+    sc = spark.sparkContext
+
+    def tagged(fn):
+        def run(b):
+            # validate is the last stage run, so every later job is its own
+            sc.setJobGroup("budget-validate", "validate stage job budget")
+            return fn(b)
+        return run
+
+    monkeypatch.setattr(pipeline, "STAGES", tuple(
+        dataclasses.replace(s, fn=tagged(s.fn)) if s.name == "validate"
+        else s for s in pipeline.STAGES))
+    try:
+        b = run_stages(spark, SF_DIR, d, BuildSettings.for_fixture(50),
+                       want=("validate",))
+        jobs = len(sc.statusTracker().getJobIdsForGroup("budget-validate"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [m["stage"] for m in b.metrics] == ["validate"]
+    assert 0 < jobs <= 14, jobs
+
+
+def test_read_backs_keep_the_inferred_schema(spark, built):
+    """Every Spark-read output of a build carries in memory the schema
+    that parquet inference gives its files, without inference's job."""
+    res, _ = built
+    frames = {n: df for n, df in res.frames.items()
+              if isinstance(df, DataFrame)}
+    assert len(frames) == 17
+    for name, df in frames.items():
+        assert df.schema == spark.read.parquet(res.path(name)).schema, name
+    assert frames["tile_exports"].columns == ["tile_id", "typed_id", "tex"]
 
 
 def test_resume_refuses_other_settings(spark, built):
