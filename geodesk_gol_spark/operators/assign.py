@@ -24,8 +24,6 @@ kind and compose upward through relation levels.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -117,9 +115,10 @@ def relation_extents(
 ):
     """J5/J6: resolve relation member extents, super-relations last.
 
-    Scale shape (mirrors the reference's split): member resolution for
-    *simple* relations (no relation members) is one distributed
-    join + aggregate — this is the heavy part (billions of members).
+    Scale shape (mirrors the reference's split): member resolution is
+    one distributed join + aggregate over every member — the heavy part
+    (billions of members); it resolves *simple* relations (no relation
+    members) outright and gives each super its own node/way extent.
     Super-relations resolve the way the reference resolves them: in one
     single-node pass over the rel→rel graph, a topological ready-set
     plus a cycle-break score (src/build/sort/SuperRelationResolver.cpp:
@@ -137,8 +136,9 @@ def relation_extents(
 
     Returns (rel_ext, unresolved): ``rel_ext`` = (typed_id, id, level,
     n_members, n_resolved, refcycle, *extent); ``unresolved`` = relations
-    with no resolvable member at all.  Both are eagerly checkpointed, so
-    callers may read them from concurrent jobs.
+    with no resolvable member at all.  Both read the cached member
+    aggregate, which the control job below materializes before return,
+    plus driver-built rows; concurrent readers recompute no member join.
 
     ``stats`` (optional dict) is filled with the driver-residue meters
     ``j6_pending_supers`` / ``j6_residue_edges`` — the exact row volume
@@ -174,12 +174,14 @@ def relation_extents(
         F.col("y").alias("maxy"),
     ).unionByName(wext.select("typed_id", *_EXT_COLS))
 
-    # one distributed pass: every relation × its node/way members.
-    # n_nonrel (node/way member rows, self-refs already dropped) feeds
-    # the cycle-break score
-    nonrel_agg = (
-        rm.filter(F.col("m_t") != TYPE_RELATION)
-        .join(base_ext.withColumnRenamed("typed_id", "m_typed"), "m_typed", "left")
+    # ONE distributed pass over every member: base_ext holds only node
+    # and way ids, so relation members never match and the extents and
+    # n_resolved cover node/way members alone.  n_nonrel feeds the
+    # cycle-break score; a relation with n_rel > 0 is a super-relation
+    is_rel = F.col("m_t") == TYPE_RELATION
+    agg = (
+        rm.join(base_ext.withColumnRenamed("typed_id", "m_typed"), "m_typed",
+                "left")
         .groupBy("rel_id", "n_members")
         .agg(
             F.count("minc").alias("n_resolved"),
@@ -191,25 +193,20 @@ def relation_extents(
             F.min("miny").alias("miny"),
             F.max("maxx").alias("maxx"),
             F.max("maxy").alias("maxy"),
-            F.count(F.lit(1)).alias("n_nonrel"),
+            F.count(F.when(~is_rel, 1)).alias("n_nonrel"),
+            F.count(F.when(is_rel, 1)).alias("n_rel"),
         )
         .persist()
     )
 
-    edges = rm.filter(F.col("m_t") == TYPE_RELATION).select(
-        "rel_id", "n_members", F.shiftright("m_typed", 2).alias("member_rel")
-    ).persist()
-    # one row per super-relation id; coalesce so the anti-join below
-    # schedules a handful of tasks, not one per shuffle partition
-    supers = edges.select("rel_id").distinct().coalesce(8).persist()
-
-    # ONE control job meters the residue (every super is pending, so the
-    # edge total is exactly what the driver will pull) before any collect
-    row = edges.agg(
-        F.count(F.lit(1)).alias("ne"),
-        F.countDistinct("rel_id").alias("ns"),
+    # ONE control job materializes rm and agg and meters the residue
+    # (every super is pending, so the edge total is exactly what the
+    # driver will pull) before any collect
+    row = agg.agg(
+        F.sum("n_rel").alias("ne"),
+        F.count(F.when(F.col("n_rel") > 0, 1)).alias("ns"),
     ).collect()[0]
-    n_edges, n_supers = int(row["ne"]), int(row["ns"])
+    n_edges, n_supers = int(row["ne"] or 0), int(row["ns"])
     if stats is not None:
         stats["j6_pending_supers"] = n_supers
         stats["j6_residue_edges"] = n_edges
@@ -222,14 +219,11 @@ def relation_extents(
     out_cols = ["rel_id", "n_members", "n_resolved", *_EXT_COLS,
                 "level", "refcycle"]
     simple_part = (
-        nonrel_agg.join(supers, "rel_id", "left_anti")
+        agg.filter(F.col("n_rel") == 0)
         .withColumn("level", F.lit(0))
         .withColumn("refcycle", F.lit(False))
-        .persist()
     )
-    resolved_all = (
-        simple_part.filter(F.col("n_resolved") > 0).select(*out_cols).persist()
-    )
+    resolved_all = simple_part.filter(F.col("n_resolved") > 0).select(*out_cols)
     unresolved = simple_part.filter(F.col("n_resolved") == 0).select("rel_id")
     # relations with ZERO member rows after the self-ref drop (empty
     # members array, or only self-references) have no row in rm at all —
@@ -238,7 +232,7 @@ def relation_extents(
     # vanishing from every output
     unresolved = unresolved.unionByName(
         relations.select(F.col("id").alias("rel_id"))
-        .join(rm.select("rel_id").distinct(), "rel_id", "left_anti")
+        .join(agg, "rel_id", "left_anti")
     )
 
     if n_supers:
@@ -247,6 +241,9 @@ def relation_extents(
         # member's extent (null unless the member is a resolved simple
         # relation — pending supers resolve below, missing or empty
         # targets never do)
+        edges = rm.filter(is_rel).select(
+            "rel_id", "n_members", F.shiftright("m_typed", 2).alias("member_rel")
+        )
         residue = (
             edges.join(
                 resolved_all.select(
@@ -261,7 +258,7 @@ def relation_extents(
             ).alias("members"))
             .join(relations.select(F.col("id").alias("rel_id"), "tags"),
                   "rel_id", "left")
-            .join(nonrel_agg.drop("n_members"), "rel_id", "left")
+            .join(agg.drop("n_members"), "rel_id", "left")
             .collect()
         )
         pend_tags: dict[int, dict] = {}
@@ -389,7 +386,7 @@ def relation_extents(
                 spark.createDataFrame(
                     pd.DataFrame({"rel_id": np.array(dead, dtype=np.int64)}),
                     "rel_id long")
-            ).distinct()
+            )
 
     rel_ext = resolved_all.select(
         (F.col("rel_id") * 4 + TYPE_RELATION).alias("typed_id"),
@@ -400,28 +397,7 @@ def relation_extents(
         "refcycle",
         *_EXT_COLS,
     )
-    # resolved_all's logical plan reaches back through the whole member
-    # join — every downstream action would pay Catalyst re-planning that
-    # giant tree (~2 s of DRIVER time per action at sf0.1, even on a
-    # cache hit).  localCheckpoint collapses the plan to an RDD scan.
-    # No REBALANCE hint: under AQE, localCheckpoint's toRdd materializes
-    # every exchange in the plan at CALL time, so a rebalance turns the
-    # checkpoint into an extra shuffle job (measured 5.5 s at sf0.1);
-    # partition sizing is already governed upstream — the frame inherits
-    # the member-join aggregation's shuffle partitioning
-    # (spark.sql.shuffle.partitions), ~75 MB/partition even at planet
-    # scale (12M relations × ~100 B / 16).  EAGER: callers fan the
-    # outputs into CONCURRENT jobs (bench/gate write feature_tiles and
-    # extents in parallel) and a lazy checkpoint's first-action
-    # materialization does not serialize concurrent computers — each
-    # racing job would recompute the full relation chain.  rel_ext goes
-    # first: it materializes the persisted chain that unresolved then
-    # reads from cache (consumers like J7 exports re-planned
-    # unresolved's anti-join chain on every use).
-    return (
-        rel_ext.localCheckpoint(eager=True),
-        unresolved.localCheckpoint(eager=True),
-    )
+    return rel_ext, unresolved
 
 
 # ---------------------------------------------------------------------------
@@ -588,25 +564,20 @@ def assign_features(
     # pass over the member set that a 100 TB build feels.
     wext = way_extents(feats["ways"], assigned, member_tiles=True).persist()
 
+    way_homes = home_tiles(wext, catalog).persist()
     # Every frame the outputs share is materialized before return:
     # callers write feature_tiles, points and extents as concurrent jobs,
     # and the cache does not serialize racing first computations (each
-    # racer would redo the J1 lookup + J2 member join).  ONE job first
-    # materializes wext and, through it, assigned; a failure there
-    # surfaces before the relation chain starts.
-    wext.count()
-    # way_homes (shared by feature_tiles and way_ghosts) then counts
-    # beside the relation chain: both only read the now-cached wext and
-    # assigned, and the overlap hides the count's job latency (measured
-    # on 4 cores: 1-2 s of assign wall)
-    way_homes = home_tiles(wext, catalog).persist()
+    # racer would redo the J1 lookup + J2 member join).  Two actions
+    # cover them all.  This one caches way_homes and, through it, wext
+    # and assigned, so a way-extent failure surfaces before the relation
+    # chain starts; relation_extents' control job then caches the member
+    # aggregate that rel_ext and unresolved read.
+    way_homes.count()
     j6_stats: dict = {}
-    with ThreadPoolExecutor(1) as pool:
-        f_wh = pool.submit(way_homes.count)
-        rel_ext, unresolved = relation_extents(
-            feats["relations"], points, wext, j6_stats
-        )
-        f_wh.result()
+    rel_ext, unresolved = relation_extents(
+        feats["relations"], points, wext, j6_stats
+    )
 
     # J4 ghosts: member-node tiles minus the home tiles — narrow explode
     # over the (small, cached) per-way aggregate

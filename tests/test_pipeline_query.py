@@ -48,6 +48,14 @@ def _sig(df):
     ).collect()[0]
 
 
+def _copy_without(res, out_dir, names):
+    """Copy the build ``res`` to ``out_dir`` without the outputs ``names``."""
+    shutil.copytree(res.out_dir, out_dir)
+    for name in names:
+        shutil.rmtree(os.path.join(out_dir, name))
+    return out_dir
+
+
 def test_resume_skips_stages(spark, built):
     res, _ = built
     import time
@@ -70,10 +78,8 @@ def test_resume_after_midstage_crash(spark, built, tmp_path, monkeypatch):
     reused, and the store is value-identical to the undamaged one
     (idempotent stage re-runs = the reference's startPhase model)."""
     res, store = built
-    crash_dir = str(tmp_path / "crashed")
-    shutil.copytree(res.out_dir, crash_dir)
-    for name in ("store", "lineage"):
-        shutil.rmtree(os.path.join(crash_dir, name))
+    crash_dir = _copy_without(res, str(tmp_path / "crashed"),
+                              ("store", "lineage"))
     # several batches, and a batch write that fails after the first
     monkeypatch.setattr(compile_tiles, "BATCH_ROWS", store.count() // 4)
     real = crash_store_write_after(monkeypatch, 1)
@@ -104,10 +110,7 @@ def test_store_stage_job_budget(spark, built, tmp_path):
     sampled, per-batch writer it replaced ran 31.  Reading the stage's
     inputs back is the same for any stage and is not counted."""
     res, _ = built
-    d = str(tmp_path / "restore")
-    shutil.copytree(res.out_dir, d)
-    for name in ("store", "lineage"):
-        shutil.rmtree(os.path.join(d, name))
+    d = _copy_without(res, str(tmp_path / "restore"), ("store", "lineage"))
     sc = spark.sparkContext
 
     def jobs(want):
@@ -127,40 +130,75 @@ def test_store_stage_job_budget(spark, built, tmp_path):
     assert 0 < total - inputs <= 6, (total, inputs)
 
 
+def _stage_jobs(spark, monkeypatch, out_dir, stage):
+    """Run ``stage`` alone in ``out_dir``, resuming its inputs, and count
+    its Spark jobs: a job group set inside the stage tags them, so the
+    read-backs of its inputs are not counted.  Returns (result, jobs)."""
+    import dataclasses
+
+    sc = spark.sparkContext
+    group = f"budget-{stage}"
+
+    def tagged(fn):
+        def run(b):
+            # the stage is the last one run, so every later job is its own
+            sc.setJobGroup(group, f"{stage} stage job budget")
+            return fn(b)
+        return run
+
+    monkeypatch.setattr(pipeline, "STAGES", tuple(
+        dataclasses.replace(s, fn=tagged(s.fn)) if s.name == stage
+        else s for s in pipeline.STAGES))
+    try:
+        b = run_stages(spark, SF_DIR, out_dir, BuildSettings.for_fixture(50),
+                       want=(stage,))
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert [m["stage"] for m in b.metrics] == [stage]
+    return b, jobs
+
+
 def test_validate_stage_job_budget(spark, built, tmp_path, monkeypatch):
     """The validate stage runs at most 14 Spark jobs on the sf0.001
     build, its checkpoint writes and read-backs included: J8 computes
     the stub pairs once, J7 projects J8's read-back, and no read-back
     infers its schema.  Computing the pairs three times, with inferred
     read-backs, ran 25."""
-    import dataclasses
-
     res, _ = built
-    d = str(tmp_path / "revalidate")
-    shutil.copytree(res.out_dir, d)
-    for name in ("tile_exports", "foreign_stubs", "synthetic_tags"):
-        shutil.rmtree(os.path.join(d, name))
-    sc = spark.sparkContext
-
-    def tagged(fn):
-        def run(b):
-            # validate is the last stage run, so every later job is its own
-            sc.setJobGroup("budget-validate", "validate stage job budget")
-            return fn(b)
-        return run
-
-    monkeypatch.setattr(pipeline, "STAGES", tuple(
-        dataclasses.replace(s, fn=tagged(s.fn)) if s.name == "validate"
-        else s for s in pipeline.STAGES))
-    try:
-        b = run_stages(spark, SF_DIR, d, BuildSettings.for_fixture(50),
-                       want=("validate",))
-        jobs = len(sc.statusTracker().getJobIdsForGroup("budget-validate"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert [m["stage"] for m in b.metrics] == ["validate"]
+    d = _copy_without(res, str(tmp_path / "revalidate"),
+                      ("tile_exports", "foreign_stubs", "synthetic_tags"))
+    _, jobs = _stage_jobs(spark, monkeypatch, d, "validate")
     assert 0 < jobs <= 14, jobs
+
+
+def test_assignment_stage_job_budget(spark, built, tmp_path, monkeypatch):
+    """The assignment stage runs at most 30 Spark jobs on the sf0.001
+    build, its 8 checkpoint writes included: one action caches the way
+    frames, one control job caches the relation-member aggregate, and
+    no eager checkpoint of the relation chain runs.  With a side thread,
+    separate persists per relation frame and two localCheckpoints it
+    ran 38 jobs in the stage's group, plus 3 in the thread."""
+    res, _ = built
+    d = _copy_without(res, str(tmp_path / "reassign"), pipeline.ASSIGNMENT)
+    _, jobs = _stage_jobs(spark, monkeypatch, d, "assignment")
+    assert 0 < jobs <= 30, jobs
+
+
+def test_assignment_stage_leaves_no_persisted_rdd(spark, built, tmp_path):
+    """``run_stages`` releases every RDD the assignment stage persists.
+    The session holds other caches, so compare RDD ids, not counts.
+    Eager localCheckpoints of rel_ext and unresolved survived
+    ``clearCache`` and leaked two RDDs per build."""
+    res, _ = built
+    d = _copy_without(res, str(tmp_path / "noleak"), pipeline.ASSIGNMENT)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    b = run_stages(spark, SF_DIR, d, BuildSettings.for_fixture(50),
+                   want=("assignment",))
+    assert [m["stage"] for m in b.metrics] == ["assignment"]
+    assert set(persisted().keys()) <= before
 
 
 def test_read_backs_keep_the_inferred_schema(spark, built):
