@@ -18,11 +18,14 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fs
 from ..plans.pyramid import TileCatalog
-from ..query.spatial import tiles_for_bbox
+from ..query import spatial
 from .compile_tiles import write_store
 
 MANIFEST = "manifest.json"
@@ -54,6 +57,24 @@ def _tile_checksums(rows: DataFrame) -> dict[int, dict]:
     }
 
 
+def _bbox_tiles(rows: DataFrame, catalog: TileCatalog,
+                bbox: tuple[int, int, int, int]) -> DataFrame:
+    """The rows of the tiles ``bbox`` intersects (U3), pruned as
+    ``spatial.bbox_filter`` prunes: small sets push down as an
+    In-predicate; large ones (up to 65 535 tiles — too many literals for
+    a sane plan) semi-join a broadcast Arrow-built frame."""
+    hit, _ = spatial.tiles_for_bbox(catalog, *bbox)
+    if len(hit) <= spatial._ISIN_MAX:
+        return rows.filter(F.col("tile_id").isin(hit))
+    hit_df = rows.sparkSession.createDataFrame(
+        pd.DataFrame({"tile_id": np.array(hit, dtype=np.int32)}),
+        "tile_id int")
+    # a USING join moves tile_id first: keep the rows' column order, on
+    # which the files' schema and the checksums depend
+    return (rows.join(F.broadcast(hit_df), "tile_id", "left_semi")
+            .select(*rows.columns))
+
+
 def save_tiles(
     store: DataFrame,
     catalog: TileCatalog,
@@ -62,33 +83,15 @@ def save_tiles(
 ) -> dict:
     """S5: export tiles (all, or those intersecting ``bbox`` — U3).
 
-    The manifest is written with driver-local file I/O, so ``path`` must
-    be a locally mounted filesystem (fail fast before the expensive
-    parquet write, not after)."""
-    if "://" in path:
-        raise NotImplementedError(
-            f"save_tiles writes its manifest with local file I/O; "
-            f"mount the target or pass a local path (got {path!r})")
-    if bbox is not None:
-        hit, _ = tiles_for_bbox(catalog, *bbox)
-        # same pruning strategy as query/spatial.bbox_filter: small sets
-        # push down as an In-predicate; large ones (up to 65 535 tiles —
-        # too many literals for a sane plan) prune via broadcast semi-join
-        if len(hit) <= 256:
-            sel = store.filter(F.col("tile_id").isin(hit))
-        else:
-            hit_df = store.sparkSession.createDataFrame(
-                [(int(t),) for t in hit], "tile_id int")
-            sel = store.join(F.broadcast(hit_df), "tile_id", "left_semi")
-    else:
-        sel = store
+    ``path`` is bare or any Hadoop URI: the tiles are written by
+    :func:`write_store` and the manifest through
+    :mod:`geodesk_gol_spark.fs`."""
+    sel = store if bbox is None else _bbox_tiles(store, catalog, bbox)
     # the store's own writer and layout: contiguous tile ranges per file
     # + row-group stats pruning (schema survives the round-trip)
-    write_store(sel, os.path.join(path, "tiles"))
-    files = sorted(
-        f for f in os.listdir(os.path.join(path, "tiles"))
-        if f.endswith(".parquet")
-    )
+    write_store(sel, f"{path}/tiles")
+    files = sorted(f for f in fs.ls(f"{path}/tiles")
+                   if f.endswith(".parquet"))
     manifest = {
         "tiles": _tile_checksums(sel),
         "bbox": list(bbox) if bbox else None,
@@ -98,8 +101,7 @@ def save_tiles(
         # server; src/gol/load/TileDownloadClient.h)
         "files": files,
     }
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(manifest, f)
+    fs.write_text(f"{path}/{MANIFEST}", json.dumps(manifest))
     return manifest
 
 
@@ -176,10 +178,9 @@ def load_tiles(spark: SparkSession, path: str, verify: bool = True,
             tag = hashlib.sha256(path.encode()).hexdigest()[:12]
             cache_dir = os.path.join(tempfile.gettempdir(), f"gol_archive_{tag}")
         path = _fetch_archive(path, cache_dir)
-    rows = spark.read.parquet(os.path.join(path, "tiles"))
+    rows = spark.read.parquet(f"{path}/tiles")
     if verify:
-        with open(os.path.join(path, MANIFEST)) as f:
-            manifest = json.load(f)
+        manifest = json.loads(fs.read_text(f"{path}/{MANIFEST}"))
         got = _tile_checksums(rows)
         want = {int(k): v for k, v in manifest["tiles"].items()}
         if got != want:
@@ -217,45 +218,33 @@ def copy_tiles(
     leaves the content only in the ``.old`` sibling; entry recovery
     below restores it, making the whole copy crash-safe.  Returns the
     new target manifest."""
-    import shutil
-
     # crash recovery: a prior run that died between its two swap renames
     # left the original content in `.old` with no target — restore it
     # before reading, so this run merges into the real base instead of
     # silently seeding the target from source alone
-    _old = target.rstrip("/") + ".old"
-    if os.path.exists(_old) and not os.path.exists(
-        os.path.join(target, MANIFEST)
-    ):
-        if os.path.exists(target):
-            shutil.rmtree(target)
-        os.rename(_old, target)
+    old = target.rstrip("/") + ".old"
+    if not fs.exists(f"{target}/{MANIFEST}") and fs.exists(old):
+        fs.delete(target)
+        fs.rename(old, target)
 
     src = load_tiles(spark, source, verify=verify)
     if bbox is not None:
         if catalog is None:
             raise ValueError("bbox copy requires the tile catalog")
-        hit, _ = tiles_for_bbox(catalog, *bbox)
-        hit_df = spark.createDataFrame(
-            [(int(t),) for t in hit], "tile_id int")
-        src = src.join(F.broadcast(hit_df), "tile_id", "left_semi")
-    if os.path.exists(os.path.join(target, MANIFEST)):
+        src = _bbox_tiles(src, catalog, bbox)
+    if fs.exists(f"{target}/{MANIFEST}"):
         base = load_tiles(spark, target, verify=verify)
         merged = merge_archives(base, src)
     else:
         merged = src
     tmp = target.rstrip("/") + ".copytmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
+    fs.delete(tmp)
     manifest = save_tiles(merged, catalog, tmp)
-    old = target.rstrip("/") + ".old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    if os.path.exists(target):
-        os.rename(target, old)
-    os.rename(tmp, target)
-    if os.path.exists(old):
-        shutil.rmtree(old)
+    fs.delete(old)
+    if fs.exists(target):
+        fs.rename(target, old)
+    fs.rename(tmp, target)
+    fs.delete(old)
     return manifest
 
 
@@ -269,15 +258,13 @@ def install_archive(spark: SparkSession, url: str, dest: str,
     manifest comparison; a republished URL invalidates stale parts
     (see :func:`_fetch_archive`)."""
     rows = load_tiles(spark, url, verify=verify, cache_dir=dest)
-    with open(os.path.join(dest, MANIFEST)) as f:
-        manifest = json.load(f)
+    manifest = json.loads(fs.read_text(f"{dest}/{MANIFEST}"))
     record = {
         "source": url,
         "tiles": len(manifest["tiles"]),
         "rows": int(sum(t["rows"] for t in manifest["tiles"].values())),
         "verified": bool(verify),
     }
-    with open(os.path.join(dest, "installed.json"), "w") as f:
-        json.dump(record, f)
+    fs.write_text(f"{dest}/installed.json", json.dumps(record))
     _ = rows  # the DataFrame is the caller's to use; install is I/O
     return record

@@ -17,15 +17,13 @@ locality the reference gets from its R-tree leaf packing, with
 
 from __future__ import annotations
 
-import glob
 import json
-import os
-import shutil
 import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import fs
 from ..functions.hilbert import ORDER, hilbert_udf
 
 WORLD_BITS = 31
@@ -180,11 +178,19 @@ def plan_store(counts, n_files: int, batch_rows: int) -> list[dict]:
             for lo, hi, r in zip(los, his, runs or [[]])]
 
 
-def _write_batch(rows: DataFrame, bdir: str, batch: dict) -> None:
-    """Write one batch as ``<bdir>/part-<index>.parquet``, one file per
-    planned range, then commit it: its range record, then ``_SUCCESS``."""
+def _parts(batch: dict) -> list[str]:
+    """Store file names a batch commits (an empty store's one file)."""
+    return [f"part-{j:05d}.parquet" for j, *_ in batch["files"]] or [
+        "part-00000.parquet"]
+
+
+def _write_batch(rows: DataFrame, path: str, i: int, batch: dict) -> None:
+    """Stage batch ``i`` under ``<path>/_batches/b<i>``, one file per
+    planned range, rename each file to ``<path>/part-<index>.parquet``,
+    then commit the batch by writing its range record
+    ``<path>/_batches/b<i>.json``."""
     files = batch["files"]
-    stage = os.path.join(bdir, "_spark")
+    stage = f"{path}/_batches/b{i:03d}"
     sel = rows.filter(F.col("tile_id").between(batch["tile_lo"],
                                                batch["tile_hi"]))
     if files:
@@ -196,27 +202,24 @@ def _write_batch(rows: DataFrame, bdir: str, batch: dict) -> None:
             .sortWithinPartitions("_file", *_SORT)
             .write.partitionBy("_file").parquet(stage)
         )
-        for j, *_ in files:
-            [src] = glob.glob(os.path.join(stage, f"_file={j}", "*.parquet"))
-            os.rename(src, os.path.join(bdir, f"part-{j:05d}.parquet"))
+        dirs = [f"{stage}/_file={j}" for j, *_ in files]
     else:  # no rows: one schema-only file keeps the store readable
         sel.coalesce(1).write.parquet(stage)
-        [src] = glob.glob(os.path.join(stage, "*.parquet"))
-        os.rename(src, os.path.join(bdir, "part-00000.parquet"))
-    shutil.rmtree(stage)
-    with open(os.path.join(bdir, "_RANGE.json"), "w") as fh:
-        json.dump(batch, fh)
-    open(os.path.join(bdir, "_SUCCESS"), "w").close()
+        dirs = [stage]
+    for d, name in zip(dirs, _parts(batch)):
+        [src] = [f for f in fs.ls(d) if f.endswith(".parquet")]
+        fs.rename(f"{d}/{src}", f"{path}/{name}")
+    fs.write_text(f"{path}/_batches/b{i:03d}.json", json.dumps(batch))
 
 
-def _committed(bdir: str, batch: dict) -> bool:
+def _committed(path: str, i: int, batch: dict) -> bool:
     """A batch is reused only if it committed the same planned ranges."""
-    if not os.path.exists(os.path.join(bdir, "_SUCCESS")):
+    marker = f"{path}/_batches/b{i:03d}.json"
+    if not fs.exists(marker):
         return False
     try:
-        with open(os.path.join(bdir, "_RANGE.json")) as fh:
-            return json.load(fh) == batch
-    except (OSError, ValueError):
+        return json.loads(fs.read_text(marker)) == batch
+    except ValueError:  # a marker cut short by a crash
         return False
 
 
@@ -235,13 +238,16 @@ def write_store(rows: DataFrame, path: str) -> list[dict]:
 
     The reference commits each compiled tile under a store transaction
     (src/build/compile/Compiler.cpp:960-976) inside a restartable build
-    phase.  Here the commit unit is a batch of files: each batch is
-    written under ``<path>/_batches/b<i>`` and committed by its range
-    record and ``_SUCCESS``; a re-run reuses every batch committed with
-    the same plan.  The batches are then hard-linked into ``<path>``,
-    ``<path>/_SUCCESS`` is stamped and ``_batches`` removed, so a
-    finished store holds only its parquet files and ``_SUCCESS``.  A
-    finished store at ``path`` is overwritten.
+    phase.  Here the commit unit is a batch of files, committed by
+    rename alone: Spark stages batch ``i`` under ``<path>/_batches/b<i>``,
+    each staged file is renamed to its final ``<path>/part-<index>.parquet``,
+    and the batch's range record ``<path>/_batches/b<i>.json`` marks it
+    committed.  A re-run keeps the files of every batch committed with
+    the same plan, never rewriting them, and deletes every other
+    ``part-*``.  Finally ``_batches`` is removed and ``<path>/_SUCCESS``
+    stamped, so a finished store holds only its parquet files and
+    ``_SUCCESS``.  A finished store at ``path`` is overwritten.  ``path``
+    is bare or any Hadoop URI (see :mod:`geodesk_gol_spark.fs`).
 
     Returns the lineage records: one ``store_batch`` per batch (tile
     range, rows, seconds, resumed) and one ``store_tile`` per tile (its
@@ -251,37 +257,31 @@ def write_store(rows: DataFrame, path: str) -> list[dict]:
     counts = [(r[0], r[1]) for r in
               rows.groupBy(F.expr(_KEY)).count().collect()]
     batches = plan_store(counts, n, BATCH_ROWS)
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        shutil.rmtree(path)
+    if fs.exists(f"{path}/_SUCCESS"):
+        fs.delete(path)
+    resumed = [_committed(path, i, b) for i, b in enumerate(batches)]
+    # drop every other marker (and staging dir) before the files it
+    # covers: a crash in between must not leave a marker without files
+    keep = {f"b{i:03d}.json" for i, r in enumerate(resumed) if r}
+    for name in fs.ls(f"{path}/_batches"):
+        if name not in keep:
+            fs.delete(f"{path}/_batches/{name}")
+    keep = {name for b, r in zip(batches, resumed) if r for name in _parts(b)}
+    for name in fs.ls(path):
+        if name.startswith("part-") and name not in keep:
+            fs.delete(f"{path}/{name}")
     lineage = []
     for i, batch in enumerate(batches):
-        bdir = os.path.join(path, "_batches", f"b{i:03d}")
         t0 = time.time()
-        resumed = _committed(bdir, batch)
-        if not resumed:
-            shutil.rmtree(bdir, ignore_errors=True)
-            os.makedirs(bdir)
-            _write_batch(rows, bdir, batch)
+        if not resumed[i]:
+            _write_batch(rows, path, i, batch)
         lineage.append({
             "stage": "store_batch", "batch": i,
             "tile_lo": batch["tile_lo"], "tile_hi": batch["tile_hi"],
             "n_rows": sum(f[3] for f in batch["files"]),
-            "seconds": round(time.time() - t0, 3), "resumed": resumed,
+            "seconds": round(time.time() - t0, 3), "resumed": resumed[i],
         })
-    # finalize: clear a partial finalize, link the planned batches'
-    # files (not a stale plan's), stamp
-    for name in os.listdir(path):
-        if name != "_batches":
-            os.remove(os.path.join(path, name))
-    for i in range(len(batches)):
-        for f in glob.glob(os.path.join(path, "_batches", f"b{i:03d}",
-                                        "*.parquet")):
-            dst = os.path.join(path, os.path.basename(f))
-            try:
-                os.link(f, dst)
-            except OSError:
-                shutil.copy2(f, dst)
-    open(os.path.join(path, "_SUCCESS"), "w").close()
-    shutil.rmtree(os.path.join(path, "_batches"))
+    fs.delete(f"{path}/_batches")
+    fs.write_text(f"{path}/_SUCCESS", "")
     return lineage + [{"stage": "store_tile", "tile_id": t, "n_rows": c}
                       for t, c in _tile_rows(counts).items()]

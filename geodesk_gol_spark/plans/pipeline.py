@@ -26,9 +26,9 @@ raises ``ValueError``.
 
 from __future__ import annotations
 
+import io
 import json
 import os
-import shutil
 import time
 from collections.abc import Callable, Iterable
 from dataclasses import asdict, dataclass, field
@@ -39,6 +39,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fs
 from ..config import BuildSettings
 from ..functions.mercator import with_projection
 from ..operators import validate as V
@@ -58,7 +59,7 @@ LINEAGE = pa.schema([
 
 
 def _done(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+    return fs.exists(os.path.join(path, "_SUCCESS"))
 
 
 @dataclass
@@ -87,8 +88,10 @@ class BuildResult:
 
     def read(self, name: str):
         if name == "tile_catalog":
+            data = fs.read_bytes(
+                os.path.join(self.path(name), "part-00000.parquet"))
             return TileCatalog(settings=self.settings,
-                               tiles=pd.read_parquet(self.path(name)))
+                               tiles=pd.read_parquet(io.BytesIO(data)))
         return self.spark.read.parquet(self.path(name))
 
     def checkpoint(self, name: str, value):
@@ -97,12 +100,14 @@ class BuildResult:
         if isinstance(value, TileCatalog):
             value = pa.Table.from_pandas(value.tiles, preserve_index=False)
         if isinstance(value, pa.Table):
-            # driver-side tables: one local file keeps their dtypes and
-            # order, and runs no Spark job
-            shutil.rmtree(path, ignore_errors=True)
-            os.makedirs(path)
-            pq.write_table(value, os.path.join(path, "part-00000.parquet"))
-            open(os.path.join(path, "_SUCCESS"), "w").close()
+            # driver-side tables: one file keeps their dtypes and order,
+            # and runs no Spark job
+            buf = pa.BufferOutputStream()
+            pq.write_table(value, buf)
+            fs.delete(path)
+            fs.write_bytes(os.path.join(path, "part-00000.parquet"),
+                           buf.getvalue().to_pybytes())
+            fs.write_text(os.path.join(path, "_SUCCESS"), "")
             self.frames[name] = self.read(name)
         else:
             value.write.mode("overwrite").parquet(path)
@@ -261,17 +266,15 @@ def _pin_settings(out_dir: str, sf_dir: str, settings: BuildSettings) -> bool:
     resume, refuse one that differs.  Returns whether it resumes."""
     path = os.path.join(out_dir, "_build.json")
     ident = json.loads(json.dumps(
-        {"sf_dir": os.path.abspath(sf_dir), "settings": asdict(settings)}))
-    if os.path.exists(path):
-        with open(path) as f:
-            held = json.load(f)
+        {"sf_dir": fs.qualify(sf_dir), "settings": asdict(settings)}))
+    if fs.exists(path):
+        held = json.loads(fs.read_text(path))
         if held != ident:
             raise ValueError(
                 f"{out_dir} holds the build of {held}; resuming it as "
                 f"{ident} would mix two builds")
         return True
-    with open(path, "w") as f:
-        json.dump(ident, f)
+    fs.write_text(path, json.dumps(ident))
     return False
 
 
@@ -289,7 +292,6 @@ def run_stages(spark: SparkSession, sf_dir: str, out_dir: str,
     and to ``metrics.jsonl``.
     """
     given = given or {}
-    os.makedirs(out_dir, exist_ok=True)
     resumes = _pin_settings(out_dir, sf_dir, settings)
     need = _select(want, given)
     b = BuildResult(spark, sf_dir, out_dir, settings)
@@ -301,7 +303,7 @@ def run_stages(spark: SparkSession, sf_dir: str, out_dir: str,
             b.frames.update({o: b.read(o) for o in outs})
             continue
         for o in _downstream(i):
-            shutil.rmtree(b.path(o), ignore_errors=True)
+            fs.delete(b.path(o))
         t0 = time.time()
         res = ({o: given[o] for o in st.writes}
                if given.keys() & set(st.writes) else st.fn(b))
@@ -317,9 +319,10 @@ def run_stages(spark: SparkSession, sf_dir: str, out_dir: str,
         })
     # build-time persists are dead weight now: every output is a read-back
     spark.catalog.clearCache()
-    with open(os.path.join(out_dir, "metrics.jsonl"), "a") as f:
-        for m in b.metrics:
-            f.write(json.dumps(m) + "\n")
+    # read and rewrite: not every filesystem can append
+    log = os.path.join(out_dir, "metrics.jsonl")
+    fs.write_text(log, (fs.read_text(log) if fs.exists(log) else "")
+                  + "".join(json.dumps(m) + "\n" for m in b.metrics))
     return b
 
 

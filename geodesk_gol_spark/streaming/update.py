@@ -22,8 +22,12 @@ reference's replication client, src/change/ReplicationClient.cpp).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .. import fs
 
 CHANGE_OPS = ("create", "modify", "delete")
 
@@ -156,19 +160,12 @@ def prepare_node_changes(changes: DataFrame, catalog) -> DataFrame:
 
 def _latest_applied_epoch(out_path: str, before: int) -> int | None:
     """Most recent epoch dir < ``before`` with a _SUCCESS marker."""
-    import os
-    import re
-
-    if not os.path.isdir(out_path):
-        return None
-    done = [
-        int(m.group(1))
-        for d in os.listdir(out_path)
-        if (m := re.fullmatch(r"epoch=(\d+)", d))
-        and os.path.exists(os.path.join(out_path, d, "_SUCCESS"))
-    ]
-    done = [e for e in done if e < before]
-    return max(done, default=None)
+    epochs = [int(m.group(1)) for d in fs.ls(out_path)
+              if (m := re.fullmatch(r"epoch=(\d+)", d))]
+    for e in sorted((e for e in epochs if e < before), reverse=True):
+        if fs.exists(f"{out_path}/epoch={e}/_SUCCESS"):
+            return e
+    return None
 
 
 def apply_changes_streaming(
@@ -188,8 +185,9 @@ def apply_changes_streaming(
     TILE-SCOPED APPLY (the 100 TB shape): when the store carries
     ``tile_id``, each epoch recomputes ONLY the tiles holding a changed
     feature copy (J10's search set) plus the tiles newly assigned to
-    upserts; every other tile's files are hard-linked from the previous
-    epoch — metadata-only, no byte rewrite.  This mirrors the
+    upserts; every other tile's files are linked from the previous epoch
+    through :func:`geodesk_gol_spark.fs.link` — hard links on the local
+    filesystem (no byte rewrite), copies on any other.  This mirrors the
     reference's per-affected-tile recompilation
     (src/change/Updater.cpp:68-84) instead of rewriting the whole
     store per batch: a daily diff touching 0.01 % of features costs a
@@ -199,25 +197,27 @@ def apply_changes_streaming(
     full snapshots (``read.parquet(epoch dir)`` sees every tile);
     replay is idempotent because the epoch dir is wiped by the static
     overwrite before re-linking.  Stores without ``tile_id`` take the
-    full-merge path."""
+    full-merge path.
+
+    ``store_path`` and ``out_path`` are bare paths or any Hadoop URIs;
+    every listing, marker and link goes through :mod:`geodesk_gol_spark.fs`.
+    A merged epoch that wrote rows into a tile the search did not mark
+    affected raises instead of linking over them."""
 
     def _apply(batch: DataFrame, epoch_id: int) -> None:
-        import os
-
         prev = _latest_applied_epoch(out_path, int(epoch_id))
         src = store_path if prev is None else f"{out_path}/epoch={prev}"
         spark_b = batch.sparkSession
         store = spark_b.read.parquet(src)
         epoch_dir = f"{out_path}/epoch={epoch_id}"
-        prev_parts = (
-            [d for d in os.listdir(src) if d.startswith("tile_id=")]
-            if os.path.isdir(src) else []
-        )
+        # (tile dir, file name) of every file in the source's tile dirs
+        prev_files = [p.rsplit("/", 2)[1:]
+                      for p in fs.glob(f"{src}/tile_id=*/*")]
         if "tile_id" not in store.columns:
             merged = merge_changes(store, batch)
             merged.write.mode("overwrite").parquet(epoch_dir)
             return
-        if not prev_parts:
+        if not prev_files:
             # first tile-scoped epoch over a flat store: one full merge,
             # written tile-partitioned so every later epoch can link
             merged = merge_changes(store, batch)
@@ -251,30 +251,20 @@ def apply_changes_streaming(
         # link every unaffected tile partition from the previous epoch;
         # Spark's _SUCCESS is replaced by our own marker AFTER linking so
         # a crash mid-link leaves the epoch unfinished (replay rewrites)
-        marker = os.path.join(epoch_dir, "_SUCCESS")
-        if os.path.exists(marker):
-            os.remove(marker)
+        marker = f"{epoch_dir}/_SUCCESS"
+        fs.delete(marker)
+        written = set(fs.ls(epoch_dir))
         skip = {f"tile_id={int(t)}" for t in aff}
-        import shutil
-
-        for d in prev_parts:
-            if d in skip or d.startswith("tile_id=__HIVE"):
+        for d, f in prev_files:
+            if (d in skip or d.startswith("tile_id=__HIVE")
+                    or f.startswith((".", "_"))):
                 continue
-            dst = os.path.join(epoch_dir, d)
-            if os.path.exists(dst):
-                continue  # merged wrote rows for a tile we thought clean
-            os.makedirs(dst, exist_ok=True)
-            for f in os.listdir(os.path.join(src, d)):
-                if f.startswith((".", "_")):
-                    continue
-                try:
-                    os.link(os.path.join(src, d, f),
-                            os.path.join(dst, f))
-                except OSError:
-                    shutil.copy2(os.path.join(src, d, f),
-                                 os.path.join(dst, f))
-        with open(marker, "w"):
-            pass
+            if d in written:
+                raise RuntimeError(
+                    f"epoch {epoch_id} merged rows into {d}, which holds "
+                    f"no changed feature")
+            fs.link(f"{src}/{d}/{f}", f"{epoch_dir}/{d}/{f}")
+        fs.write_text(marker, "")
 
     return (
         change_stream.writeStream.foreachBatch(_apply)

@@ -73,11 +73,22 @@ def crash_store_write_after(monkeypatch, k):
 
     real, done = compile_tiles._write_batch, []
 
-    def write_batch(rows, bdir, batch):
+    def write_batch(*args):
         if len(done) == k:
             raise RuntimeError("injected crash mid-write")
-        real(rows, bdir, batch)
-        done.append(bdir)
+        real(*args)
+        done.append(args)
 
     monkeypatch.setattr(compile_tiles, "_write_batch", write_batch)
     return real
+
+
+def path_kinds(tmp_path):
+    """The two path forms the engine takes for one test: a bare path and
+    a ``file://`` URI, each as (local dir, the string the engine gets)."""
+    out = []
+    for kind in ("bare", "uri"):
+        d = tmp_path / kind
+        d.mkdir()
+        out.append((d, str(d) if kind == "bare" else d.as_uri()))
+    return out

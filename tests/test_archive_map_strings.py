@@ -18,28 +18,43 @@ from geodesk_gol_spark.operators.archive import (
 from geodesk_gol_spark.operators.strings import global_string_table
 from geodesk_gol_spark.query.map import render_map, template_col
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, path_kinds
 
 
 def test_archive_roundtrip(spark, built, tmp_path):
+    """Save then load, over a bare path and a file:// URI (which loads
+    through the URL fetch into ``cache_dir``)."""
     res, store = built
-    path = str(tmp_path / "arch")
-    manifest = save_tiles(store, res.catalog, path)
-    assert len(manifest["tiles"]) == len(res.catalog.tiles)
-    back = load_tiles(spark, path)
-    assert back.count() == store.count()
-    # content equality modulo the map column (set ops reject MapType)
-    assert back.drop("tags").exceptAll(store.drop("tags")).count() == 0
+    for local, root in path_kinds(tmp_path):
+        path = f"{root}/arch"
+        manifest = save_tiles(store, res.catalog, path)
+        assert len(manifest["tiles"]) == len(res.catalog.tiles)
+        assert json.loads((local / "arch" / "manifest.json").read_text()) \
+            == json.loads(json.dumps(manifest))
+        back = load_tiles(spark, path, cache_dir=str(local / "cache"))
+        assert back.count() == store.count()
+        # content equality modulo the map column (set ops reject MapType)
+        assert back.drop("tags").exceptAll(store.drop("tags")).count() == 0
 
 
-def test_archive_bbox_subset(spark, built, tmp_path):
+def test_archive_bbox_subset(spark, built, tmp_path, monkeypatch):
+    """The bbox tile restriction gives the same archive from the
+    In-list and from the broadcast semi-join (``_ISIN_MAX`` = 0)."""
+    from geodesk_gol_spark.query import spatial
+
     res, store = built
-    path = str(tmp_path / "arch_bbox")
     bbox = (1115000000, 630000000, 1126000000, 648000000)
-    manifest = save_tiles(store, res.catalog, path, bbox=bbox)
-    assert 0 < len(manifest["tiles"]) < len(res.catalog.tiles)
-    back = load_tiles(spark, path)
-    assert back.select("tile_id").distinct().count() == len(manifest["tiles"])
+    manifests = []
+    for isin_max in (spatial._ISIN_MAX, 0):
+        monkeypatch.setattr(spatial, "_ISIN_MAX", isin_max)
+        path = str(tmp_path / f"arch_bbox_{isin_max}")
+        manifest = save_tiles(store, res.catalog, path, bbox=bbox)
+        assert 0 < len(manifest["tiles"]) < len(res.catalog.tiles)
+        back = load_tiles(spark, path)
+        assert (back.select("tile_id").distinct().count()
+                == len(manifest["tiles"]))
+        manifests.append(manifest)
+    assert manifests[0] == manifests[1]
 
 
 def test_archive_checksum_detects_corruption(spark, built, tmp_path):
@@ -218,36 +233,41 @@ def test_format_brief_geojson_and_aliases(spark):
         assert a == c
 
 
-def test_copy_tiles_merges_and_swaps_atomically(spark, built, tmp_path):
+def test_copy_tiles_merges_and_swaps_atomically(spark, built, tmp_path,
+                                                monkeypatch):
     """gol copy analogue: seed the target with a bbox subset, copy a
     different (overlapping) bbox from the full archive — the target
-    ends with the tile union, full-store contents, no leftover temp."""
-    import os
+    ends with the tile union, full-store contents, no leftover temp.
+    Over a bare path and a file:// URI (whose loads fetch into the
+    temp dir)."""
+    import tempfile
 
-    res, store = built
-    src = str(tmp_path / "copy_src")
-    save_tiles(store, res.catalog, src)
-    bb1 = (1115000000, 630000000, 1126000000, 648000000)
-    bb2 = (1120000000, 642000000, 1132000000, 654000000)
-    tgt = str(tmp_path / "copy_tgt")
-    m1 = save_tiles(store, res.catalog, tgt, bbox=bb1)
-    m2 = copy_tiles(spark, src, tgt, catalog=res.catalog, bbox=bb2)
     from geodesk_gol_spark.query.spatial import tiles_for_bbox
 
+    res, store = built
+    bb1 = (1115000000, 630000000, 1126000000, 648000000)
+    bb2 = (1120000000, 642000000, 1132000000, 654000000)
     want = set(tiles_for_bbox(res.catalog, *bb1)[0]) | set(
         tiles_for_bbox(res.catalog, *bb2)[0])
     have_store = {int(r["tile_id"]) for r in
                   store.select("tile_id").distinct().collect()}
-    assert set(m2["tiles"]) == want & have_store
-    assert set(m1["tiles"]) <= set(m2["tiles"])
-    back = load_tiles(spark, tgt, verify=True)
-    # per-tile contents equal the full store's for every copied tile
-    a = back.drop("tags")
-    b = store.drop("tags").join(
-        back.select("tile_id").distinct(), "tile_id", "left_semi")
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert not os.path.exists(tgt + ".copytmp")
-    assert not os.path.exists(tgt + ".old")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for local, root in path_kinds(tmp_path):
+        src = f"{root}/copy_src"
+        save_tiles(store, res.catalog, src)
+        tgt = f"{root}/copy_tgt"
+        m1 = save_tiles(store, res.catalog, tgt, bbox=bb1)
+        m2 = copy_tiles(spark, src, tgt, catalog=res.catalog, bbox=bb2)
+        assert set(m2["tiles"]) == want & have_store
+        assert set(m1["tiles"]) <= set(m2["tiles"])
+        back = load_tiles(spark, str(local / "copy_tgt"), verify=True)
+        # per-tile contents equal the full store's for every copied tile
+        a = back.drop("tags")
+        b = store.drop("tags").join(
+            back.select("tile_id").distinct(), "tile_id", "left_semi")
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+        assert sorted(p.name for p in local.iterdir()) == [
+            "copy_src", "copy_tgt"]
 
 
 def test_copy_tiles_into_empty_target(spark, built, tmp_path):

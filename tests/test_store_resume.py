@@ -12,7 +12,6 @@ write killed mid-way resumes redoing ONLY the uncommitted batches.
 
 from __future__ import annotations
 
-import glob
 import hashlib
 import os
 from pathlib import Path
@@ -24,7 +23,7 @@ from pyspark.sql import functions as F
 from geodesk_gol_spark.operators import compile_tiles
 from geodesk_gol_spark.operators.compile_tiles import plan_store, write_store
 
-from .conftest import crash_store_write_after
+from .conftest import crash_store_write_after, path_kinds
 
 
 def _rows(spark, n=12_000, tiles=60):
@@ -123,55 +122,63 @@ def test_batch_planning_covers_and_balances():
 
 def test_resume_redoes_only_uncommitted_batches(spark, tmp_path,
                                                 monkeypatch):
+    """Over a bare path and a file:// URI: a write killed after two
+    batches committed resumes redoing only the others, and keeps the
+    committed files in place (same inodes)."""
     rows = _rows(spark)
-    clean, out = str(tmp_path / "clean"), str(tmp_path / "store")
+    clean = str(tmp_path / "clean")
     monkeypatch.setattr(compile_tiles, "BATCH_ROWS", 2_000)
     write_store(rows, clean)
-    real = crash_store_write_after(monkeypatch, 2)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        write_store(rows, out)
-    # the crashed write left two committed batches and no finished store
-    assert not os.path.exists(os.path.join(out, "_SUCCESS"))
-    committed = {
-        os.path.basename(f): os.stat(f).st_ino
-        for f in glob.glob(os.path.join(out, "_batches", "*", "*.parquet"))
-    }
-    assert committed
+    for local, root in path_kinds(tmp_path):
+        out = f"{root}/store"
+        real = crash_store_write_after(monkeypatch, 2)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            write_store(rows, out)
+        # the crashed write left two committed batches' files and no
+        # finished store
+        assert not (local / "store" / "_SUCCESS").exists()
+        committed = {f.name: f.stat().st_ino
+                     for f in (local / "store").glob("part-*.parquet")}
+        assert committed
 
-    monkeypatch.setattr(compile_tiles, "_write_batch", real)
-    resumed = [x["resumed"] for x in _batches(write_store(rows, out))]
-    assert resumed[:2] == [True, True] and not any(resumed[2:])
-    # committed batch files are linked into the store, not rewritten
-    for name, ino in committed.items():
-        assert os.stat(os.path.join(out, name)).st_ino == ino, name
-    assert _digests(out) == _digests(clean)
+        monkeypatch.setattr(compile_tiles, "_write_batch", real)
+        resumed = [x["resumed"] for x in _batches(write_store(rows, out))]
+        assert resumed[:2] == [True, True] and not any(resumed[2:])
+        # committed files stay where their batch renamed them
+        for name, ino in committed.items():
+            assert (local / "store" / name).stat().st_ino == ino, name
+        assert _digests(local / "store") == _digests(clean)
+    assert not Path("file:").exists()
 
 
 def test_reader_ignores_batch_dirs(spark, tmp_path, monkeypatch):
     """A finished store holds only its parquet files and ``_SUCCESS``
     (the batch checkpoints are gone), so Spark and a ``*.parquet`` glob
     read exactly the rows, and disk usage counts each file once.  An
-    empty input still gives a readable store."""
-    rows = _rows(spark, n=2_000, tiles=10)
-    out = str(tmp_path / "store")
-    monkeypatch.setattr(compile_tiles, "BATCH_ROWS", 500)
-    assert len(_batches(write_store(rows, out))) > 1
-    names = sorted(os.listdir(out))
-    assert names[0] == "_SUCCESS"
-    assert all(n.startswith("part-") and n.endswith(".parquet")
-               for n in names[1:])
-    assert spark.read.parquet(out).count() == 2_000
+    empty input still gives a readable store.  Over a bare path and a
+    file:// URI."""
     import duckdb
 
-    n = duckdb.sql(
-        f"SELECT count(*) FROM read_parquet('{out}/*.parquet')"
-    ).fetchone()[0]
-    assert n == 2_000
-    empty = str(tmp_path / "empty")
-    write_store(rows.limit(0), empty)
-    assert sorted(os.listdir(empty)) == ["_SUCCESS", "part-00000.parquet"]
-    back = spark.read.parquet(empty)
-    assert back.count() == 0 and back.columns == rows.columns
+    rows = _rows(spark, n=2_000, tiles=10)
+    monkeypatch.setattr(compile_tiles, "BATCH_ROWS", 500)
+    for local, root in path_kinds(tmp_path):
+        assert len(_batches(write_store(rows, f"{root}/store"))) > 1
+        out = local / "store"
+        names = sorted(os.listdir(out))
+        assert names[0] == "_SUCCESS"
+        assert all(n.startswith("part-") and n.endswith(".parquet")
+                   for n in names[1:])
+        assert spark.read.parquet(str(out)).count() == 2_000
+        n = duckdb.sql(
+            f"SELECT count(*) FROM read_parquet('{out}/*.parquet')"
+        ).fetchone()[0]
+        assert n == 2_000
+        write_store(rows.limit(0), f"{root}/empty")
+        empty = local / "empty"
+        assert sorted(os.listdir(empty)) == ["_SUCCESS",
+                                             "part-00000.parquet"]
+        back = spark.read.parquet(str(empty))
+        assert back.count() == 0 and back.columns == rows.columns
 
 
 def test_resume_invalidates_stale_range_batches(spark, tmp_path,
@@ -180,19 +187,20 @@ def test_resume_invalidates_stale_range_batches(spark, tmp_path,
     planned over the SAME ranges.  Resuming into a crashed write's path
     with other rows and fewer batches must rewrite every batch whose plan
     differs and leave the stale ones out — not finalize a store with
-    duplicated or missing ranges."""
+    duplicated or missing ranges.  Over a bare path and a file:// URI."""
     rows = _rows(spark)
-    out = str(tmp_path / "store")
-    monkeypatch.setattr(compile_tiles, "BATCH_ROWS", 2_000)
-    crash_store_write_after(monkeypatch, 2)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        write_store(rows, out)
-    monkeypatch.undo()  # the real batch write, one batch per write
     # a shifted corpus plans other ranges
     rows2 = rows.withColumn("tile_id", F.col("tile_id") + 5)
-    second = _batches(write_store(rows2, out))
-    assert len(second) == 1 and not second[0]["resumed"]
     fresh = str(tmp_path / "fresh")
     write_store(rows2, fresh)
-    assert _digests(fresh) == _digests(out)
-    assert second[0]["n_rows"] == rows2.count()
+    for local, root in path_kinds(tmp_path):
+        out = f"{root}/store"
+        monkeypatch.setattr(compile_tiles, "BATCH_ROWS", 2_000)
+        crash_store_write_after(monkeypatch, 2)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            write_store(rows, out)
+        monkeypatch.undo()  # the real batch write, one batch per write
+        second = _batches(write_store(rows2, out))
+        assert len(second) == 1 and not second[0]["resumed"]
+        assert _digests(fresh) == _digests(local / "store")
+        assert second[0]["n_rows"] == rows2.count()

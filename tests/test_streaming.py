@@ -6,6 +6,8 @@ import pytest
 
 from geodesk_gol_spark.streaming.update import latest_changes, merge_changes
 
+from .conftest import path_kinds
+
 
 def test_change_merge_semantics(spark):
     store = spark.createDataFrame(
@@ -216,14 +218,12 @@ def test_change_merge_split_invariance(spark, seed):
 def test_apply_changes_streaming_epochs_compound(spark, tmp_path):
     """Each micro-batch merges against the previous epoch's output, so a
     change stream split across batches applies ALL batches, not only the
-    last one against the base store."""
-    from geodesk_gol_spark.streaming.update import apply_changes_streaming
+    last one against the base store.  Over a bare path and a file://
+    URI for the store and the epochs."""
+    import os
+    import shutil
 
-    store_path = str(tmp_path / "store")
-    spark.createDataFrame(
-        [(4, {"a": "1"}), (8, {"b": "2"})],
-        "typed_id long, tags map<string,string>",
-    ).write.parquet(store_path)
+    from geodesk_gol_spark.streaming.update import apply_changes_streaming
 
     # two files → availableNow with maxFilesPerTrigger=1 gives 2 epochs
     feed = tmp_path / "feed"
@@ -238,7 +238,6 @@ def test_apply_changes_streaming_epochs_compound(spark, tmp_path):
         "typed_id long, op string, revision int, change_seq int, "
         "tags map<string,string>",
     ).coalesce(1).write.parquet(str(feed / "f1"))
-    import shutil
 
     flat = tmp_path / "flat"
     flat.mkdir()
@@ -246,52 +245,52 @@ def test_apply_changes_streaming_epochs_compound(spark, tmp_path):
         for f in sorted(sub.glob("*.parquet")):
             shutil.copy(f, flat / f"part-{i:03d}.parquet")
 
-    stream = (
-        spark.readStream.schema(
-            "typed_id long, op string, revision int, change_seq int, "
-            "tags map<string,string>"
+    for local, root in path_kinds(tmp_path):
+        store_path = f"{root}/store"
+        spark.createDataFrame(
+            [(4, {"a": "1"}), (8, {"b": "2"})],
+            "typed_id long, tags map<string,string>",
+        ).write.parquet(store_path)
+        stream = (
+            spark.readStream.schema(
+                "typed_id long, op string, revision int, change_seq int, "
+                "tags map<string,string>"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(flat))
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(flat))
-    )
-    out = str(tmp_path / "out")
-    q = apply_changes_streaming(spark, stream, store_path, out)
-    q.awaitTermination(120)
+        q = apply_changes_streaming(spark, stream, store_path,
+                                    f"{root}/out")
+        q.awaitTermination(120)
 
-    import os
-
-    epochs = sorted(
-        int(d.split("=")[1])
-        for d in os.listdir(out)
-        if d.startswith("epoch=")
-    )
-    assert len(epochs) >= 2, f"expected >=2 epochs, got {epochs}"
-    final = {
-        r.typed_id: r.tags
-        for r in spark.read.parquet(f"{out}/epoch={epochs[-1]}").collect()
-    }
-    # batch-1 modify AND batch-2 delete+create must BOTH be visible
-    assert final == {4: {"a": "r1"}, 16: {"c": "new"}}
+        epochs = sorted(
+            int(d.split("=")[1])
+            for d in os.listdir(local / "out")
+            if d.startswith("epoch=")
+        )
+        assert len(epochs) >= 2, f"expected >=2 epochs, got {epochs}"
+        final = {
+            r.typed_id: r.tags
+            for r in spark.read.parquet(
+                str(local / "out" / f"epoch={epochs[-1]}")).collect()
+        }
+        # batch-1 modify AND batch-2 delete+create must BOTH be visible
+        assert final == {4: {"a": "r1"}, 16: {"c": "new"}}
 
 
 def test_apply_changes_streaming_tile_scoped(spark, tmp_path):
     """A tile-carrying store is updated tile-scoped: each epoch rewrites
     only the affected tiles and hard-links every other tile partition
     from the previous epoch (same inode — no byte rewrite), while the
-    epoch snapshot stays equal to the full-merge result."""
+    epoch snapshot stays equal to the full-merge result.  Over a bare
+    path and a file:// URI for the store and the epochs."""
     import os
+    import shutil
 
     from geodesk_gol_spark.streaming.update import (
         apply_changes_streaming,
         merge_changes,
     )
-
-    store_path = str(tmp_path / "store")
-    spark.createDataFrame(
-        [(4, 100, {"a": "1"}), (8, 100, {"b": "2"}),
-         (12, 200, {"c": "3"}), (16, 300, {"d": "4"})],
-        "typed_id long, tile_id int, tags map<string,string>",
-    ).write.parquet(store_path)
 
     feed = tmp_path / "flat"
     feed.mkdir()
@@ -304,8 +303,6 @@ def test_apply_changes_streaming_tile_scoped(spark, tmp_path):
         [(12, "delete", 2, 1, None, None),
          (20, "create", 2, 2, 300, {"e": "new"})], schema
     ).coalesce(1).write.parquet(str(tmp_path / "b1"))
-    import shutil
-
     for i, sub in enumerate(("b0", "b1")):
         for f in sorted((tmp_path / sub).glob("*.parquet")):
             dst = feed / f"part-{i:03d}.parquet"
@@ -316,45 +313,52 @@ def test_apply_changes_streaming_tile_scoped(spark, tmp_path):
             # assertion below refer to the wrong epoch
             os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(feed))
-    )
-    out = str(tmp_path / "out")
-    q = apply_changes_streaming(spark, stream, store_path, out)
-    q.awaitTermination(120)
+    for local, root in path_kinds(tmp_path):
+        store_path = f"{root}/store"
+        spark.createDataFrame(
+            [(4, 100, {"a": "1"}), (8, 100, {"b": "2"}),
+             (12, 200, {"c": "3"}), (16, 300, {"d": "4"})],
+            "typed_id long, tile_id int, tags map<string,string>",
+        ).write.parquet(store_path)
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(feed))
+        )
+        q = apply_changes_streaming(spark, stream, store_path,
+                                    f"{root}/out")
+        q.awaitTermination(120)
 
-    epochs = sorted(
-        int(d.split("=")[1]) for d in os.listdir(out)
-        if d.startswith("epoch=")
-    )
-    assert len(epochs) >= 2, f"expected >=2 epochs, got {epochs}"
-    e_first, e_last = epochs[0], epochs[-1]
+        out = local / "out"
+        epochs = sorted(
+            int(d.split("=")[1]) for d in os.listdir(out)
+            if d.startswith("epoch=")
+        )
+        assert len(epochs) >= 2, f"expected >=2 epochs, got {epochs}"
+        e_first, e_last = epochs[0], epochs[-1]
 
-    # final snapshot == one-shot full merge of both batches
-    all_ch = spark.read.parquet(str(feed))
-    want = {
-        (r.typed_id, r.tile_id): dict(r.tags or {})
-        for r in merge_changes(
-            spark.read.parquet(store_path), all_ch).collect()
-    }
-    got = {
-        (r.typed_id, r.tile_id): dict(r.tags or {})
-        for r in spark.read.parquet(f"{out}/epoch={e_last}").collect()
-    }
-    assert got == want
-    assert got[(4, 100)] == {"a": "r1"} and (20, 300) in got
-    assert (12, 200) not in got
+        # final snapshot == one-shot full merge of both batches
+        all_ch = spark.read.parquet(str(feed))
+        want = {
+            (r.typed_id, r.tile_id): dict(r.tags or {})
+            for r in merge_changes(
+                spark.read.parquet(store_path), all_ch).collect()
+        }
+        got = {
+            (r.typed_id, r.tile_id): dict(r.tags or {})
+            for r in spark.read.parquet(
+                str(out / f"epoch={e_last}")).collect()
+        }
+        assert got == want
+        assert got[(4, 100)] == {"a": "r1"} and (20, 300) in got
+        assert (12, 200) not in got
 
-    # epoch 2 touched tiles 200 (delete) and 300 (create): tile 100 must
-    # be HARD-LINKED from epoch 1, not rewritten
-    d_prev = os.path.join(out, f"epoch={e_first}", "tile_id=100")
-    d_last = os.path.join(out, f"epoch={e_last}", "tile_id=100")
-    prev_inodes = {os.stat(os.path.join(d_prev, f)).st_ino
-                   for f in os.listdir(d_prev)
-                   if not f.startswith((".", "_"))}
-    last_inodes = {os.stat(os.path.join(d_last, f)).st_ino
-                   for f in os.listdir(d_last)
-                   if not f.startswith((".", "_"))}
-    assert last_inodes == prev_inodes and prev_inodes
+        # epoch 2 touched tiles 200 (delete) and 300 (create): tile 100
+        # must be HARD-LINKED from epoch 1, not rewritten
+        d_prev = out / f"epoch={e_first}" / "tile_id=100"
+        d_last = out / f"epoch={e_last}" / "tile_id=100"
+        prev_inodes = {f.stat().st_ino for f in d_prev.iterdir()
+                       if not f.name.startswith((".", "_"))}
+        last_inodes = {f.stat().st_ino for f in d_last.iterdir()
+                       if not f.name.startswith((".", "_"))}
+        assert last_inodes == prev_inodes and prev_inodes

@@ -9,8 +9,12 @@ stage of the build graph, resumable in ``--out``) on a cluster:
 
 Re-running with the same ``--out`` resumes that build; a different
 ``--sf-dir`` or ``--density`` there raises ``ValueError`` (pick a new
-``--out``).  On a real cluster the same partitioning applies: the
-pyramid/survivor frames broadcast; only member-resolution joins shuffle.
+``--out``).  ``--sf-dir`` and ``--out`` may be bare paths (resolved
+against ``fs.defaultFS``, as Spark resolves them) or Hadoop URIs such as
+``hdfs://`` or ``s3a://``: the build's markers, renames and links go
+through Hadoop's ``FileSystem`` (``geodesk_gol_spark.fs``).  On a real
+cluster the same partitioning applies: the pyramid/survivor frames
+broadcast; only member-resolution joins shuffle.
 """
 
 from __future__ import annotations
